@@ -1,14 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, not}
 import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFileStatus}
 
-/** In-place REWRITES of LIVE manifest-committed streaming tables:
-  * OPTIMIZE (small-file compaction, optional Z-order re-clustering) and
-  * DELETE WHERE (row-level copy-on-write deletion) UNDER the
-  * `_spark_metadata` manifest.
+/** In-place REWRITES of LIVE manifest-committed streaming tables — the
+  * seven writers OPTIMIZE ([[optimizeSink]]: small-file compaction,
+  * optional Z-order / sort re-clustering), DELETE ([[deleteWhere]]),
+  * UPDATE ([[updateWhere]]), MERGE ([[mergeInto]]), the CDC
+  * [[upsertSink]], RESTORE ([[restoreTable]]) and the self-compacting
+  * [[StreamSinks.compactingParquetSink]] — all under the
+  * `_spark_metadata` manifest, all through ONE path.
   *
   * [[graft.sources.FileIO.compact]] rewrites a plain directory to a NEW
   * location; a streaming sink's table cannot move (its writer's
@@ -19,34 +22,50 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   * action since Spark 3), so retiring files requires REBUILDING the
   * log, not appending to it.
   *
-  * Shared protocol (the Sidecar single-commit-point discipline applied
-  * to Spark's fixed-location manifest):
-  *  1. stop-the-writer guard (same as [[StreamSinks.vacuum]]) — refuses
-  *     while any active streaming query in this session sinks here;
-  *  2. the affected committed files are read back (partition values
-  *     re-attached from their Hive-style dir names as exact strings),
-  *     transformed (repacked / z-ordered / predicate-filtered), and land
-  *     under the invisible `_graft_optimize_data` staging dir, then move
-  *     to fresh names in their final partition dirs — still invisible:
-  *     nothing references them;
-  *  3. a replacement log is staged at `_graft_optimize_stage_meta` with
-  *     the writer's latest batch id PRESERVED (a checkpointed writer
-  *     restarted after the swap appends batch N+1 normally; a replayed
-  *     batch ≤ N is still skipped — exactly-once intact). Staging is
-  *     O(compactInterval) writes, never O(batches): the snapshot lands
-  *     as a manually-serialized `.compact` file at the conf-consistent
-  *     boundary ≤ latest plus empty tail batches (measured in
-  *     SCALING.md r15 — the naive 0..latest replay costs ~48 ms/batch,
-  *     hours at a production sink's batch counts);
-  *  4. the swap: `_COMMITTED` marker lands in the stage dir, then
-  *     `_spark_metadata` → `.bak`, stage → `_spark_metadata`, `.bak`
-  *     deleted. A crash between renames leaves a state [[repairOptimize]]
-  *     resolves DETERMINISTICALLY (marker present ⇒ roll forward,
-  *     absent ⇒ roll back). CAVEAT (spec-pinned): in the window where
-  *     `_spark_metadata` is renamed away, Spark readers FALL BACK to
-  *     plain directory listing and would see retired AND rewritten
-  *     generations together — run repair before serving reads after a
-  *     crash, exactly as a half-restored database is fsck'd before use.
+  * The one path (the Sidecar single-commit-point discipline applied to
+  * Spark's fixed-location manifest; the reference's in-progress →
+  * pending → final rename, RowOrcBucketingSink.java:153-213, with the
+  * manifest as the final step):
+  *  1. OPEN ([[open]]): stop-the-writer guard (same as
+  *     [[StreamSinks.vacuum]]) — refuses while any active streaming
+  *     query in this session sinks here; whole-table ops also refuse on
+  *     any maintenance debris; the live log's latest batch id and
+  *     committed entries are read once;
+  *  2. HIT FILES ([[hitFiles]]): the files a rewrite must touch, found by
+  *     a scan projecting the file path, split off the manifest entries
+  *     with a loud scan-vs-manifest agreement check (OPTIMIZE selects by
+  *     size / partition scope instead);
+  *  3. REWRITE ([[stageRewrite]] + [[cowLayout]]): the hit files are read
+  *     back (partition values re-attached from their Hive-style dir names
+  *     as exact strings), transformed by the op's row function, and laid
+  *     out copy-on-write;
+  *  4. LAND ([[land]]): every writer's output goes to an invisible
+  *     `_`-prefixed stage dir, then each data file moves to a fresh
+  *     `<prefix>-<uuid>-<i>.<fmt>` name in its final partition dir —
+  *     still invisible: nothing references it. A failure before the
+  *     swap deletes the stage dir (its moved files are unreferenced
+  *     orphans the graced vacuum reclaims);
+  *  5. SWAP ([[swapManifest]]): a replacement log is staged at
+  *     `_graft_optimize_stage_meta` with the writer's latest batch id
+  *     PRESERVED (a checkpointed writer restarted after the swap appends
+  *     batch N+1 normally; a replayed batch ≤ N is still skipped —
+  *     exactly-once intact). Staging is O(compactInterval) writes, never
+  *     O(batches): the snapshot lands as a manually-serialized
+  *     `.compact` file at the conf-consistent boundary ≤ latest plus
+  *     empty tail batches (measured in SCALING.md r15 — the naive
+  *     0..latest replay costs ~48 ms/batch, hours at a production sink's
+  *     batch counts). Then the `_COMMITTED` marker lands in the stage
+  *     dir, `_spark_metadata` → `.bak`, stage → `_spark_metadata`, and
+  *     `.bak` archives into history. A crash between renames leaves a
+  *     state [[repairOptimize]] resolves DETERMINISTICALLY (marker
+  *     present ⇒ roll forward, absent ⇒ roll back). CAVEAT
+  *     (spec-pinned): in the window where `_spark_metadata` is renamed
+  *     away, Spark readers FALL BACK to plain directory listing and
+  *     would see retired AND rewritten generations together — run
+  *     repair before serving reads after a crash, exactly as a
+  *     half-restored database is fsck'd before use.
+  * The append-only writers (the upsert bootstrap, the compacting sink's
+  * batches) land and then commit by `log.add` instead of a swap.
   *
   * Retired files stay on disk, unreferenced — invisible to manifest
   * readers. They are NOT immediately vacuum-able: every swap ARCHIVES
@@ -68,7 +87,7 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   * BACK to plain listing — it sees retired AND rewritten generations
   * together (doubled rows; deleted rows resurrected). The window is two
   * metadata renames wide, but it exists on every healthy
-  * optimize/delete/update/merge/restore. [[guardAndOpen]] stops
+  * optimize/delete/update/merge/restore. [[open]] stops
   * writers, never readers; a reader that PLANNED against the old
   * manifest before the swap is safe (its file list is resolved, and the
   * files survive under history protection) — only a reader that LISTS
@@ -146,7 +165,7 @@ object Optimize {
       !fs.exists(bakDir(path)) && !fs.exists(stageMetaDir(path)) && !fs.exists(stageDataDir(path)),
       s"$op($path): whole-table stage/backup dirs present (an unscoped maintenance op is " +
         "in flight or died) — run repairOptimize first")
-    val token = java.util.UUID.randomUUID().toString.take(8)
+    val token = newToken()
     val m = scopeMarker(path, token)
     val out = fs.create(m, false)
     try out.write(subs.toSeq.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
@@ -246,7 +265,7 @@ object Optimize {
   private def writeProtected(fs: FileSystem, path: String, set: Set[String]): Unit = {
     fs.mkdirs(historyDir(path))
     val tmp = new Path(historyDir(path),
-      s"_PROTECTED.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      s"_PROTECTED.tmp-${newToken()}")
     val out = fs.create(tmp, true)
     try out.write((ProtectedHeader +: set.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
     finally out.close()
@@ -615,17 +634,31 @@ object Optimize {
     }
   }
 
-  /** Guard + open: stop-the-writer, no leftover stage/backup, log opened,
-    * latest id + committed entries resolved. */
-  private def guardAndOpen(
-      spark: SparkSession, path: String, op: String
+  /** Open a table for maintenance: stop-the-writer, then — for a
+    * WHOLE-TABLE op — the debris refusal ([[requireNoDebris]]), then the
+    * live log read: latest batch id + committed entries. A SCOPED op
+    * skips the debris refusal: scoped ops coexist with other scoped ops,
+    * and [[acquireScope]] arbitrates overlap and refuses whole-table
+    * debris. The refusal runs before the log opens: opening a sink log
+    * creates a missing `_spark_metadata`, which would hide a crashed
+    * swap from repair. */
+  private def open(
+      spark: SparkSession, path: String, op: String, wholeTable: Boolean
   ): (FileSystem, Long, Seq[SinkFileStatus]) = {
     StreamSinks.requireNoActiveWriter(spark, path, op)
     val fs = fsFor(spark, path)
-    // whole-table mutation: refuse on ANY maintenance debris — the
-    // global protocol dirs, a token'd scoped op's stage dirs, or a
-    // scope lock (a disjoint-scoped OPTIMIZE may be live right now; a
-    // whole-table rewrite cannot merge around it)
+    if (wholeTable) requireNoDebris(fs, path, op)
+    val log = sinkLog(spark, metaDir(path).toString)
+    val latest: Long = log.getLatestBatchId().getOrElse(
+      throw new IllegalStateException(s"$op($path): no committed batches"))
+    (fs, latest, log.allFiles().toSeq)
+  }
+
+  /** Whole-table mutation refuses on ANY maintenance debris — the global
+    * protocol dirs, a token'd scoped op's stage dirs, or a scope lock (a
+    * disjoint-scoped OPTIMIZE may be live right now; a whole-table
+    * rewrite cannot merge around it). */
+  private def requireNoDebris(fs: FileSystem, path: String, op: String): Unit = {
     val debris = fs.listStatus(new Path(path)).map(_.getPath.getName).filter(n =>
       n.startsWith("_graft_optimize_stage_meta") || n.startsWith("_graft_optimize_data") ||
         n.startsWith(ScopePrefix) || n == "_spark_metadata.bak")
@@ -633,41 +666,108 @@ object Optimize {
       s"$op($path): maintenance dirs/locks present (${debris.sorted.take(3).mkString(", ")}) — " +
         "a scoped operation is in flight, or an interrupted run needs repairOptimize " +
         "(scoped debris: repairOptimize(path, token))")
-    val log = sinkLog(spark, metaDir(path).toString)
-    val latest: Long = log.getLatestBatchId().getOrElse(
-      throw new IllegalStateException(s"$op($path): no committed batches"))
-    (fs, latest, log.allFiles().toSeq)
   }
 
-  /** Open for a SCOPED op: stop-the-writer + live log read, but no
-    * debris refusal here — scoped ops coexist with other scoped ops;
-    * [[acquireScope]] arbitrates overlap and refuses whole-table
-    * debris. */
-  private def openForScope(
-      spark: SparkSession, path: String, op: String
-  ): (FileSystem, Long, Seq[SinkFileStatus]) = {
-    StreamSinks.requireNoActiveWriter(spark, path, op)
-    val fs = fsFor(spark, path)
-    val log = sinkLog(spark, metaDir(path).toString)
-    val latest: Long = log.getLatestBatchId().getOrElse(
-      throw new IllegalStateException(s"$op($path): no committed batches"))
-    (fs, latest, log.allFiles().toSeq)
+  /** Heal a crashed whole-table swap before a foreachBatch sink touches
+    * the manifest. It runs BEFORE any bootstrap-vs-append decision: a
+    * crash between the swap's two renames leaves NO live manifest, and
+    * deciding on its absence alone would re-bootstrap and silently reset
+    * the table. */
+  private[streaming] def healSwap(spark: SparkSession, fs: FileSystem, path: String): Unit =
+    if (fs.exists(stageMetaDir(path)) || fs.exists(bakDir(path)) ||
+        fs.exists(stageDataDir(path))) repairOptimize(spark, path): Unit
+
+  /** Delete the table root's `<prefix>*` stage dirs — a crashed writer's
+    * invisible debris (its moved-but-uncommitted files are orphans the
+    * graced vacuum reclaims). Single-writer callers only: a live
+    * writer's stage dir matches too. */
+  private[streaming] def sweepStageDirs(fs: FileSystem, path: String, prefix: String): Unit =
+    if (fs.exists(new Path(path))) {
+      fs.listStatus(new Path(path)).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+        .foreach(st => fs.delete(st.getPath, true))
+    }
+
+  private[streaming] def newToken(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** LAND — the one staged-write path: `write` fills the `_`-prefixed
+    * `stage` dir (invisible to readers, skipped by vacuum), then every
+    * data file under it moves to `<prefix>-<uuid>-<i>.<format>` in its
+    * partition sub-path under the table root. The stage dir is deleted
+    * afterwards — and on failure, so an in-JVM error never leaves debris
+    * that blocks the next op behind a repair (files already moved are
+    * unreferenced orphans for the graced vacuum). The returned entries
+    * are still invisible: only a manifest commit naming them publishes
+    * them. */
+  private[streaming] def land(
+      fs: FileSystem,
+      path: String,
+      stage: Path,
+      format: String,
+      prefix: String,
+      uuid: String = newToken()
+  )(write: String => Unit): Seq[SinkFileStatus] =
+    try {
+      write(stage.toString)
+      val stageRoot = fs.makeQualified(stage).toString
+      StreamSinks.dataFiles(fs, stage).zipWithIndex.map { case (st, i) =>
+        val rel = st.getPath.toString.stripPrefix(stageRoot).stripPrefix("/")
+        val cut = rel.lastIndexOf('/')
+        val destDir = if (cut < 0) new Path(path) else new Path(path, rel.substring(0, cut))
+        fs.mkdirs(destDir)
+        val dest = new Path(destDir, s"$prefix-$uuid-$i.$format")
+        require(fs.rename(st.getPath, dest), s"land: rename ${st.getPath} -> $dest failed")
+        SinkFileStatus(fs.getFileStatus(dest))
+      }
+    } finally fs.delete(stage, true): Unit
+
+  /** HIT FILES: split the committed entries into (hit, untouched) by the
+    * file paths the `files` scans project (one string column each, one
+    * collect each), refusing loudly when scan and manifest disagree. */
+  private def hitFiles(
+      op: String, path: String, all: Seq[SinkFileStatus], files: DataFrame*
+  ): (Seq[SinkFileStatus], Seq[SinkFileStatus]) = {
+    val hitKeys = files.flatMap(_.distinct().collect().map(r => normKey(r.getString(0)))).toSet
+    val (hit, untouched) = all.partition(e => hitKeys.contains(normKey(e.path)))
+    require(hit.size == hitKeys.size,
+      s"$op($path): ${hitKeys.size} matched files but ${hit.size} manifest entries — " +
+        "scan and manifest disagree; refusing to rewrite")
+    (hit, untouched)
   }
 
-  /** Stage-write a transformed frame and move its files to fresh names in
-    * their final partition dirs — written files are returned, still
-    * unreferenced (invisible to every reader until the manifest swap).
-    * `write` receives the frame (partition values string-typed, verbatim
-    * round-trip) and the detected partition columns. */
+  /** The copy-on-write output layout: `nOut` files for an unpartitioned
+    * table, or `nOut` hash-split across the partition dirs. */
+  private def cowLayout(df: DataFrame, partCols: Seq[String], nOut: Int): DataFrameWriter[Row] =
+    if (partCols.isEmpty) df.coalesce(nOut).write
+    else df.repartition(nOut, partCols.map(col): _*).write.partitionBy(partCols: _*)
+
+  private def outFiles(src: Seq[SinkFileStatus], targetFileBytes: Long): Int =
+    math.max(1L, (src.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
+
+  /** REWRITE: read the `src` entries back, lay them out with `layout`
+    * (which receives the frame and the detected partition columns) and
+    * [[land]] the result under `stage` — written files return, still
+    * unreferenced. Partition values round-trip VERBATIM: the read
+    * declares the partition columns STRING in a user-specified schema,
+    * so Spark keeps the raw dir value instead of inferring a type
+    * (SPARK-26188) and no session conf is touched — concurrent scoped
+    * ops share the session. The data schema comes off ONE source file,
+    * the path-sorted first — the footer Parquet's inferring read samples.
+    * After an `evolveSchema` merge that is an evolved `graft-*` file
+    * wherever one shares a dir with legacy `part-*` files, so the rewrite
+    * keeps the new columns (legacy rows read them as NULL); the manifest
+    * lists untouched, i.e. legacy, files first. */
   private def stageRewrite(
       spark: SparkSession,
       fs: FileSystem,
       path: String,
       format: String,
-      srcPaths: Seq[String],
+      src: Seq[SinkFileStatus],
       namePrefix: String,
-      stageDataOverride: Option[Path] = None
-  )(write: (DataFrame, Seq[String], String) => Unit): Seq[Path] = {
+      stage: Path
+  )(layout: (DataFrame, Seq[String]) => DataFrameWriter[Row]): Seq[SinkFileStatus] = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val srcPaths = src.map(_.sparkPath.toPath.toString)
     val rootAbs = graft.sources.FileIO.tableRootAbs(spark, path)
     val partCols: Seq[String] = srcPaths
       .map(p => partitionSubPath(p, rootAbs))
@@ -675,38 +775,30 @@ object Optimize {
       .headOption
       .map(_.split('/').toSeq.map(_.split("=", 2)(0)))
       .getOrElse(Nil)
-    val stageData = stageDataOverride.getOrElse(stageDataDir(path))
-    // partition values must round-trip VERBATIM into the rewritten dirs —
-    // string-typed inference, restored afterwards
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferWas = spark.conf.getOption(inferKey)
-    spark.conf.set(inferKey, "false")
-    try {
-      val df = spark.read.format(format).option("basePath", path).load(srcPaths: _*)
-      write(df, partCols, stageData.toString)
-    } finally {
-      inferWas.fold(spark.conf.unset(inferKey))(v => spark.conf.set(inferKey, v))
+    val dataSchema = spark.read.format(format).load(srcPaths.min).schema
+    val schema = StructType(dataSchema.filterNot(f => partCols.contains(f.name)) ++
+      partCols.map(StructField(_, StringType)))
+    val df = spark.read.format(format).schema(schema).option("basePath", path).load(srcPaths: _*)
+    val writer = layout(df, partCols)
+    land(fs, path, stage, format, namePrefix)(
+      writer.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(_))
+  }
+
+  /** The copy-on-write rewrite of `hit`: the row function's output in
+    * [[cowLayout]], sized to `targetFileBytes`, staged whole-table. */
+  private def copyOnWrite(
+      spark: SparkSession,
+      fs: FileSystem,
+      path: String,
+      format: String,
+      hit: Seq[SinkFileStatus],
+      namePrefix: String,
+      targetFileBytes: Long
+  )(rows: (DataFrame, Seq[String]) => DataFrame): Seq[SinkFileStatus] = {
+    val nOut = outFiles(hit, targetFileBytes)
+    stageRewrite(spark, fs, path, format, hit, namePrefix, stageDataDir(path)) {
+      (df, partCols) => cowLayout(rows(df, partCols), partCols, nOut)
     }
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    def dataFilesUnder(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) dataFilesUnder(st.getPath)
-        else Seq(st.getPath)
-      }
-    val moved = dataFilesUnder(stageData).zipWithIndex.map { case (src, i) =>
-      val rel = src.toString.stripPrefix(fs.makeQualified(stageData).toString).stripPrefix("/")
-      val cut = rel.lastIndexOf('/')
-      val sub = if (cut < 0) "" else rel.substring(0, cut)
-      val destDir = if (sub.isEmpty) new Path(path) else new Path(path, sub)
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, s"$namePrefix-$uuid-$i.$format")
-      require(fs.rename(src, dest), s"stageRewrite: rename $src -> $dest failed")
-      dest
-    }
-    fs.delete(stageData, true)
-    moved
   }
 
   /** Stage the replacement manifest (O(compactInterval) writes — see the
@@ -837,10 +929,8 @@ object Optimize {
     val recluster = zDims.nonEmpty || sortDims.nonEmpty
     // SCOPED ops take a scope lock and coexist with disjoint scoped ops
     // (r18); whole-table ops take the exclusive debris guard
-    val (fs, latestId, all) = partitionWhere match {
-      case None    => guardAndOpen(spark, path, "optimizeSink")
-      case Some(_) => openForScope(spark, path, "optimizeSink")
-    }
+    val (fs, latestId, all) =
+      open(spark, path, "optimizeSink", wholeTable = partitionWhere.isEmpty)
     val tPartCols = tablePartCols(spark, path, all)
     // partition scope: out-of-scope entries ride through the swap
     // verbatim, exactly like a copy-on-write DML's untouched files
@@ -881,56 +971,44 @@ object Optimize {
       scopeToken.foreach(t => fs.delete(scopeMarker(path, t), false))
       return OptimizeReport(0, 0, all.size, latestId, Nil)
     }
-    val totalSmall = small.map(_.size).sum
-    val nOut = math.max(1L, (totalSmall + targetFileBytes - 1) / targetFileBytes).toInt
-    val smallPaths = small.map(_.sparkPath.toPath.toString)
-
-    def cleanupScope(t: String): Unit = {
-      fs.delete(stageDataDirT(path, t), true)
-      fs.delete(stageMetaDirT(path, t), true)
-      fs.delete(scopeMarker(path, t), false): Unit
-    }
-    val moved = try stageRewrite(spark, fs, path, format, smallPaths, "graft-compact",
-      stageDataOverride = scopeToken.map(t => stageDataDirT(path, t))) {
-      (df, partCols, stageDir) =>
+    val nOut = outFiles(small, targetFileBytes)
+    val stage = scopeToken.fold(stageDataDir(path))(stageDataDirT(path, _))
+    val landed = try stageRewrite(spark, fs, path, format, small, "graft-compact", stage) {
+      (df, partCols) =>
         val clusterKeys = if (zDims.nonEmpty) zDims else sortDims
-        val writer =
-          if (recluster && partCols.isEmpty)
-            (if (zDims.nonEmpty) graft.sources.FileIO.zOrderedN(df, zDims, nOut)
-             else
-               df.repartitionByRange(nOut, clusterKeys.map(col): _*)
-                 .sortWithinPartitions(clusterKeys.map(col): _*)).write
-          else if (recluster)
-            // partition-scoped re-cluster: range-cluster on (partition
-            // cols, keys) so tasks split along partition boundaries and
-            // each partition dir's files cover tight key/curve ranges
-            (if (zDims.nonEmpty)
-               graft.sources.FileIO.zOrderedN(df, zDims, nOut, prefix = partCols)
-             else
-               df.repartitionByRange(nOut, (partCols ++ clusterKeys).map(col): _*)
-                 .sortWithinPartitions((partCols ++ clusterKeys).map(col): _*))
-              .write.partitionBy(partCols: _*)
-          else if (partCols.isEmpty) df.coalesce(nOut).write
-          else df.repartition(nOut, partCols.map(col): _*).write.partitionBy(partCols: _*)
-        writer.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stageDir)
+        if (recluster && partCols.isEmpty)
+          (if (zDims.nonEmpty) graft.sources.FileIO.zOrderedN(df, zDims, nOut)
+           else
+             df.repartitionByRange(nOut, clusterKeys.map(col): _*)
+               .sortWithinPartitions(clusterKeys.map(col): _*)).write
+        else if (recluster)
+          // partition-scoped re-cluster: range-cluster on (partition
+          // cols, keys) so tasks split along partition boundaries and
+          // each partition dir's files cover tight key/curve ranges
+          (if (zDims.nonEmpty)
+             graft.sources.FileIO.zOrderedN(df, zDims, nOut, prefix = partCols)
+           else
+             df.repartitionByRange(nOut, (partCols ++ clusterKeys).map(col): _*)
+               .sortWithinPartitions((partCols ++ clusterKeys).map(col): _*))
+            .write.partitionBy(partCols: _*)
+        else cowLayout(df, partCols, nOut)
     } catch {
-      // an in-JVM stage failure ends the operation — its token debris
-      // would only block the scope behind a needless repair (moved-but-
-      // unreferenced files, if any, stay invisible and fall to vacuum)
-      case e: Throwable => scopeToken.foreach(cleanupScope); throw e
+      // an in-JVM stage failure ends the operation: the stage dir is
+      // already gone, and the lock would only block the scope behind a
+      // needless repair
+      case e: Throwable => scopeToken.foreach(t => fs.delete(scopeMarker(path, t), false)); throw e
     }
 
     scopeToken match {
       case None =>
-        swapManifest(spark, fs, path, latestId,
-          kept.toArray ++ moved.map(p => SinkFileStatus(fs.getFileStatus(p))), "optimizeSink")
+        swapManifest(spark, fs, path, latestId, (kept ++ landed).toArray, "optimizeSink")
       case Some(t) =>
-        swapManifestScoped(spark, fs, path,
-          small.map(e => normKey(e.path)).toSet,
-          moved.map(p => SinkFileStatus(fs.getFileStatus(p))), t, "optimizeSink")
+        swapManifestScoped(spark, fs, path, small.map(e => normKey(e.path)).toSet, landed, t,
+          "optimizeSink")
         fs.delete(scopeMarker(path, t), false): Unit
     }
-    OptimizeReport(small.size, moved.size, kept.size, latestId, smallPaths)
+    OptimizeReport(small.size, landed.size, kept.size, latestId,
+      small.map(_.sparkPath.toPath.toString))
   }
 
   /** Row-level DELETE on a live manifest-committed table — COPY-ON-WRITE:
@@ -956,42 +1034,13 @@ object Optimize {
       predicate: Column,
       format: String = "parquet",
       targetFileBytes: Long = 128L * 1024 * 1024
-  ): DeleteReport = {
-    val (fs, latestId, all) = guardAndOpen(spark, path, "deleteWhere")
-    requireDataColumnPredicate("deleteWhere", predicate, tablePartCols(spark, path, all))
-    val hitKeys = spark.read.format(format).load(path)
-      .filter(predicate)
-      .select(col("_metadata.file_path"))
-      .distinct()
-      .collect()
-      .map(r => normKey(r.getString(0)))
-      .toSet
-    val (hit, untouched) = all.partition(e => hitKeys.contains(normKey(e.path)))
-    require(hit.size == hitKeys.size,
-      s"deleteWhere($path): ${hitKeys.size} matched files but ${hit.size} manifest entries — " +
-        "scan and manifest disagree; refusing to rewrite")
-    if (hit.isEmpty) {
-      return DeleteReport(0, 0, all.size, latestId, Nil)
+  ): DeleteReport =
+    rewriteWhere(spark, path, "deleteWhere", "graft-delete", predicate, Map.empty, format,
+      targetFileBytes) { (df, _) =>
+      // keep rows where the predicate is FALSE or NULL (SQL DELETE
+      // removes only definite matches)
+      df.filter(not(coalesce(predicate, lit(false))))
     }
-    val hitPaths = hit.map(_.sparkPath.toPath.toString)
-    val nOut = math.max(1L,
-      (hit.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
-
-    val moved = stageRewrite(spark, fs, path, format, hitPaths, "graft-delete") {
-      (df, partCols, stageDir) =>
-        // keep rows where the predicate is FALSE or NULL (SQL DELETE
-        // removes only definite matches)
-        val survivors = df.filter(not(coalesce(predicate, lit(false))))
-        val writer =
-          if (partCols.isEmpty) survivors.coalesce(nOut).write
-          else survivors.repartition(nOut, partCols.map(col): _*).write.partitionBy(partCols: _*)
-        writer.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stageDir)
-    }
-
-    swapManifest(spark, fs, path, latestId,
-      untouched.toArray ++ moved.map(p => SinkFileStatus(fs.getFileStatus(p))), "deleteWhere")
-    DeleteReport(hit.size, moved.size, untouched.size, latestId, hitPaths)
-  }
 
   /** Row-level UPDATE on a live manifest-committed table — the same
     * copy-on-write shape as [[deleteWhere]]: one predicate-pushed scan
@@ -1011,64 +1060,63 @@ object Optimize {
       targetFileBytes: Long = 128L * 1024 * 1024
   ): DeleteReport = {
     require(set.nonEmpty, "updateWhere: empty SET")
-    val (fs, latestId, all) = guardAndOpen(spark, path, "updateWhere")
-    val partCols0 = tablePartCols(spark, path, all)
-    requireDataColumnPredicate("updateWhere", predicate, partCols0)
+    rewriteWhere(spark, path, "updateWhere", "graft-update", predicate, set, format,
+      targetFileBytes) { (df, partCols) =>
+      set.keys.foreach { c =>
+        require(df.columns.contains(c), s"updateWhere: SET column $c not in the table schema")
+        require(!partCols.contains(c),
+          s"updateWhere: $c is a partition column — updating it is a move, not an update")
+      }
+      // ONE projection, not chained withColumns: every SET expression
+      // AND the predicate evaluate against the OLD row (standard SQL
+      // UPDATE semantics — an assignment never sees a sibling's result)
+      val matchedOnly = coalesce(predicate, lit(false))
+      df.select(df.columns.toIndexedSeq.map { c =>
+        set.get(c) match {
+          case Some(e) =>
+            org.apache.spark.sql.functions.when(matchedOnly, e).otherwise(col(c))
+              .cast(df.schema(c).dataType).as(c)
+          case None => col(c)
+        }
+      }: _*)
+    }
+  }
+
+  /** The copy-on-write DML skeleton [[deleteWhere]] and [[updateWhere]]
+    * share: open, refuse partition-column reads in the predicate and in
+    * the `set` expressions, find the hit files by one predicate-pushed
+    * scan, rewrite them through `rows`, swap. */
+  private def rewriteWhere(
+      spark: SparkSession,
+      path: String,
+      op: String,
+      namePrefix: String,
+      predicate: Column,
+      set: Map[String, Column],
+      format: String,
+      targetFileBytes: Long
+  )(rows: (DataFrame, Seq[String]) => DataFrame): DeleteReport = {
+    val (fs, latestId, all) = open(spark, path, op, wholeTable = true)
+    val partCols = tablePartCols(spark, path, all)
+    requireDataColumnPredicate(op, predicate, partCols)
     // SET VALUE expressions read partition columns as verbatim STRINGS
     // during the rewrite — `SET v = part_col * 2` would silently
     // mis-evaluate, the exact hazard the predicate guard exists for
     set.foreach { case (c, e) =>
-      val overlap = refNames(e).intersect(partCols0.toSet)
+      val overlap = refNames(e).intersect(partCols.toSet)
       require(overlap.isEmpty,
-        s"updateWhere: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
+        s"$op: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
           "partition values are verbatim strings during the rewrite; data columns only")
     }
-    val hitKeys = spark.read.format(format).load(path)
-      .filter(predicate)
-      .select(col("_metadata.file_path"))
-      .distinct()
-      .collect()
-      .map(r => normKey(r.getString(0)))
-      .toSet
-    val (hit, untouched) = all.partition(e => hitKeys.contains(normKey(e.path)))
-    require(hit.size == hitKeys.size,
-      s"updateWhere($path): ${hitKeys.size} matched files but ${hit.size} manifest entries — " +
-        "scan and manifest disagree; refusing to rewrite")
+    val (hit, untouched) = hitFiles(op, path, all,
+      spark.read.format(format).load(path).filter(predicate).select(col("_metadata.file_path")))
     if (hit.isEmpty) {
       return DeleteReport(0, 0, all.size, latestId, Nil)
     }
-    val hitPaths = hit.map(_.sparkPath.toPath.toString)
-    val nOut = math.max(1L,
-      (hit.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
-
-    val moved = stageRewrite(spark, fs, path, format, hitPaths, "graft-update") {
-      (df, partCols, stageDir) =>
-        set.keys.foreach { c =>
-          require(df.columns.contains(c), s"updateWhere: SET column $c not in the table schema")
-          require(!partCols.contains(c),
-            s"updateWhere: $c is a partition column — updating it is a move, not an update")
-        }
-        // ONE projection, not chained withColumns: every SET expression
-        // AND the predicate evaluate against the OLD row (standard SQL
-        // UPDATE semantics — an assignment never sees a sibling's result)
-        val matchedOnly = coalesce(predicate, lit(false))
-        val updated = df.select(df.columns.toIndexedSeq.map { c =>
-          set.get(c) match {
-            case Some(e) =>
-              org.apache.spark.sql.functions.when(matchedOnly, e).otherwise(col(c))
-                .cast(df.schema(c).dataType).as(c)
-            case None => col(c)
-          }
-        }: _*)
-        val writer =
-          if (partCols.isEmpty) updated.coalesce(nOut).write
-          else updated.repartition(nOut, partCols.map(col): _*).write.partitionBy(partCols: _*)
-        writer.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stageDir)
-    }
-
-    swapManifest(spark, fs, path, latestId,
-      untouched.toArray ++ moved.map(p => SinkFileStatus(fs.getFileStatus(p))), "updateWhere")
-    DeleteReport(hit.size, moved.size, untouched.size, latestId, hitPaths)
+    val landed = copyOnWrite(spark, fs, path, format, hit, namePrefix, targetFileBytes)(rows)
+    swapManifest(spark, fs, path, latestId, (untouched ++ landed).toArray, op)
+    DeleteReport(hit.size, landed.size, untouched.size, latestId,
+      hit.map(_.sparkPath.toPath.toString))
   }
 
   /** MERGE (upsert) into a live manifest-committed table — copy-on-write:
@@ -1142,7 +1190,7 @@ object Optimize {
       evolveSchema: Boolean = false
   ): DeleteReport = {
     require(keyCols.nonEmpty, "mergeInto: empty key column list")
-    val (fs, latestId, all) = guardAndOpen(spark, path, "mergeInto")
+    val (fs, latestId, all) = open(spark, path, "mergeInto", wholeTable = true)
     val partCols0 = tablePartCols(spark, path, all)
     require(!partCols0.exists(keyCols.contains),
       s"mergeInto: key columns overlap partition columns ${partCols0.mkString(",")} — " +
@@ -1203,109 +1251,76 @@ object Optimize {
               "for an update-only merge over a partial-column source")
         }
     }
-    source.persist()
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).collect()
-    if (dupKeys.nonEmpty) source.unpersist(): Unit
-    require(dupKeys.isEmpty,
-      s"mergeInto: duplicate key in source (${dupKeys.headOption}) — ambiguous MERGE")
-
-    import org.apache.spark.sql.functions.broadcast
-    // the cardinality check above materialized the persisted source, so
-    // its plan stats carry the real cached size — the broadcast gate
-    // (a fresh QueryExecution picks up the cache substitution)
-    val srcBytes = spark.sessionState
-      .executePlan(source.queryExecution.logical).optimizedPlan.stats.sizeInBytes
-    val useBroadcast = srcBytes <= BigInt(maxBroadcastBytes)
-    def gated(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
-
-    val srcKeys = source.select(keyCols.map(col): _*)
-    // the _metadata column must be projected BEFORE the join — it exists
-    // only directly on the file-source relation
-    val fileKeyed = table
-      .select(col("_metadata.file_path").as("__graft_file") +: keyCols.map(col): _*)
-    val matchedFiles = fileKeyed
-      .join(gated(srcKeys), keyCols)
-      .select(col("__graft_file"))
-      .distinct()
-      .collect()
-      .map(r => normKey(r.getString(0)))
-      .toSet
-    // NOT MATCHED BY SOURCE: files holding any source-ABSENT row must
-    // rewrite too (their copies simply omit those rows) — the anti-join
-    // leg of hit-file discovery
-    val antiFiles =
-      if (!deleteNotMatchedBySource) Set.empty[String]
-      else fileKeyed
-        .join(gated(srcKeys), keyCols, "left_anti")
-        .select(col("__graft_file"))
-        .distinct()
-        .collect()
-        .map(r => normKey(r.getString(0)))
-        .toSet
-    val hitKeys = matchedFiles ++ antiFiles
-    val (hit, untouched) = all.partition(e => hitKeys.contains(normKey(e.path)))
-    require(hit.size == hitKeys.size,
-      s"mergeInto($path): ${hitKeys.size} matched files but ${hit.size} manifest entries — " +
-        "scan and manifest disagree; refusing to rewrite")
-
     val cols = (table.columns.toSeq ++ newCols).toIndexedSeq
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-
+    source.persist()
     // not-matched inserts append as new files — no rewrite, pure add
     val inserts =
       if (!insertNotMatched) spark.emptyDataFrame
       else source.join(table.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val insertDir = new Path(path, s"_graft_merge_ins_$uuid")
     val nIns = inserts.persist()
-    val insFiles: Seq[Path] =
-      if (!insertNotMatched || nIns.isEmpty) Nil
-      else {
-        // a PARTITIONED table's inserts must land inside their partition
-        // dirs (a flat root file would corrupt partition discovery for
-        // every reader), so the staging write partitions and the move
-        // preserves the sub-path — the same discipline as stageRewrite
-        val base = nIns.select(cols.map(col): _*)
-          .coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-        val w =
-          if (partCols0.isEmpty) base.write
-          else base.write.partitionBy(partCols0: _*)
-        w.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format)
-          .save(insertDir.toString)
-        def filesUnder(p: Path): Seq[Path] =
-          fs.listStatus(p).toSeq.flatMap { st =>
-            val n = st.getPath.getName
-            if (n.startsWith("_") || n.startsWith(".")) Nil
-            else if (st.isDirectory) filesUnder(st.getPath)
-            else Seq(st.getPath)
-          }
-        filesUnder(insertDir).zipWithIndex.map { case (src, i) =>
-          val rel = src.toString.stripPrefix(fs.makeQualified(insertDir).toString)
-            .stripPrefix("/")
-          val cut = rel.lastIndexOf('/')
-          val sub = if (cut < 0) "" else rel.substring(0, cut)
-          val destDir = if (sub.isEmpty) new Path(path) else new Path(path, sub)
-          fs.mkdirs(destDir)
-          val dest = new Path(destDir, s"graft-merge-ins-$uuid-$i.$format")
-          require(fs.rename(src, dest), s"mergeInto: rename $src -> $dest failed")
-          dest
-        }
-      }
-    if (fs.exists(insertDir)) fs.delete(insertDir, true): Unit
+    val (hit, untouched, rewritten, inserted) = try {
+      val dupKeys = source.groupBy(keyCols.map(col): _*)
+        .count().filter(col("count") > 1).limit(1).collect()
+      require(dupKeys.isEmpty,
+        s"mergeInto: duplicate key in source (${dupKeys.headOption}) — ambiguous MERGE")
 
-    // matched files rewrite with source rows replacing their key-matches
-    val moved: Seq[Path] =
-      if (hit.isEmpty) Nil
-      else {
-        val hitPaths = hit.map(_.sparkPath.toPath.toString)
-        val nOut = math.max(1L,
-          (hit.map(_.size).sum + targetFileBytes - 1) / targetFileBytes).toInt
-        stageRewrite(spark, fs, path, format, hitPaths, "graft-merge") {
-          (df, partCols, stageDir) =>
+      import org.apache.spark.sql.functions.broadcast
+      // the cardinality check above materialized the persisted source, so
+      // its plan stats carry the real cached size — the broadcast gate
+      // (a fresh QueryExecution picks up the cache substitution)
+      val srcBytes = spark.sessionState
+        .executePlan(source.queryExecution.logical).optimizedPlan.stats.sizeInBytes
+      val useBroadcast = srcBytes <= BigInt(maxBroadcastBytes)
+      def gated(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
+
+      val srcKeys = source.select(keyCols.map(col): _*)
+      // the _metadata column must be projected BEFORE the join — it exists
+      // only directly on the file-source relation
+      val fileKeyed = table
+        .select(col("_metadata.file_path").as("__graft_file") +: keyCols.map(col): _*)
+      // NOT MATCHED BY SOURCE: files holding any source-ABSENT row must
+      // rewrite too (their copies simply omit those rows) — the anti-join
+      // leg of hit-file discovery
+      val (hit, untouched) = hitFiles("mergeInto", path, all,
+        fileKeyed.join(gated(srcKeys), keyCols).select(col("__graft_file")) +:
+          Option.when(deleteNotMatchedBySource)(
+            fileKeyed.join(gated(srcKeys), keyCols, "left_anti").select(col("__graft_file"))
+          ).toSeq: _*)
+
+      val inserted =
+        if (!insertNotMatched || nIns.isEmpty) Nil
+        else {
+          // a PARTITIONED table's inserts must land inside their partition
+          // dirs (a flat root file would corrupt partition discovery for
+          // every reader), so the staging write partitions and the land
+          // preserves the sub-path. Data columns cast to the table's types
+          // like the rewritten rows below — a differently-typed source
+          // would otherwise leave files whose schemas disagree, and the
+          // column's type would depend on which file a reader samples;
+          // partition values stay verbatim (they become dir names)
+          val base = nIns.select(cols.map { c =>
+            if (partCols0.contains(c) || !table.columns.contains(c)) col(c)
+            else col(c).cast(table.schema(c).dataType).as(c)
+          }: _*).coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+          val uuid = newToken()
+          land(fs, path, new Path(path, s"_graft_merge_ins_$uuid"), format,
+            "graft-merge-ins", uuid) { stage =>
+            val w =
+              if (partCols0.isEmpty) base.write
+              else base.write.partitionBy(partCols0: _*)
+            w.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stage)
+          }
+        }
+
+      // matched files rewrite with source rows replacing their key-matches
+      val rewritten =
+        if (hit.isEmpty) Nil
+        else copyOnWrite(spark, fs, path, format, hit, "graft-merge", targetFileBytes) {
+          (df, _) =>
             // NOT MATCHED BY SOURCE DELETE keeps only matched rows of a
             // rewritten file (the survivors filter rides the SAME match
             // flag the replacement keys on)
-            val merged = matchedSet match {
+            matchedSet match {
               case None =>
                 // schema evolution: the OLD files' frame gains the new
                 // columns as typed NULLs, so non-matched rows in a
@@ -1362,20 +1377,16 @@ object Optimize {
                   }
                 }: _*)
             }
-            val writer =
-              if (partCols.isEmpty) merged.coalesce(nOut).write
-              else merged.repartition(nOut, partCols.map(col): _*)
-                .write.partitionBy(partCols: _*)
-            writer.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stageDir)
         }
-      }
-    nIns.unpersist(): Unit
-    source.unpersist(): Unit
+      (hit, untouched, rewritten, inserted)
+    } finally {
+      nIns.unpersist()
+      source.unpersist(): Unit
+    }
 
-    swapManifest(spark, fs, path, latestId,
-      untouched.toArray ++ (moved ++ insFiles).map(p => SinkFileStatus(fs.getFileStatus(p))),
+    swapManifest(spark, fs, path, latestId, (untouched ++ rewritten ++ inserted).toArray,
       "mergeInto")
-    DeleteReport(hit.size, moved.size + insFiles.size, untouched.size, latestId,
+    DeleteReport(hit.size, rewritten.size + inserted.size, untouched.size, latestId,
       hit.map(_.sparkPath.toPath.toString))
   }
 
@@ -1422,15 +1433,7 @@ object Optimize {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val fs = fsFor(spark, path)
-        // heal BEFORE the bootstrap-vs-merge branch: a crash between the
-        // swap's two renames leaves NO live manifest — deciding on
-        // metaDir existence alone would re-bootstrap and silently reset
-        // the table. Any swap debris means a prior mutation was in
-        // flight; repair resolves it deterministically and only a
-        // debris-free missing manifest is a true first bootstrap.
-        val debris = fs.exists(stageMetaDir(path)) || fs.exists(bakDir(path)) ||
-          fs.exists(stageDataDir(path))
-        if (debris) repairOptimize(spark, path): Unit
+        healSwap(spark, fs, path)
         if (!fs.exists(metaDir(path))) {
           val dup = batch.groupBy(keyCols.map(col): _*)
             .count().filter(col("count") > 1).limit(1).collect()
@@ -1440,29 +1443,14 @@ object Optimize {
           // bootstrap: land the first batch's files, then commit them as
           // the log's batch 0 — the log's creation IS the publish point.
           // A crashed prior bootstrap left only invisible debris: sweep
-          // its temp dirs; its moved-but-uncommitted files are orphans
-          // the graced vacuum reclaims.
-          if (fs.exists(new Path(path))) {
-            fs.listStatus(new Path(path)).toSeq
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.startsWith("_graft_upsert_boot_"))
-              .foreach(st => fs.delete(st.getPath, true))
-          }
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val tmp = new Path(path, s"_graft_upsert_boot_$uuid")
-          batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format)
-            .save(tmp.toString)
-          val moved = fs.listStatus(tmp).toSeq
-            .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith("."))
-            .zipWithIndex.map { case (st, i) =>
-              val dest = new Path(path, s"graft-upsert-$uuid-$i.$format")
-              require(fs.rename(st.getPath, dest), s"upsertSink bootstrap: rename failed")
-              dest
-            }
-          fs.delete(tmp, true)
+          // its stage dirs first.
+          sweepStageDirs(fs, path, "_graft_upsert_boot_")
+          val uuid = newToken()
+          val landed = land(fs, path, new Path(path, s"_graft_upsert_boot_$uuid"), format,
+            "graft-upsert", uuid)(
+            batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(_))
           val log = sinkLog(spark, metaDir(path).toString)
-          require(log.add(0L, moved.map(p => SinkFileStatus(fs.getFileStatus(p))).toArray),
+          require(log.add(0L, landed.toArray),
             "upsertSink bootstrap: batch-0 manifest commit failed")
         } else {
           mergeInto(spark, path, batch, keyCols, format): Unit
@@ -1475,20 +1463,13 @@ object Optimize {
     * manifest + a `_COMMITTED`-marked stage rolls FORWARD; anything else
     * restores the backup. Returns what it did. */
   def repairOptimize(spark: SparkSession, path: String): String = {
-    val fs = fsFor(spark, path)
+    val fs = repairFs(spark, path)
     val meta = metaDir(path)
     val bak = bakDir(path)
     val stage = stageMetaDir(path)
-    val data = stageDataDir(path)
-    if (!fs.exists(new Path(path))) {
-      throw new IllegalStateException(
-        s"repairOptimize($path): path does not exist — not a sink table")
-    }
-    if (fs.exists(data)) fs.delete(data, true)
+    if (fs.exists(stageDataDir(path))) fs.delete(stageDataDir(path), true)
     // merge-insert staging debris (invisible `_graft_merge_ins_*` dirs)
-    fs.listStatus(new Path(path)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_graft_merge_ins_"))
-      .foreach(st => fs.delete(st.getPath, true))
+    sweepStageDirs(fs, path, "_graft_merge_ins_")
     if (fs.exists(meta)) {
       // crash before the swap started (or after it finished): the live
       // manifest is authoritative. An UNCOMMITTED stage is debris; a
@@ -1506,23 +1487,7 @@ object Optimize {
         case (s, Some(v))     =>
           s"rolled-back: archived backup as v$v${if (s) s", swept $stage" else ""}"
       }
-    } else if (fs.exists(stage) && fs.exists(marker(stage))) {
-      // crash between the two renames: the stage was fully committed —
-      // finish the promotion (and archive the retired generation)
-      require(fs.rename(stage, meta), s"repairOptimize: promote $stage failed")
-      fs.delete(marker(meta), false)
-      if (fs.exists(bak)) archiveToHistory(spark, fs, path, bak): Unit
-      touchMaintMarker(fs, path)
-      "rolled-forward"
-    } else if (fs.exists(bak)) {
-      // incomplete stage: the old manifest is the only committed truth
-      if (fs.exists(stage)) fs.delete(stage, true)
-      require(fs.rename(bak, meta), s"repairOptimize: restore $bak failed")
-      "restored-backup"
-    } else {
-      throw new IllegalStateException(
-        s"repairOptimize($path): no manifest, no committed stage, no backup — not a sink table")
-    }
+    } else rollForwardOrRestore(spark, fs, path, stage, s"repairOptimize($path)")
   }
 
   /** TOKEN-targeted repair (r18): heal ONE crashed scoped operation's
@@ -1538,39 +1503,54 @@ object Optimize {
     * backup. Call only after confirming the token's op is dead — a
     * LIVE op's token heals out from under it otherwise. */
   def repairOptimize(spark: SparkSession, path: String, token: String): String = {
-    val fs = fsFor(spark, path)
-    val meta = metaDir(path)
-    val bak = bakDir(path)
+    val fs = repairFs(spark, path)
     val stage = stageMetaDirT(path, token)
     val data = stageDataDirT(path, token)
     val lock = scopeMarker(path, token)
+    require(fs.exists(stage) || fs.exists(data) || fs.exists(lock),
+      s"repairOptimize($path, $token): no stage dirs or scope lock for this token")
+    if (fs.exists(data)) fs.delete(data, true)
+    val did =
+      if (fs.exists(metaDir(path))) {
+        val sweptStage = fs.exists(stage)
+        if (sweptStage) fs.delete(stage, true): Unit
+        if (sweptStage) s"rolled-back: swept $stage" else "rolled-back: released scope lock"
+      } else rollForwardOrRestore(spark, fs, path, stage, s"repairOptimize($path, $token)")
+    fs.delete(lock, false)
+    did
+  }
+
+  private def repairFs(spark: SparkSession, path: String): FileSystem = {
+    val fs = fsFor(spark, path)
     if (!fs.exists(new Path(path))) {
       throw new IllegalStateException(
         s"repairOptimize($path): path does not exist — not a sink table")
     }
-    require(fs.exists(stage) || fs.exists(data) || fs.exists(lock),
-      s"repairOptimize($path, $token): no stage dirs or scope lock for this token")
-    if (fs.exists(data)) fs.delete(data, true)
-    if (fs.exists(meta)) {
-      val sweptStage = fs.exists(stage)
-      if (sweptStage) fs.delete(stage, true): Unit
-      fs.delete(lock, false)
-      if (sweptStage) s"rolled-back: swept $stage" else "rolled-back: released scope lock"
-    } else if (fs.exists(stage) && fs.exists(marker(stage))) {
+    fs
+  }
+
+  /** The repair body both overloads share once the live manifest is
+    * GONE (a crash between the swap's two renames, or during the
+    * promotion): a `_COMMITTED` `stage` was fully staged — finish the
+    * promotion and archive the retired generation; otherwise the backup
+    * is the only committed truth — restore it. */
+  private def rollForwardOrRestore(
+      spark: SparkSession, fs: FileSystem, path: String, stage: Path, who: String): String = {
+    val meta = metaDir(path)
+    val bak = bakDir(path)
+    if (fs.exists(stage) && fs.exists(marker(stage))) {
       require(fs.rename(stage, meta), s"repairOptimize: promote $stage failed")
       fs.delete(marker(meta), false)
       if (fs.exists(bak)) archiveToHistory(spark, fs, path, bak): Unit
       touchMaintMarker(fs, path)
-      fs.delete(lock, false)
       "rolled-forward"
     } else if (fs.exists(bak)) {
       if (fs.exists(stage)) fs.delete(stage, true)
       require(fs.rename(bak, meta), s"repairOptimize: restore $bak failed")
-      fs.delete(lock, false)
       "restored-backup"
     } else {
       throw new IllegalStateException(
-        s"repairOptimize($path, $token): no manifest, no committed stage, no backup")
+        s"$who: no manifest, no committed stage, no backup — not a sink table")
     }
   }
 
@@ -1738,7 +1718,7 @@ object Optimize {
   def restoreTable(
       spark: SparkSession, path: String, version: Long, format: String = "parquet"
   ): RestoreReport = {
-    val (fs, latestId, _) = guardAndOpen(spark, path, "restoreTable")
+    val (fs, latestId, _) = open(spark, path, "restoreTable", wholeTable = true)
     val dir = versionDirs(fs, path).collectFirst { case (v, d, _) if v == version => d }
       .getOrElse(throw new IllegalArgumentException(
         s"restoreTable($path): no history version $version — see listVersions"))

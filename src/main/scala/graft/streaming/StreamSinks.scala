@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import scala.collection.concurrent.TrieMap
@@ -210,22 +211,9 @@ object StreamSinks {
       dryRun: Boolean = false,
       graceMs: Long = 10 * 60 * 1000L
   ): Seq[String] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     val root = new Path(path)
     requireNoActiveWriter(spark, path, "vacuum")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        // the underscore/dot filter must come BEFORE the directory
-        // recursion: `_`-prefixed DIRS (sidecar indexes `_bloom_*`,
-        // `_graft_optimize_*` staging, `_spark_metadata`) are invisible
-        // to Spark readers, so their contents are never manifest-listed
-        // — recursing into them would sweep a live sidecar as orphans
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) dataFiles(st.getPath)
-        else Seq(st)
-      }
     val committed = committedFiles(spark, path, format)
       .map(u => Path.getPathWithoutSchemeAndAuthority(new Path(u)).toString)
       .toSet
@@ -262,7 +250,7 @@ object StreamSinks {
       if (fs.exists(m)) fs.getFileStatus(m).getModificationTime else 0L
     }
     val cutoff = System.currentTimeMillis() - graceMs
-    val orphans = dataFiles(root).filter { st =>
+    val orphans = dataFiles(fs, root).filter { st =>
       val key = Path.getPathWithoutSchemeAndAuthority(st.getPath).toString
       math.max(st.getModificationTime, lastMaint) <= cutoff &&
         !committed.contains(key) && !historyProtected.contains(key)
@@ -270,6 +258,21 @@ object StreamSinks {
     if (!dryRun) orphans.foreach(st => fs.delete(st.getPath, false))
     orphans.map(_.getPath.toString)
   }
+
+  /** Every data file under `root`, recursively — the one lister the
+    * sweeps and the staged-write path share. The underscore/dot filter
+    * comes BEFORE the directory recursion: `_`-prefixed DIRS (sidecar
+    * indexes `_bloom_*`, `_graft_optimize_*` staging, `_spark_metadata`)
+    * are invisible to Spark readers, so their contents are never
+    * manifest-listed — recursing into them would sweep a live sidecar as
+    * orphans. */
+  private[streaming] def dataFiles(fs: FileSystem, root: Path): Seq[FileStatus] =
+    fs.listStatus(root).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Seq(st)
+    }
 
   /** The stop-the-writer precondition every destructive maintenance op
     * (vacuum, promote, optimize) shares: refuse while any active
@@ -281,7 +284,6 @@ object StreamSinks {
     * grace windows.) */
   private[streaming] def requireNoActiveWriter(
       spark: SparkSession, path: String, op: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val target = Path.getPathWithoutSchemeAndAuthority(new Path(path)).toString
     val (unknown, known) = spark.streams.active.partition(q => q.lastProgress == null)
     val writers = known.filter(q => q.lastProgress.sink.description.contains(target))
@@ -330,20 +332,11 @@ object StreamSinks {
     * surviving that conversion + compaction.
     */
   def promote(spark: SparkSession, path: String, format: String = "orc"): PromoteReport = {
-    import org.apache.hadoop.fs.Path
     val swept = vacuum(spark, path, format, dryRun = false, graceMs = 0L)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        // underscore/dot filter before recursion — see vacuum's lister
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) dataFiles(st.getPath)
-        else Seq(st.getPath)
-      }
-    val listed = dataFiles(root)
-      .map(p => Path.getPathWithoutSchemeAndAuthority(p).toString)
+    val listed = dataFiles(fs, root)
+      .map(st => Path.getPathWithoutSchemeAndAuthority(st.getPath).toString)
       .toSet
     val committed = committedFiles(spark, path, format)
       .map(u => Path.getPathWithoutSchemeAndAuthority(new Path(u)).toString)
@@ -557,31 +550,20 @@ object StreamSinks {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.hadoop.fs.Path
-        import org.apache.spark.sql.execution.streaming.sinks.SinkFileStatus
         val spark = batch.sparkSession
         val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
         // heal a crashed compaction BEFORE touching the manifest
-        val debris = fs.exists(Optimize.stageMetaDir(path)) ||
-          fs.exists(Optimize.bakDir(path)) || fs.exists(Optimize.stageDataDir(path))
-        if (debris) Optimize.repairOptimize(spark, path): Unit
+        Optimize.healSwap(spark, fs, path)
         val log = Optimize.sinkLog(spark, Optimize.metaDir(path).toString)
         if (!log.getLatestBatchId().exists(_ >= batchId)) {
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val tmp = new Path(path, s"_graft_appendsink_$uuid")
-          batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-          val moved = fs.listStatus(tmp).toSeq
-            .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith("."))
-            .zipWithIndex.map { case (st, i) =>
-              val dest = new Path(path, s"graft-append-$batchId-$uuid-$i.parquet")
-              require(fs.rename(st.getPath, dest),
-                s"compactingParquetSink: rename ${st.getPath} -> $dest failed")
-              dest
-            }
-          fs.delete(tmp, true)
-          require(
-            log.add(batchId, moved.map(p => SinkFileStatus(fs.getFileStatus(p))).toArray),
+          // a crashed append's stage dirs are invisible debris nothing
+          // else sweeps (vacuum skips `_` dirs)
+          Optimize.sweepStageDirs(fs, path, "_graft_appendsink_")
+          val uuid = Optimize.newToken()
+          val landed = Optimize.land(fs, path, new Path(path, s"_graft_appendsink_$uuid"),
+            "parquet", s"graft-append-$batchId", uuid)(
+            batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
+          require(log.add(batchId, landed.toArray),
             s"compactingParquetSink: manifest commit for batch $batchId failed")
         } // else: checkpoint replay of a committed batch — exactly-once skip
         // the small-file policy, measured on COMMITTED files only

@@ -170,4 +170,26 @@ class CompactingSinkSpec extends AnyFunSuite {
         stream.toDF().toDF("id", "v"), out, ckpt, retainMs = Some(window))
     }
   }
+
+  test("a crashed append's stage dir is swept by the next batch") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val out = freshDir("csink_stale_out")
+    val ckpt = freshDir("csink_stale_ckpt")
+    val stream = MemoryStream[(Long, Double)]
+    def drive(rows: Seq[(Long, Double)]): Unit = {
+      stream.addData(rows: _*)
+      val q = StreamSinks.compactingParquetSink(stream.toDF().toDF("id", "v"), out, ckpt)
+      q.processAllAvailable(); q.stop()
+    }
+    drive((0L until 10L).map(i => (i, i * 1.0)))
+    // what a JVM killed mid-append leaves: a stage dir nothing references
+    val stale = Paths.get(out, "_graft_appendsink_deadbeef")
+    Files.createDirectory(stale)
+    Files.writeString(stale.resolve("part-00000.parquet"), "torn write")
+    drive((10L until 20L).map(i => (i, i * 1.0)))
+    assert(!Files.exists(stale), "the crashed append's stage dir leaked")
+    assert(spark.read.parquet(out).count() == 20)
+  }
 }

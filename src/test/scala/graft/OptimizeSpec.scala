@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.streaming.{Optimize, StreamSinks}
 
 /** Pins Optimize.optimizeSink — in-place small-file compaction of a LIVE
@@ -902,6 +903,38 @@ class OptimizeSpec extends AnyFunSuite {
     assert(t2.count() == 201 && t2.filter("tag IS NULL").count() == 199)
   }
 
+  test("rewrites over legacy and evolved files together keep the evolved columns") {
+    val s = spark
+    import s.implicits._
+    val (out, _) = buildIdTable("mrgevo_mixed", Seq(0L, 100L)) // ids 0..199, cols (id, v)
+    val srcNew = Seq((10L, 99.0, "gold"), (900L, 9.0, "new"), (901L, 9.5, "new"))
+      .toDF("id", "v", "tag")
+    Optimize.mergeInto(spark, out, srcNew, Seq("id"), evolveSchema = true): Unit
+    def fileOf(id: Long): String = spark.read.option("mergeSchema", "true").parquet(out)
+      .filter(col("id") === id).select("_metadata.file_path").as[String].head()
+    assert(fileOf(150L).contains("/part-") && fileOf(901L).contains("/graft-merge-ins-"))
+
+    // the hit set spans a legacy file (listed first in the manifest) and
+    // an evolved one: the evolved rows must keep `tag`
+    val rep = Optimize.deleteWhere(spark, out, col("id").isin(150L, 901L))
+    assert(rep.rewrittenFiles == 2, s"expected a legacy and an evolved hit file: $rep")
+    val t = spark.read.option("mergeSchema", "true").parquet(out)
+    assert(t.count() == 200)
+    assert(t.filter("id = 900 AND tag = 'new'").count() == 1, "the evolved column was dropped")
+    assert(t.filter("id = 10 AND tag = 'gold'").count() == 1)
+    assert(t.filter("tag IS NULL").count() == 198)
+
+    // a later OPTIMIZE homogenizes the schema without losing a value
+    assert(Optimize.optimizeSink(spark, out, "parquet", smallFileBytes = 1024 * 1024)
+      .compactedFiles >= 2)
+    val files = StreamSinks.committedFiles(spark, out, "parquet")
+    assert(files.forall(f => spark.read.parquet(f).columns.contains("tag")),
+      "a compacted file lost the evolved column")
+    val t2 = spark.read.option("mergeSchema", "true").parquet(out)
+    assert(t2.count() == 200 && t2.filter("tag IS NULL").count() == 198)
+    assert(t2.filter("(id = 900 AND tag = 'new') OR (id = 10 AND tag = 'gold')").count() == 2)
+  }
+
   test("mergeInto SET guards refuse partition-column reads and writes") {
     val s = spark
     import s.implicits._
@@ -1461,5 +1494,99 @@ class OptimizeSpec extends AnyFunSuite {
       autoWas.fold(spark.conf.unset(autoKey))(v => spark.conf.set(autoKey, v))
       aqeWas.fold(spark.conf.unset(aqeKey))(v => spark.conf.set(aqeKey, v))
     }
+  }
+
+  test("mergeInto writes inserted rows with the table's column types") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val out = freshDir("mrg_types_out")
+    val ckpt = freshDir("mrg_types_ckpt")
+    val stream = MemoryStream[(Long, Long)]
+    stream.addData((0L until 100L).map(i => (i, i * 10L)): _*)
+    val q = StreamSinks.parquetSink(stream.toDF().toDF("id", "v"), out, ckpt)
+    q.processAllAvailable(); q.stop()
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val tableSchema = fields(spark.read.parquet(out))
+
+    // an INT source column into a LONG table: one update, one insert
+    val source = Seq((5L, -5), (1000L, 7)).toDF("id", "v")
+    val rep = Optimize.mergeInto(spark, out, source, Seq("id"))
+    assert(rep.outputFiles >= 2, s"expected a rewrite and an insert: $rep")
+    StreamSinks.committedFiles(spark, out, "parquet").foreach { f =>
+      assert(fields(spark.read.parquet(f)) == tableSchema,
+        s"$f does not carry the table's schema: ${spark.read.parquet(f).schema.simpleString}")
+    }
+    val t = spark.read.parquet(out)
+    assert(t.count() == 101)
+    assert(t.filter("id = 5 AND v = -5").count() == 1 && t.filter("id = 1000 AND v = 7").count() == 1)
+  }
+
+  test("scoped rewrites keep partition values verbatim and never touch the session's conf") {
+    val out = freshDir("opt_scope_verbatim_out")
+    val ckpt = freshDir("opt_scope_verbatim_ckpt")
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val stream = MemoryStream[Ev]
+    // zero-padded partition values an inferring read would turn into 7 / 10
+    for (round <- 0 to 1; part <- Seq("007", "010")) {
+      val base = round * 100L + part.toLong * 4
+      runBatch(stream, out, ckpt, (base to base + 3).map(i => ev(i, part)))
+    }
+    val before = spark.read.parquet(out).select("id", "value").collect().toSet
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(key, "true")
+    // watch the conf for the whole run: a rewrite that toggles it races
+    // every other query on the session, not only a concurrent rewrite
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val watcher = new Thread(() =>
+      while (!stop.get()) { seen.add(spark.conf.get(key, "<unset>")); Thread.sleep(1) })
+    watcher.start()
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val runs = Seq(7L, 10L).map(v => Future(Optimize.optimizeSink(spark, out, "parquet",
+        smallFileBytes = 1024 * 1024, partitionWhere = Some(col("etype") === v))))
+      runs.foreach(f => assert(Await.result(f, 120.seconds).compactedFiles >= 2))
+    } finally {
+      stop.set(true); watcher.join()
+    }
+    try {
+      assert(seen.asScala.toSet == Set("true"), s"the session conf changed mid-run: $seen")
+      assert(spark.conf.get(key) == "true", "the session conf was not left as the caller set it")
+      val files = StreamSinks.committedFiles(spark, out, "parquet")
+      assert(files.size == 2 && files.forall(_.contains("graft-compact-")), files.mkString(", "))
+      assert(files.count(_.contains("/etype=007/")) == 1 && files.count(_.contains("/etype=010/")) == 1,
+        s"partition values did not round-trip verbatim: ${files.mkString(", ")}")
+      assert(spark.read.parquet(out).select("id", "value").collect().toSet == before)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a whole-table op that fails while staging leaves nothing behind") {
+    val s = spark
+    import s.implicits._
+    val (out, _) = buildIdTable("mrg_fail", Seq(0L, 100L))
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val source = Seq((5L, 1.0), (1000L, 2.0)).toDF("id", "v")
+    intercept[Exception] {
+      Optimize.mergeInto(spark, out, source, Seq("id"),
+        matchedSet = Some(Map("v" -> org.apache.spark.sql.functions.raise_error(lit("boom")))))
+    }
+    assert(!Files.exists(Paths.get(out, "_graft_optimize_data")), "the stage dir survived")
+    assert(!new java.io.File(out).list().exists(_.startsWith("_graft_merge_ins_")),
+      "the insert stage dir survived")
+    assert(source.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the source stayed cached")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "the failed merge left cached data behind")
+    // the next whole-table op runs with no repair
+    val rep = Optimize.deleteWhere(spark, out, col("id") < 3L)
+    assert(rep.rewrittenFiles >= 1)
+    val t = spark.read.parquet(out)
+    assert(t.count() == 197 && t.filter("id = 5 AND v = 5.0").count() == 1 &&
+      t.filter("id = 1000").count() == 0, "the failed merge changed the table")
   }
 }
