@@ -18,7 +18,7 @@ object SparkEntry {
       (Joins.queries, Joins.oracles),
       (Windows.queries, Windows.oracles),
       (SortSetOps.queries, SortSetOps.oracles),
-      (graft.sources.FileIO.queries, graft.sources.FileIO.oracles),
+      (graft.gates.TableGates.queries, graft.gates.TableGates.oracles),
       (TextOps.queries, TextOps.oracles),
       (ScalarFuncs.queries, ScalarFuncs.oracles),
       (TimeWindows.queries, TimeWindows.oracles),

@@ -45,12 +45,21 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
 
+  /** Root of every gate's scratch output, under the working directory
+    * (the repo root for sbt runs). */
+  private val ScratchRoot = "tmp/graft_io"
+
+  /** Deterministic per-fixture scratch dir, for gates that rewrite their
+    * output from scratch on every run. */
+  private[graft] def scratchDir(sfDir: String, name: String): String =
+    new java.io.File(ScratchRoot).getAbsolutePath +
+      s"/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
+
   /** Scratch dir for gates that materialize an index/layout before
     * querying it — ONE definition of the single-maintainer path
     * discipline: keyed by fixture dir AND applicationId so a
     * concurrently running suite + bench on one machine can never
     * overwrite each other's layouts mid-scan. */
   private[graft] def gateScratchDir(spark: SparkSession, sfDir: String, name: String): String =
-    s"/root/repo/tmp/graft_io/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/" +
-      s"${name}_${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
+    scratchDir(sfDir, s"${name}_${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}")
 }

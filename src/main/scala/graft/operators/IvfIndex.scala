@@ -177,8 +177,8 @@ object IvfIndex {
     * — margin-controlled, and TARGETED at boundary vectors, which is
     * why it beats raising nProbe on clustered data (real clusters have
     * thin boundaries; the near-uniform fixture is the worst case and
-    * spills ~1.4–1.7× at margin 0.05–0.1, see tools/RecallProbe's
-    * IVFGRID). Same trade the published IVF-spill/SPANN family makes.
+    * spills ~1.4–1.7× at margin 0.05–0.1, see SCALING.md's IVF
+    * grid). Same trade the published IVF-spill/SPANN family makes.
     *
     * One codegen'd expression: k fused cosine structs → `array_sort` →
     * top-2 → conditional explode. Rows: (corpus columns ++ `cl`), 1 or 2
@@ -273,7 +273,7 @@ object IvfIndex {
       // of k: each iteration's centroids are fresh literals, so the
       // fused-codegen expression would be generated, janino-compiled
       // (seconds at k in the low hundreds — measured ~5-7 s/iteration by
-      // tools/ScaleRehearsal's assign_fused probe) and then used exactly
+      // the assign_fused rehearsal, SCALING.md) and then used exactly
       // once. Literal fusion only pays when the SAME model is probed
       // repeatedly (search paths, where the codegen cache amortizes it);
       // in the Lloyd loop it is pure compile overhead. Bit-equivalent by

@@ -378,8 +378,7 @@ object IvfPq {
     * appended rows' mean SQUARED-L2 assigned-centroid distance (the
     * per-row `acd` [[appendEncodedSink]] persists) against the base's
     * training inertia (the `_graft_drift_base` sidecar
-    * [[writeIndexedPq]] writes). Measured link (tools/PqDriftProbe,
-    * SCALING.md r18): held-out STATIONARY appends sit at ~1.11–1.12 at
+    * [[writeIndexedPq]] writes). Measured link (SCALING.md r18): held-out STATIONARY appends sit at ~1.11–1.12 at
     * every fraction out to a doubled corpus (k-means inertia on unseen
     * data — never 1.0, never growing), while the +1.5/dim SHIFTED
     * workload jumps to ~150× immediately — the statistic separates by

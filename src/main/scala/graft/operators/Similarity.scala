@@ -751,7 +751,7 @@ object Similarity {
     // BOUND (same scheme as sim_ann_ivf): per-probe recall@5 of the
     // quantized search vs the exact top-5, gated at mean ≥ 0.75 with a
     // constant-TRUE oracle — int8's ~0.4% per-element error keeps
-    // recall near-perfect (tools/RecallProbe measures 0.96 / 0.96 / 1.0
+    // recall near-perfect (SCALING.md records 0.96 / 0.96 / 1.0
     // at sf0.001/0.01/0.1 — the misses are near-tie rank flips). The
     // bound is ~80% of the measured minimum, tight enough that a real
     // quantization regression fails the gate instead of hiding under
@@ -1148,7 +1148,7 @@ object Similarity {
     // TRUE (same scheme as agg_approx_distinct's ±5% bound). The fixture
     // embeddings are near-uniform random — ANN's worst case, where
     // expected recall tracks the scanned fraction. r12 raised the
-    // measured floor with BOTH levers (tools/RecallProbe's IVFGRID):
+    // measured floor with BOTH levers (SCALING.md's IVF grid):
     // probe fraction 0.3 → 0.45 AND spilled corpus multi-assignment at
     // margin 0.1 (IvfIndex.assignSpilled — boundary vectors indexed
     // under their runner-up cluster too, the SPANN-style trade). Mean
@@ -1196,7 +1196,7 @@ object Similarity {
     // (IvfIndex.assignSpilled, margin 0.1 — the same lever sim_ann_ivf
     // rides), with the shortlist deduping per (q_id, vec_id) on best
     // ADC distance. Same recall-bound oracle scheme as sim_ann_ivf;
-    // measured recall@5 (tools/PqProbe PQSPILL, m=8, 64 codes,
+    // measured recall@5 (SCALING.md PQSPILL rows, m=8, 64 codes,
     // shortlist 10×topK) = 0.92 / 0.88 / 0.96 at sf0.001/0.01/0.1 —
     // equal to the spilled coarse-IVF ceiling at every scale (was
     // 0.88/0.76/0.92 unspilled), so the PQ stage loses nothing the
@@ -1293,7 +1293,7 @@ object Similarity {
     // sign bits (SignBandProbes — Lv et al.'s multi-probe LSH on sign
     // projections), so recall rises at FIXED band count — the corpus
     // index (the n·b rows that dominate at 100 TB) is untouched; only
-    // the broadcast probe side grows 3×. Measured by tools/RecallProbe
+    // the broadcast probe side grows 3×. Measured (SCALING.md)
     // on the near-uniform fixture (ANN's worst case), (6, 16, t=2):
     // mean recall@5 = 0.84 / 0.80 / 0.88 at sf0.001/0.01/0.1 (vs
     // 0.36/0.44/0.64 single-probe at the same bands), candidate

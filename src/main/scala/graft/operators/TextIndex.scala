@@ -647,8 +647,7 @@ object TextIndex {
     * doc-ordered skip pointers); the savings are the common-side stats
     * aggregation (now a build-time artifact) and the corpus-wide
     * (term, doc) + per-doc score shuffles (now candidate-only).
-    * tools/Bm25PruneProbe measures both paths; SCALING.md records the
-    * table either way. */
+    * SCALING.md records both paths' measured table. */
   def bm25SearchPruned(
       spark: SparkSession,
       docsPath: String,

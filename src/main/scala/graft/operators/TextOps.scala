@@ -549,7 +549,7 @@ object TextOps {
     // disk, maintained batch by batch, so repeated runs (the bench's 5
     // passes) time what the query advertises downstream — reading the
     // maintained map. The loop's per-ingest COST is measured where a
-    // time series belongs: ScaleRehearsal's corpus_soak (50 sink-driven
+    // time series belongs: the corpus_soak rehearsal (50 sink-driven
     // ingests, per-batch wall time + committed-listing count, SCALING.md)
     // and the ScaleRegressionSpec soak case that gates it in CI.
     "corpus_maintain" -> { (spark, dir) =>

@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.util.Exact._
 
 /** File source/sink surface (SURVEY §2.2 "Sources / sinks / scans").
   *
@@ -16,11 +14,8 @@ import graft.util.Exact._
   * `VectorizedRowBatch` staging (RowOrcWriter.java:38,65-119) is built
   * into Spark's OrcFileFormat. The streaming, exactly-once half lives in
   * graft.streaming (FileStreamSink + checkpoint manifest commit) and is
-  * exercised by OrcStreamingSinkSpec.
-  *
-  * Each query here is a full write→re-read round trip, then an aggregate
-  * whose oracle runs on the ORIGINAL parquet — so a pass proves byte-level
-  * fidelity of the sink+scan pair, not just that files appeared.
+  * exercised by OrcStreamingSinkSpec. The oracle gates over
+  * this surface live in [[graft.gates.TableGates]].
   *
   * Scale posture: `partitionBy` on a low-cardinality column (returnflag:
   * 3 values) keeps file counts = partitions × tasks, bounded; the re-read
@@ -29,12 +24,6 @@ import graft.util.Exact._
   * difference between scanning one partition and the whole table.
   */
 object FileIO {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Deterministic per-sf scratch root, safe for parallel suites. */
-  private def out(dir: String, name: String): String =
-    s"/root/repo/tmp/graft_io/${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
-
   /** Range-clustered sorted write — the data-SKIPPING layout for scan-
     * heavy range predicates (the single-column little sibling of
     * Z-ordering): `repartitionByRange` gives each output FILE a disjoint
@@ -208,10 +197,14 @@ object FileIO {
     * or incremental sink needs: micro-batch commits leave thousands of
     * KB-sized files whose per-file open/footer cost dominates scans at
     * 100 TB. Reads the current layout, sizes the output file count from
-    * the ACTUAL on-disk bytes (⌈total/targetFileBytes⌉), and rewrites
-    * with `coalesce` — a shuffle-FREE narrow repack (tasks just
-    * concatenate input splits; no exchange appears in the plan). Returns
-    * (input file count, output file count).
+    * the ACTUAL on-disk bytes (⌈total/targetFileBytes⌉, over the
+    * recursive data-file listing), and rewrites it in the copy-on-write
+    * layout [[graft.streaming.Optimize]] uses: an unpartitioned dir
+    * repacks with `coalesce` — a shuffle-FREE narrow repack (tasks just
+    * concatenate input splits; no exchange appears in the plan); a
+    * Hive-partitioned dir is hash-split across its partition dirs, whose
+    * values round-trip verbatim (read as strings, never re-typed).
+    * Returns (input file count, output file count).
     *
     * Row-order note: coalesce preserves per-input-split order but not a
     * global order — compaction is for append-style tables; re-run
@@ -224,22 +217,25 @@ object FileIO {
       targetFileBytes: Long,
       format: String = "parquet"
   ): (Int, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inPath), spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs
-      .listStatus(new org.apache.hadoop.fs.Path(inPath))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read
-      .format(format)
-      .load(inPath)
-      .coalesce(nOut)
-      .write
+    val lens = dataFileLenByPath(spark, inPath)
+    val nOut = math.max(1L, (lens.values.sum + targetFileBytes - 1) / targetFileBytes).toInt
+    val rootAbs = tableRootAbs(spark, inPath)
+    val partCols = lens.keys.iterator
+      .map(_.stripPrefix(rootAbs + "/").split('/').init.map(_.split("=", 2)(0)).toSeq)
+      .find(_.nonEmpty).getOrElse(Nil)
+    val inferred = spark.read.format(format).load(inPath)
+    val rows =
+      if (partCols.isEmpty) inferred
+      else spark.read.format(format)
+        .schema(org.apache.spark.sql.types.StructType(inferred.schema.map(f =>
+          if (partCols.contains(f.name)) f.copy(dataType = org.apache.spark.sql.types.StringType)
+          else f)))
+        .load(inPath)
+    graft.streaming.Optimize.cowLayout(rows, partCols, nOut)
       .mode(SaveMode.Overwrite)
       .format(format)
       .save(outPath)
-    (dataFiles.length, nOut)
+    (lens.size, nOut)
   }
 
   /** The table root's absolute filesystem path (scheme-normalized): the
@@ -825,1649 +821,4 @@ object FileIO {
       .save(basePath)
     UpsertReport(partVals.length, nUpd)
   }
-
-  /** Streaming CDC APPLY: every micro-batch [[upsertByKey]]s into the
-    * partitioned table — the classic "apply the change stream to the
-    * warehouse table" loop, composed from the batch primitive.
-    *
-    * Exactly-once BY IDEMPOTENCE: foreachBatch delivery is
-    * at-least-once, and re-applying an upsert batch is a no-op
-    * (TableUpsertSpec pins it), so a crash-replayed batch converges to
-    * the same table — the same argument the maintenance loops make via
-    * their epoch pointers, here for free from the upsert's semantics.
-    *
-    * In-batch collapse: a CDC stream can carry several versions of one
-    * key per micro-batch; `versionCol` (when set) keeps the row with the
-    * HIGHEST version per key (deterministic; ties broken by the max
-    * struct comparison across remaining columns). Without it, the batch
-    * must already be unique per key — [[upsertByKey]] enforces. */
-  def upsertSink(
-      stream: DataFrame,
-      basePath: String,
-      keyCols: Seq[String],
-      partitionCol: String,
-      checkpoint: String,
-      versionCol: Option[String] = None,
-      format: String = "parquet",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val collapsed = versionCol match {
-          case None => b
-          case Some(v) =>
-            val others = b.columns.filterNot(keyCols.contains)
-            b.groupBy(keyCols.map(col): _*)
-              .agg(max_by(struct(others.map(col): _*), col(v)).as("__r"))
-              .select((keyCols.map(col) ++ others.map(c => col(s"__r.$c").as(c))): _*)
-        }
-        if (!collapsed.isEmpty) {
-          val hp = new org.apache.hadoop.fs.Path(basePath)
-          val fs = hp.getFileSystem(b.sparkSession.sparkContext.hadoopConfiguration)
-          if (!fs.exists(hp)) {
-            // first batch bootstraps the table (replay-safe: a re-run of
-            // the same batch finds the path and upserts — a no-op)
-            collapsed.write.mode(SaveMode.Overwrite)
-              .format(format).partitionBy(partitionCol).save(basePath)
-          } else {
-            upsertByKey(b.sparkSession, basePath, collapsed, keyCols, partitionCol, format)
-            ()
-          }
-        }
-      }
-      .start()
-
-  val queries: Map[String, Q] = Map(
-    // Batch partitioned ORC sink (reference parity R5+R7) + ORC scan +
-    // partition pruning on the re-read.
-    "orc_sink_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "lineitem_orc")
-      // The fixture parquet is one row group → one scan task, so without
-      // a repartition the whole zlib-compressed write runs single-task
-      // (measured r18: ~1.5 s serial). Hash on (partition col, order key)
-      // spreads the write across the session's parallelism while keeping
-      // each (flag, key) group in one task — the standard clustered-write
-      // trade (files ≈ tasks × live partition values per task).
-      val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      Tables
-        .lineitem(spark, dir)
-        .repartition(parts, col("l_returnflag"), col("l_orderkey"))
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("compression", "zlib") // the reference's ORC default codec (orc-core CompressionKind.ZLIB)
-        .partitionBy("l_returnflag")
-        .orc(p)
-      spark.read
-        .orc(p)
-        .filter(col("l_returnflag") =!= "N") // prunes partition dirs
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_extendedprice")).as("sum_price"),
-          dsum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("n")
-        )
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    },
-
-    // NESTED-type ORC round trip — the declared extension over the
-    // reference's flat-only writer (RowOrcWriter.java:107-108 throws on
-    // non-scalar types; SURVEY §1.4 "we ADD: ArrayType, MapType, nested
-    // StructType"): write array<float>, map<string,string>, and a
-    // doubly-nested struct (struct containing a struct AND the array)
-    // through the partitioned zlib ORC sink, re-read with a
-    // partition-pruning filter, and aggregate every nested field back to
-    // scalars the DuckDB oracle reproduces from the ORIGINAL parquet — a
-    // pass proves byte-level fidelity of each nested encoder/decoder pair.
-    "orc_nested_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "embeddings_nested_orc")
-      Tables
-        .embeddings(spark, dir)
-        .select(
-          col("vec_id"),
-          col("label"),
-          col("embedding"),
-          map(
-            lit("lbl"), col("label").cast("string"),
-            lit("id"), col("vec_id").cast("string")
-          ).as("props"),
-          struct(
-            col("vec_id").as("id"),
-            struct(col("label").as("l"), size(col("embedding")).as("dim")).as("meta"),
-            col("embedding").as("vec")
-          ).as("rec")
-        )
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("compression", "zlib")
-        .partitionBy("label")
-        .orc(p)
-      spark.read
-        .orc(p)
-        .filter(col("label") <= 7) // prunes partition dirs
-        .select(
-          col("label"),
-          element_at(col("embedding"), 1).cast("double").as("e1"),
-          element_at(col("rec.vec"), 2).cast("double").as("e2"),
-          col("rec.id").as("rid"),
-          col("rec.meta.dim").as("dim"),
-          when(
-            element_at(col("props"), "id") === col("vec_id").cast("string") &&
-              element_at(col("props"), "lbl") === col("rec.meta.l").cast("string"),
-            1L
-          ).otherwise(0L).as("map_ok")
-        )
-        .groupBy(col("label"))
-        .agg(
-          count(lit(1)).as("n"),
-          davg(col("e1")).as("avg_e1"),   // array<float> through ORC
-          davg(col("e2")).as("avg_e2"),   // array nested INSIDE the struct
-          sum(col("rid")).as("sum_id"),   // struct field
-          max(col("dim")).as("dim"),      // struct-in-struct field
-          sum(col("map_ok")).as("n_map_ok") // map<string,string> lookups
-        )
-        .orderBy(col("label"))
-    },
-
-    // CSV sink + schema-driven CSV scan (reference R2 generalized: its
-    // demo pipeline parses CSV lines into typed rows,
-    // OrcSinkTest.java:32-36). Round trip covers string/long/double/
-    // timestamp lexical fidelity.
-    "csv_scan_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "orders_csv")
-      val src = Tables.orders(spark, dir)
-      src.write
-        .mode(SaveMode.Overwrite)
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(p)
-      spark.read
-        .schema(src.schema)
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(p)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          dsum(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("max_date"),
-          count(lit(1)).as("n")
-        )
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // JSON-lines sink + scan: same fidelity contract as CSV.
-    "json_scan_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "customer_json")
-      val src = Tables.customer(spark, dir)
-      src.write.mode(SaveMode.Overwrite).json(p)
-      spark.read
-        .schema(src.schema)
-        .json(p)
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          dsum(col("c_acctbal")).as("sum_bal"),
-          countDistinct(col("c_nationkey")).as("n_nations"),
-          count(lit(1)).as("n")
-        )
-        .orderBy(col("c_mktsegment"))
-    },
-
-    // Pluggable-Bucketer parity (reference RowOrcBucketingSink.java:41,
-    // 111,251-254): an ARBITRARY row expression — not just a column or a
-    // date format — routes each row to its bucket directory, here
-    // `<event_type>_<value tier>`. The re-read filter is on the derived
-    // bucket column, so pruning happens at directory-listing time even
-    // though the bucket is a computed expression; the oracle recomputes
-    // the same expression from the ORIGINAL parquet, so a pass proves
-    // the routing expression and the layout agree row-for-row.
-    "orc_bucketer_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "events_bucketed_orc")
-      val bucketExpr = concat(
-        col("event_type"), lit("_"),
-        when(col("value") < 50, lit("small")).otherwise(lit("big")))
-      graft.streaming.StreamSinks
-        .withBucket(Tables.events(spark, dir), "bucket", bucketExpr)
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("compression", "zlib")
-        .partitionBy("bucket")
-        .orc(p)
-      spark.read
-        .orc(p)
-        .filter(col("bucket").endsWith("_big")) // prunes bucket dirs
-        .groupBy(col("bucket"))
-        .agg(
-          dsum(col("value")).as("sum_value"),
-          count(lit(1)).as("n")
-        )
-        .orderBy(col("bucket"))
-    },
-
-    // CATALOG-REGISTERED sink table — the reference's actual end state
-    // (committed files become a Hive-queryable warehouse TABLE, reference
-    // README.md:13,17, OrcSinkTest.java:23), end-to-end: the events
-    // fixture streams through the exactly-once partitioned ORC sink
-    // (file source → FileStreamSink manifest commit), the directory is
-    // PROMOTED to plain-listing visibility, registered as a partitioned
-    // external table in spark_catalog, and the query reads it BY NAME —
-    // `spark.table(...)` with a partition filter the catalog prunes at
-    // planning time. The oracle recomputes from the ORIGINAL parquet, so
-    // a pass proves the whole stream→commit→promote→register→SQL chain
-    // loses and invents nothing.
-    "catalog_sink_table" -> { (spark, dir) =>
-      val p = out(dir, "events_catalog_orc")
-      val ck = out(dir, "events_catalog_ckpt")
-      val landing = out(dir, "events_catalog_src")
-      // the gate owns these scratch dirs: rebuild fresh each run
-      Seq(p, ck, landing).foreach { d =>
-        val hp = new org.apache.hadoop.fs.Path(d)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
-      // stage the fixture into a LANDING directory (the file stream
-      // source consumes directories, the real ingestion shape; the ts
-      // column is skipped — its vintage dispatch lives in Tables.events
-      // and is irrelevant to the table-registration contract under test)
-      spark.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .write.mode(SaveMode.Overwrite).parquet(landing)
-      val src = spark.readStream
-        .schema(spark.read.parquet(landing).schema)
-        .parquet(landing)
-      val q = graft.streaming.StreamSinks.orcSink(src, p, ck, Seq("event_type"))
-      q.awaitTermination()
-      graft.streaming.StreamSinks.promote(spark, p, "orc")
-      graft.streaming.StreamSinks.registerTable(
-        spark, "graft_sink_events", p, "orc", Seq("event_type"))
-      spark.table("graft_sink_events")
-        .filter(col("event_type") =!= "view") // catalog partition pruning
-        .groupBy(col("event_type"))
-        .agg(
-          dsum(col("value")).as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(col("event_id")).as("sum_id"),
-          count(lit(1)).as("n"))
-        .orderBy(col("event_type"))
-    },
-
-    // SCHEMA EVOLUTION on a live table — the other mutation every
-    // long-lived warehouse table suffers: a producer starts shipping an
-    // extra column mid-stream. Batch 1 lands WITHOUT `c_nationkey`,
-    // batch 2 WITH it; a `mergeSchema` read serves the union schema with
-    // nulls for the legacy files, and the aggregate separates legacy
-    // from evolved rows. The oracle recomputes from the original parquet
-    // (which always had the column) using the SAME even/odd split, so a
-    // pass proves no row, value, or null was invented by the merge.
-    "schema_evolution" -> { (spark, dir) =>
-      val p = out(dir, "customer_evolve")
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.delete(hp, true)
-      val src = Tables.customer(spark, dir)
-      src.filter(pmod(col("c_custkey"), lit(2)) === 0)
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-        .write.mode(SaveMode.Overwrite).parquet(p)
-      src.filter(pmod(col("c_custkey"), lit(2)) === 1)
-        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"), col("c_nationkey"))
-        .write.mode(SaveMode.Append).parquet(p)
-      spark.read
-        .option("mergeSchema", "true")
-        .parquet(p)
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("c_nationkey").isNull, 1L).otherwise(0L)).as("n_legacy"),
-          dsum(col("c_acctbal")).as("sum_bal"),
-          sum(coalesce(col("c_nationkey"), lit(0L))).as("sum_nation"))
-        .orderBy(col("c_mktsegment"))
-    },
-
-    // Partition-scoped MERGE/upsert (upsertByKey): a partitioned orders
-    // table takes one upsert batch — ~1% of keys get a price bump
-    // (update-in-place) and a disjoint set of NEW keys appends — with
-    // only the touched status partitions rewritten (dynamic partition
-    // overwrite; the untouched-partition byte-identity is spec-pinned in
-    // TableUpsertSpec). The oracle recomputes the merged table from the
-    // ORIGINAL parquet with the same expressions, so a pass proves the
-    // anti-join + union + selective rewrite lost and invented nothing.
-    "merge_upsert" -> { (spark, dir) =>
-      val p = out(dir, "orders_upsert")
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.delete(hp, true)
-      val src = Tables
-        .orders(spark, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
-      src.write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(p)
-      val updates = src
-        .filter(pmod(col("o_orderkey"), lit(97)) === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(1000.0))
-        .unionByName(src
-          .filter(pmod(col("o_orderkey"), lit(499)) === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-          .withColumn("o_totalprice", lit(42.5)))
-      upsertByKey(spark, p, updates, Seq("o_orderkey"), "o_orderstatus")
-      spark.read
-        .parquet(p)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("sum_price"),
-          sum(col("o_orderkey")).as("sum_key"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // Parquet batch sink (the streaming twin is graft.streaming): write
-    // partitioned parquet, re-read with a partition-pruning filter.
-    // Bloom file-skipping round trip ([[buildBloomIndex]] /
-    // [[bloomPointLookup]]): orders land hash-clustered by CUSTOMER (16
-    // files) so the ORDER-key lookup has no layout help — exactly the
-    // scattered-key case the sidecar exists for — then the minimum
-    // order key is looked up THROUGH the index. The oracle recomputes
-    // the row from the raw table; `pruned_ok` pins that the bloom
-    // actually skipped files (candidates < total — with fpp 0.01 and 16
-    // files the expected candidate count is 1, and a no-op index that
-    // reads everything fails the gate).
-    "bloom_point_lookup" -> { (spark, dir) =>
-      val p = out(dir, "orders_bloom")
-      Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-        .repartition(16, pmod(col("o_custkey"), lit(16)))
-        .write
-        .mode(SaveMode.Overwrite)
-        .parquet(p)
-      buildBloomIndex(spark, p, "o_orderkey")
-      // one scalar — metadata-scale, the oracle's scalar subquery twin
-      val key = Tables.orders(spark, dir).agg(min(col("o_orderkey"))).collect()(0).getLong(0)
-      val (rows, cand, total) = bloomPointLookup(spark, p, "o_orderkey", key)
-      rows
-        .select(
-          col("o_orderkey"),
-          col("cents"),
-          col("o_orderstatus"),
-          lit(cand < total).as("pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // Co-located BUCKETED join ([[writeBucketedTable]]): orders and
-    // customer both bucketed ×16 on the customer key, then sort-merge
-    // joined — the plan reads bucket i ⋈ bucket i with NO Exchange on
-    // either side (spec-pinned in BucketedJoinSpec; the oracle pins the
-    // VALUES by recomputing the join from the raw parquet). The
-    // one-time write shuffle is the amortized cost every repeated
-    // big-big join saves at 100 TB.
-    "bucketed_join" -> { (spark, dir) =>
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ot = s"graft_bkt_orders_$tag"
-      val ct = s"graft_bkt_customer_$tag"
-      writeBucketedTable(
-        Tables
-          .orders(spark, dir)
-          .select(
-            col("o_orderkey"),
-            col("o_custkey"),
-            floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents")),
-        ot, "o_custkey", 16)
-      writeBucketedTable(
-        Tables.customer(spark, dir).select(col("c_custkey"), col("c_mktsegment")),
-        ct, "c_custkey", 16)
-      spark
-        .table(ot)
-        .hint("merge")
-        .join(spark.table(ct), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        .orderBy(col("c_mktsegment"))
-    },
-
-    "parquet_sink_roundtrip" -> { (spark, dir) =>
-      val p = out(dir, "orders_parquet")
-      Tables
-        .orders(spark, dir)
-        .write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("o_orderstatus")
-        .parquet(p)
-      spark.read
-        .parquet(p)
-        .filter(col("o_orderstatus") === "F")
-        .groupBy(col("o_orderpriority"))
-        .agg(dsum(col("o_totalprice")).as("sum_price"), count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
-    },
-
-    // Z-ORDER LAYOUT gate (r15 — upgrades [[writeZOrdered]] from
-    // spec-measured to oracle-gated): orders rewritten z-ordered on
-    // (o_custkey, o_orderdate) into 16 curve tiles, then a customer-range
-    // × date-window box query read back THROUGH the layout. The oracle
-    // recomputes the rows from the RAW table, so a green hash proves the
-    // layout is a pure reorganization. `files_pruned_ok` packs the
-    // file-skipping evidence into the hashed result: the per-file
-    // (custkey, date) bounding boxes — computed from `_metadata`
-    // exactly like a manifest/metastore would hold them — must admit
-    // STRICTLY fewer candidate files than the layout holds for this box
-    // (ZOrderCompactionSpec measures the full pruning matrix vs a
-    // one-dimension sort; this gate keeps the claim true at every SF).
-    "zorder_scan" -> { (spark, dir) =>
-      val p = out(dir, "orders_zorder")
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderdate"),
-          // TIMESTAMP(_NTZ) has no numeric cast — the curve dimension is
-          // the epoch-seconds twin; the display column stays a timestamp
-          col("o_orderdate").cast("timestamp").cast("long").as("odate_sec"))
-      writeZOrdered(o, p, "o_custkey", "odate_sec", files = 16)
-      val dLo = expr("TIMESTAMP '1996-01-01 00:00:00'")
-      val dHi = expr("TIMESTAMP '1997-01-01 00:00:00'")
-      // metadata-scale: one row per FILE, then one scalar
-      val boxes = spark.read
-        .parquet(p)
-        .select(col("_metadata.file_path").as("f"), col("o_custkey"), col("o_orderdate"))
-        .groupBy(col("f"))
-        .agg(
-          min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
-          min(col("o_orderdate")).as("dmin"), max(col("o_orderdate")).as("dmax"))
-      val hit = col("cmax") >= 10L && col("cmin") <= 40L &&
-        col("dmax") >= dLo && col("dmin") < dHi
-      val st = boxes.agg(sum(when(hit, 1L).otherwise(0L)), count(lit(1))).collect()(0)
-      val (cand, total) = (st.getLong(0), st.getLong(1))
-      spark.read
-        .parquet(p)
-        .filter(
-          col("o_custkey").between(10L, 40L) &&
-            col("o_orderdate") >= dLo && col("o_orderdate") < dHi)
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          col("cents"),
-          col("o_orderdate"),
-          lit(cand < total).as("files_pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // 3-DIMENSIONAL Z-ORDER gate (r16 — [[writeZOrderedN]]): orders
-    // re-clustered on (custkey, date, cents), then a 3-way box query
-    // read back through the layout. The oracle recomputes from the RAW
-    // table (pure reorganization), and `files_pruned_ok` packs the
-    // skipping evidence for EACH dimension ALONE into the hashed result:
-    // every single-dimension box must admit strictly fewer candidate
-    // files than the layout holds — the third dimension is the one a
-    // 2-D curve cannot serve.
-    "zorder_scan3" -> { (spark, dir) =>
-      val p = out(dir, "orders_zorder3")
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderdate"),
-          col("o_orderdate").cast("timestamp").cast("long").as("odate_sec"))
-      writeZOrderedN(o, p, Seq("o_custkey", "odate_sec", "cents"), files = 16)
-      val dLo = expr("TIMESTAMP '1996-01-01 00:00:00'")
-      val dHi = expr("TIMESTAMP '1997-01-01 00:00:00'")
-      val boxes = spark.read
-        .parquet(p)
-        .select(
-          col("_metadata.file_path").as("f"),
-          col("o_custkey"), col("o_orderdate"), col("cents"))
-        .groupBy(col("f"))
-        .agg(
-          min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
-          min(col("o_orderdate")).as("dmin"), max(col("o_orderdate")).as("dmax"),
-          min(col("cents")).as("pmin"), max(col("cents")).as("pmax"))
-      def cand(hit: org.apache.spark.sql.Column): (Long, Long) = {
-        val st = boxes.agg(sum(when(hit, 1L).otherwise(0L)), count(lit(1))).collect()(0)
-        (st.getLong(0), st.getLong(1))
-      }
-      val (cA, total) = cand(col("cmax") >= 10L && col("cmin") <= 40L)
-      val (cB, _) = cand(col("dmax") >= dLo && col("dmin") < dHi)
-      val (cC, _) = cand(col("pmax") >= 1000000L && col("pmin") <= 4000000L)
-      val prunedAll = cA < total && cB < total && cC < total
-      spark.read
-        .parquet(p)
-        .filter(
-          col("o_custkey").between(10L, 40L) &&
-            col("o_orderdate") >= dLo && col("o_orderdate") < dHi &&
-            col("cents").between(1000000L, 4000000L))
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          col("cents"),
-          col("o_orderdate"),
-          lit(prunedAll).as("files_pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // ROW-LEVEL DELETE gate (r15 — the copy-on-write DML on a LIVE
-    // manifest table, oracle-gated end-to-end): orders stream-ingests
-    // through the exactly-once parquet sink in multiple micro-batches,
-    // then `Optimize.deleteWhere` removes a key slice by rewriting ONLY
-    // the match-bearing files under the staged-manifest swap. The
-    // oracle recomputes the survivors from the raw table. Reruns in one
-    // app are no-ops (the checkpoint admits no new files; the predicate
-    // matches nothing after the first pass), so bench passes measure
-    // the steady state.
-    "table_delete_cow" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_delete")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"),
-          col("o_orderpriority"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.Optimize.deleteWhere(spark, tbl, pmod(col("o_orderkey"), lit(10L)) < 3L)
-      spark.read
-        .parquet(tbl)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // SQL spelling of the copy-on-write delete (r15): the identical
-    // pipeline driven through `spark.sql("GRAFT DELETE FROM ...")` — the
-    // parser-extension statement — sharing table_delete_cow's oracle BY
-    // REFERENCE (the sql_span_dedup precedent): one contract, divergence
-    // impossible.
-    "sql_delete_cow" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_delete_sql")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"),
-          col("o_orderpriority"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.sql(s"GRAFT DELETE FROM '$tbl' WHERE pmod(o_orderkey, 10) < 3").collect(): Unit
-      spark.read
-        .parquet(tbl)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // CATALOG-NAME DML gate (r17 — the reference's query-by-NAME
-    // guarantee extended to MUTATIONS): the sink directory registers as
-    // an external catalog table, `GRAFT DELETE FROM <name>` resolves the
-    // name to the table's location through the session catalog, and the
-    // read-back is `spark.table(<name>)` — so a green hash ALSO proves
-    // the catalog read serves the swapped manifest (committed survivors
-    // only), not a plain listing of live + retired generations. Shares
-    // table_delete_cow's oracle BY REFERENCE: one contract for the path
-    // and name spellings.
-    "sql_delete_by_name" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_delete_byname")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"),
-          col("o_orderpriority"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val name = s"graft_byname_orders_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      graft.streaming.StreamSinks.registerTable(spark, name, tbl, "parquet", Nil)
-      spark.sql(s"GRAFT DELETE FROM $name WHERE pmod(o_orderkey, 10) < 3").collect(): Unit
-      spark.table(name)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // ROW-LEVEL UPDATE gate (r15 — updateWhere's oracle twin on the
-    // same recipe; the SET is a constant so reruns stay idempotent).
-    "table_update_cow" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_update")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderpriority"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.Optimize.updateWhere(
-        spark, tbl, col("o_orderpriority") === "1-URGENT", Map("cents" -> lit(0L)))
-      spark.read
-        .parquet(tbl)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        .orderBy(col("o_orderpriority"))
-    },
-
-    // MERGE (upsert) gate (r15 — copy-on-write MERGE INTO on a live
-    // manifest table, oracle-gated end-to-end): the source carries
-    // updates (every o_orderkey % 10 < 2 gets cents = 0) AND inserts
-    // (offset keys), derived deterministically from the fixture so the
-    // oracle recomputes the post-merge table as a CASE + UNION ALL.
-    // Rerun-idempotent: a second pass re-applies identical updates and
-    // its former inserts match as updates to identical values.
-    "table_merge_cow" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_merge")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val updates = o
-        .filter(pmod(col("o_orderkey"), lit(10L)) < 2L)
-        .select(col("o_orderkey"), lit(0L).as("cents"), col("o_orderstatus"))
-      val inserts = o
-        .filter(pmod(col("o_orderkey"), lit(100L)) === 0L)
-        .select(
-          (col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-          lit(42L).as("cents"),
-          lit("X").as("o_orderstatus"))
-      graft.streaming.Optimize.mergeInto(
-        spark, tbl, updates.unionByName(inserts), Seq("o_orderkey"))
-      spark.read
-        .parquet(tbl)
-        .select(col("o_orderkey"), col("cents"), col("o_orderstatus"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // STREAMING CDC-UPSERT gate (r15 — `Optimize.upsertSink` end-to-end,
-    // oracle-gated): the SAME change set as table_merge_cow arrives as a
-    // CHANGE FEED instead of one batch — base rows first, then the
-    // update slice, then the inserts, each appended to the stream source
-    // dir between AvailableNow drives of the upsert sink. Batch MERGE
-    // and streamed CDC apply must land the IDENTICAL final state, so the
-    // oracle is shared by reference. Reruns are no-ops (the checkpoint
-    // has consumed every file).
-    "stream_upsert_cdc" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cdc_upsert")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      val sch = o.schema
-      def drive(): Unit = {
-        val q = graft.streaming.Optimize.upsertSink(
-          spark.readStream.schema(sch).option("maxFilesPerTrigger", 2).parquet(src)
-            .toDF("o_orderkey", "cents", "o_orderstatus"),
-          tbl, Seq("o_orderkey"), ckpt)
-        q.awaitTermination()
-      }
-      // stage-append a change-set into the live source dir (unique names)
-      def append(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-        val tmp = s"$base/tmp_$tag"
-        df.coalesce(2).write.mode(SaveMode.Overwrite).parquet(tmp)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(src), spark.sparkContext.hadoopConfiguration)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(src))
-        fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          .zipWithIndex.foreach { case (st, i) =>
-            fs.rename(st.getPath,
-              new org.apache.hadoop.fs.Path(src, s"feed_${tag}_$i.parquet")): Unit
-          }
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
-      }
-      if (!new java.io.File(src).exists()) {
-        append(o, "base"); drive()
-        append(
-          o.filter(pmod(col("o_orderkey"), lit(10L)) < 2L)
-            .select(col("o_orderkey"), lit(0L).as("cents"), col("o_orderstatus")),
-          "upd")
-        drive()
-        append(
-          o.filter(pmod(col("o_orderkey"), lit(100L)) === 0L)
-            .select(
-              (col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-              lit(42L).as("cents"),
-              lit("X").as("o_orderstatus")),
-          "ins")
-        drive()
-      } else drive() // rerun: checkpoint already consumed the feed — no-op
-      spark.read
-        .parquet(tbl)
-        .select(col("o_orderkey"), col("cents"), col("o_orderstatus"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // FULL-SYNC MERGE gate (r17 — `WHEN NOT MATCHED BY SOURCE DELETE`
-    // completes the MERGE triad): ONE merge applies updates (keys
-    // %10 < 2 zero their cents), inserts (offset keys), AND deletes
-    // every table row absent from the source (keys %10 >= 5) in a
-    // single staged-manifest swap — the full-sync CDC shape ("make the
-    // table equal the source"). The oracle recomputes the final state
-    // as CASE + anti-filter + UNION ALL from the raw table.
-    // Rerun-idempotent: after the first pass every table row is in the
-    // source, so the second pass re-applies identical values and
-    // deletes nothing.
-    "table_merge_sync" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_merge_sync")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val updatesAndKeeps = o
-        .filter(pmod(col("o_orderkey"), lit(10L)) < 5L)
-        .select(
-          col("o_orderkey"),
-          when(pmod(col("o_orderkey"), lit(10L)) < 2L, lit(0L)).otherwise(col("cents"))
-            .as("cents"),
-          col("o_orderstatus"))
-      val inserts = o
-        .filter(pmod(col("o_orderkey"), lit(100L)) === 0L)
-        .select(
-          (col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-          lit(42L).as("cents"),
-          lit("X").as("o_orderstatus"))
-      graft.streaming.Optimize.mergeInto(
-        spark, tbl, updatesAndKeeps.unionByName(inserts), Seq("o_orderkey"),
-        deleteNotMatchedBySource = true)
-      spark.read
-        .parquet(tbl)
-        .select(col("o_orderkey"), col("cents"), col("o_orderstatus"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // COLUMN-LEVEL MERGE gate (r16 — `WHEN MATCHED UPDATE SET` over a
-    // PARTIAL-COLUMN source, oracle-gated): the source carries only the
-    // key and a cap column, the SET expression mixes both sides
-    // (LEAST(t.cents, s.cap)), and WHEN NOT MATCHED is skipped — the
-    // natural CDC shape for a feed that doesn't know the full row.
-    // LEAST is idempotent, so bench re-passes land the same state.
-    "table_merge_cols" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_merge_cols")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val source = o
-        .filter(pmod(col("o_orderkey"), lit(10L)) < 2L)
-        .select(col("o_orderkey"), (col("o_orderkey") * 31L).as("cap"))
-      graft.streaming.Optimize.mergeInto(
-        spark, tbl, source, Seq("o_orderkey"),
-        matchedSet = Some(Map("cents" -> expr("least(t.cents, s.cap)"))),
-        insertNotMatched = false)
-      spark.read
-        .parquet(tbl)
-        .select(col("o_orderkey"), col("cents"), col("o_orderstatus"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // MERGE SCHEMA-EVOLUTION gate (r17 — a source shipping a NEW column
-    // EVOLVES the live manifest table through the whole-row merge):
-    // matched rows take the new column's source values, inserts carry
-    // it, non-matched rows — in rewritten AND untouched files alike —
-    // read as typed NULLs under the mergeSchema read, and untouched
-    // files keep their old schema verbatim (no O(table) backfill). The
-    // oracle recomputes legacy-nulls + new values from the raw table.
-    // Rerun-idempotent: a replayed merge re-applies identical values
-    // onto the already-evolved files.
-    "table_merge_evolve" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_merge_evolve")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val updates = o
-        .filter(pmod(col("o_orderkey"), lit(10L)) < 2L)
-        .select(
-          col("o_orderkey"), lit(0L).as("cents"), col("o_orderstatus"),
-          pmod(col("o_orderkey"), lit(3L)).as("tier")) // the NEW column
-      val inserts = o
-        .filter(pmod(col("o_orderkey"), lit(100L)) === 0L)
-        .select(
-          (col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-          lit(42L).as("cents"),
-          lit("X").as("o_orderstatus"),
-          lit(7L).as("tier"))
-      graft.streaming.Optimize.mergeInto(
-        spark, tbl, updates.unionByName(inserts), Seq("o_orderkey"),
-        evolveSchema = true)
-      spark.read
-        .option("mergeSchema", "true")
-        .parquet(tbl)
-        .select(col("o_orderkey"), col("cents"), col("o_orderstatus"), col("tier"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // TABLE HISTORY + RESTORE gate (r16 — every manifest swap archives
-    // the outgoing generation; RESTORE swaps an archived version back
-    // in, itself archived so it is undoable): a DELETE removes a key
-    // slice, then `restoreTable` to the pre-delete version — the oracle
-    // recomputes the FULL table, so a green hash proves the restore
-    // byte-reproduced the deleted generation. Rerun-idempotent: each
-    // pass deletes and restores again (history grows, state converges).
-    "table_restore" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "cow_restore")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.Optimize.deleteWhere(spark, tbl, pmod(col("o_orderkey"), lit(10L)) < 3L)
-      val vPre = graft.streaming.Optimize.listVersions(spark, tbl).map(_.version).max
-      graft.streaming.Optimize.restoreTable(spark, tbl, vPre)
-      spark.read
-        .parquet(tbl)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // IN-PLACE SORTED RE-CLUSTERING gate (r16 — `GRAFT OPTIMIZE ... SORT
-    // BY` on a LIVE manifest table): orders stream-ingest in ingest
-    // order (each file spans the full key range — the scattered layout
-    // the DML skew soak measures), then ONE in-place sorted rewrite
-    // restores key locality under the staged-manifest swap. The oracle
-    // recomputes the range query from the raw table (pure
-    // reorganization), and `files_pruned_ok` hashes the evidence: after
-    // the rewrite the key-range box must admit strictly fewer candidate
-    // files than the table holds.
-    "table_sort_cluster" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "sort_cluster")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(8).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // target ~8 output files at every SF so the pruning evidence is
-      // non-vacuous (the SQL spelling is exercised in GraftSqlSpec);
-      // byte sizing via ONE recursive listing, not per-file status RPCs
-      val tblBytes = inputFileBytes(spark, spark.read.parquet(tbl), tbl)
-      graft.streaming.Optimize.optimizeSink(
-        spark, tbl, "parquet",
-        targetFileBytes = math.max(4L * 1024, tblBytes / 8),
-        sortDims = Seq("o_orderkey"))
-      val boxes = spark.read
-        .parquet(tbl)
-        .select(col("_metadata.file_path").as("f"), col("o_orderkey"))
-        .groupBy(col("f"))
-        .agg(min(col("o_orderkey")).as("kmin"), max(col("o_orderkey")).as("kmax"))
-      val st = boxes
-        .agg(
-          sum(when(col("kmax") >= 100L && col("kmin") <= 500L, 1L).otherwise(0L)),
-          count(lit(1)))
-        .collect()(0)
-      val prunedOk = st.getLong(0) < st.getLong(1)
-      spark.read
-        .parquet(tbl)
-        .filter(col("o_orderkey").between(100L, 500L))
-        .select(
-          col("o_orderkey"), col("cents"), col("o_orderstatus"),
-          lit(prunedOk).as("files_pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // PARTITION-SCOPED OPTIMIZE gate (r17 — `GRAFT OPTIMIZE ... WHERE
-    // <partition predicate>` lifts the partitioned-table re-clustering
-    // refusal): orders stream-ingest into a HIVE-PARTITIONED manifest
-    // table (one dir per o_orderstatus, each partition's files spanning
-    // the full key range in ingest order), then ONE scoped SORT BY
-    // rewrite re-clusters ONLY partition F under the staged-manifest
-    // swap. The oracle recomputes partition F's key slice from the raw
-    // table (pure reorganization); two evidence flags ride the hashed
-    // result: `untouched_ok` (every OTHER partition's file identities —
-    // rel#mtime#len — byte-identical through the swap) and
-    // `files_pruned_ok` (inside F, the key-range box admits strictly
-    // fewer candidate files than F holds — the re-cluster actually
-    // restored locality). Rerun-idempotent: the scoped rewrite is
-    // deterministic and the untouched set is re-captured each pass.
-    "table_optimize_part" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "opt_part")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("o_orderstatus")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      def outsideIds: Set[String] = dataFileIds(spark, tbl)
-        .filterNot(_.rel.startsWith("o_orderstatus=F/")).map(_.identity).toSet
-      val beforeOutside = outsideIds
-      // size the scoped rewrite to several output files at every SF so
-      // the pruning evidence is non-vacuous; byte sizing via ONE
-      // recursive listing, not per-file status RPCs
-      val fBytes = inputFileBytes(
-        spark, spark.read.parquet(tbl), tbl, _.contains("/o_orderstatus=F/"))
-      graft.streaming.Optimize.optimizeSink(
-        spark, tbl, "parquet",
-        targetFileBytes = math.max(2048L, fBytes / 6),
-        sortDims = Seq("o_orderkey"),
-        partitionWhere = Some(col("o_orderstatus") === "F"))
-      val untouchedOk = outsideIds == beforeOutside
-      val boxes = spark.read
-        .parquet(tbl)
-        .filter(col("o_orderstatus") === "F")
-        .select(col("_metadata.file_path").as("f"), col("o_orderkey"))
-        .groupBy(col("f"))
-        .agg(min(col("o_orderkey")).as("kmin"), max(col("o_orderkey")).as("kmax"))
-      val st = boxes
-        .agg(
-          sum(when(col("kmax") >= 100L && col("kmin") <= 500L, 1L).otherwise(0L)),
-          count(lit(1)))
-        .collect()(0)
-      val prunedOk = st.getLong(0) < st.getLong(1)
-      spark.read
-        .parquet(tbl)
-        .filter(col("o_orderstatus") === "F" && col("o_orderkey").between(100L, 500L))
-        .select(
-          col("o_orderkey"), col("cents"),
-          lit(untouchedOk).as("untouched_ok"),
-          lit(prunedOk).as("files_pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // CHANGE-FEED gate (r18 — `graft_table_changes` TVF, CDC out): a
-    // DELETE archives v1 and a MERGE (updates + inserts) archives v2,
-    // then the feed is read over BOTH spans — v1→v2 must be exactly the
-    // deleted rows, v2→live must be delete(old)+insert(new) per updated
-    // key plus the merged-in inserts, and NOTHING else: rows the COW
-    // rewrites merely copied cancel in the reconciliation. The oracle
-    // recomputes both row diffs from the raw orders table. Rerun-
-    // idempotent: the feed addresses VERSION IDS, so the mutations run
-    // only while history is still short of two versions — replays skip
-    // them and re-read the same archived spans.
-    "sql_table_changes" -> { (spark, dir) =>
-      graft.functions.GraftExtensions.register(spark)
-      val base = Tables.gateScratchDir(spark, dir, "table_changes")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (graft.streaming.Optimize.listVersions(spark, tbl).size < 2) {
-        spark.sql(s"GRAFT DELETE FROM '$tbl' WHERE pmod(o_orderkey, 10) < 3").collect(): Unit
-        // MERGE source: update every key ≡ 5 (mod 10) to cents+7, insert
-        // the same keys shifted out of the key domain — both images are
-        // deterministic functions of the fixture, so DuckDB can replay them
-        val merged = o.filter(pmod(col("o_orderkey"), lit(10L)) === 5L)
-        val mergeSrc = merged
-          .select(col("o_orderkey"), (col("cents") + lit(7L)).as("cents"), col("o_orderstatus"))
-          .unionByName(merged.select(
-            (col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-            col("cents"), col("o_orderstatus")))
-        graft.streaming.Optimize.mergeInto(
-          spark, tbl, mergeSrc, Seq("o_orderkey"),
-          matchedSet = Some(Map("cents" -> col("s.cents")))): Unit
-      }
-      val vs = graft.streaming.Optimize.listVersions(spark, tbl).map(_.version)
-      val v1 = vs.min
-      val v2 = vs.max
-      spark.sql(
-        s"""SELECT * FROM (
-           |  SELECT o_orderkey, cents, o_orderstatus, _change_type, 1 AS span
-           |  FROM graft_table_changes('$tbl', $v1, $v2)
-           |  UNION ALL
-           |  SELECT o_orderkey, cents, o_orderstatus, _change_type, 2 AS span
-           |  FROM graft_table_changes('$tbl', $v2)
-           |)
-           |ORDER BY span, o_orderkey, _change_type""".stripMargin)
-    },
-
-    // TYPED partition-scope RANGE gate (r18): the same scoped-rewrite
-    // contract as `table_optimize_part`, but over an INT-valued
-    // partition column (`hour` in {8,9,10,11}) with a RANGE scope
-    // spelled as a STRING literal — `hour >= '10'`. r17 compared the
-    // Hive dir-name strings lexically, so "9" >= "10" selected hour=9:
-    // the wrong partition rewrote and `untouched_ok` here would hash
-    // false. Typed inference (r18) casts the dir values long before
-    // evaluating, so the scope is exactly {10, 11}. Evidence flags as
-    // in the equality gate: `untouched_ok` pins hour<10 file identities
-    // byte-identical through the swap, `files_pruned_ok` pins restored
-    // key locality inside the scope.
-    "table_optimize_part_range" -> { (spark, dir) =>
-      val base = Tables.gateScratchDir(spark, dir, "opt_part_range")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          (pmod(col("o_orderkey"), lit(4)) + lit(8)).cast("int").as("hour"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("hour")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      def outsideIds: Set[String] = dataFileIds(spark, tbl)
-        .filter(f => f.rel.split('/').head.stripPrefix("hour=").toLong < 10L)
-        .map(_.identity).toSet
-      val beforeOutside = outsideIds
-      // byte sizing via ONE recursive listing, not per-file status RPCs
-      val fBytes = inputFileBytes(
-        spark, spark.read.parquet(tbl), tbl,
-        p => p.contains("/hour=10/") || p.contains("/hour=11/"))
-      graft.streaming.Optimize.optimizeSink(
-        spark, tbl, "parquet",
-        targetFileBytes = math.max(2048L, fBytes / 6),
-        sortDims = Seq("o_orderkey"),
-        partitionWhere = Some(col("hour") >= "10"))
-      val untouchedOk = outsideIds == beforeOutside
-      val boxes = spark.read
-        .parquet(tbl)
-        .filter(col("hour") >= 10)
-        .select(col("_metadata.file_path").as("f"), col("o_orderkey"))
-        .groupBy(col("f"))
-        .agg(min(col("o_orderkey")).as("kmin"), max(col("o_orderkey")).as("kmax"))
-      val st = boxes
-        .agg(
-          sum(when(col("kmax") >= 100L && col("kmin") <= 500L, 1L).otherwise(0L)),
-          count(lit(1)))
-        .collect()(0)
-      val prunedOk = st.getLong(0) < st.getLong(1)
-      spark.read
-        .parquet(tbl)
-        .filter(col("hour") >= 10 && col("o_orderkey").between(100L, 500L))
-        .select(
-          col("o_orderkey"), col("cents"), col("hour").cast("int").as("hour"),
-          lit(untouchedOk).as("untouched_ok"),
-          lit(prunedOk).as("files_pruned_ok"))
-        .orderBy(col("o_orderkey"))
-    },
-
-    // TIME-TRAVEL SQL gate (r16 — `graft_table_version` TVF): a DELETE
-    // retires the pre-delete generation into history; the TVF reads
-    // THAT archived version's rows while the live table keeps the
-    // delete applied. The oracle recomputes the FULL table — a green
-    // hash proves the archived generation is byte-faithful — and the
-    // live read stays the deleted state (checked by the spec; the gate
-    // hashes the time-travel read). Rerun-idempotent: the second pass's
-    // delete matches nothing (no new version), so max(version) is still
-    // the pre-delete manifest.
-    "sql_time_travel" -> { (spark, dir) =>
-      graft.functions.GraftExtensions.register(spark)
-      val base = Tables.gateScratchDir(spark, dir, "time_travel")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.sql(s"GRAFT DELETE FROM '$tbl' WHERE pmod(o_orderkey, 10) < 3").collect(): Unit
-      val vPre = spark.sql(s"GRAFT HISTORY '$tbl'").collect().map(_.getLong(0)).max
-      spark.sql(
-        s"""SELECT o_orderstatus, COUNT(*) AS n,
-           |  CAST(SUM(cents) AS BIGINT) AS sum_cents,
-           |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-           |FROM graft_table_version('$tbl', $vPre)
-           |GROUP BY o_orderstatus
-           |ORDER BY o_orderstatus""".stripMargin)
-    },
-
-    // TIMESTAMP AS OF gate (r18): same table shape and oracle contract
-    // as `sql_time_travel`, but the version is addressed by TIME — a
-    // timestamp strictly after the archive instant maps to the latest
-    // archived version (the pre-delete generation), so the hashed
-    // result proves the mtime→version mapping picks the same manifest
-    // the version-id spelling does. Rerun-idempotent: the second pass's
-    // delete matches nothing (no new version), and "now" keeps mapping
-    // to the same latest version.
-    "sql_time_travel_ts" -> { (spark, dir) =>
-      graft.functions.GraftExtensions.register(spark)
-      val base = Tables.gateScratchDir(spark, dir, "time_travel_ts")
-      val src = s"$base/src"; val tbl = s"$base/table"; val ckpt = s"$base/ckpt"
-      val o = Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-      if (!new java.io.File(src).exists()) {
-        o.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
-      }
-      val q = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-        .writeStream
-        .format("parquet")
-        .outputMode("append")
-        .option("path", tbl)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.sql(s"GRAFT DELETE FROM '$tbl' WHERE pmod(o_orderkey, 10) < 3").collect(): Unit
-      val asOf = new java.sql.Timestamp(System.currentTimeMillis() + 1000L)
-      spark.sql(
-        s"""SELECT o_orderstatus, COUNT(*) AS n,
-           |  CAST(SUM(cents) AS BIGINT) AS sum_cents,
-           |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-           |FROM graft_table_version('$tbl', '$asOf')
-           |GROUP BY o_orderstatus
-           |ORDER BY o_orderstatus""".stripMargin)
-    },
-
-    // SMALL-FILE COMPACTION gate (r15 — upgrades [[compact]] from
-    // spec-measured to oracle-gated): 64 micro-batch-sized files repack
-    // through the shuffle-free coalesce path, and the aggregate is read
-    // back from the COMPACTED copy. The oracle recomputes from the raw
-    // table (compaction must preserve every row); `packed_ok` pins that
-    // the rewrite actually reduced the file count at every SF.
-    "compact_scan" -> { (spark, dir) =>
-      val small = out(dir, "orders_smallfiles")
-      val packed = out(dir, "orders_compacted")
-      Tables
-        .orders(spark, dir)
-        .select(
-          col("o_orderkey"),
-          floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
-          col("o_orderstatus"))
-        .repartition(64)
-        .write
-        .mode(SaveMode.Overwrite)
-        .parquet(small)
-      val (nIn, nOut) = compact(spark, small, packed, targetFileBytes = 8L * 1024 * 1024)
-      spark.read
-        .parquet(packed)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-        .withColumn("packed_ok", lit(nOut < nIn))
-        .orderBy(col("o_orderstatus"))
-    }
-  )
-
-  /** Shared by table_merge_cow and the streaming CDC spelling
-    * stream_upsert_cdc — both land the SAME final state (batch MERGE ≡
-    * the same changes applied as a change feed), so one contract. */
-  private lazy val mergeCowOracle: String =
-    """SELECT * FROM (
-      |  SELECT o_orderkey,
-      |    CASE WHEN o_orderkey % 10 < 2 THEN 0
-      |         ELSE CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END AS cents,
-      |    o_orderstatus
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT o_orderkey + 10000000 AS o_orderkey, CAST(42 AS BIGINT) AS cents,
-      |    'X' AS o_orderstatus
-      |  FROM orders WHERE o_orderkey % 100 = 0)
-      |ORDER BY o_orderkey""".stripMargin
-
-  /** Shared by table_restore (restore-after-delete ≡ the untouched
-    * table) and sql_time_travel (the archived pre-delete generation ≡
-    * the untouched table) — one contract. */
-  private lazy val fullOrdersAggOracle: String =
-    """SELECT o_orderstatus, COUNT(*) AS n,
-      |  CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-      |FROM orders
-      |GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus""".stripMargin
-
-  /** Shared by table_delete_cow and its GRAFT-SQL spelling
-    * sql_delete_cow — one contract, divergence impossible. */
-  private lazy val deleteCowOracle: String =
-    """SELECT o_orderstatus, COUNT(*) AS n,
-      |  CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-      |FROM orders
-      |WHERE NOT (o_orderkey % 10 < 3)
-      |GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-    // The looked-up row recomputed from the raw table; pruned_ok is the
-    // constant-TRUE quality-bound scheme (sim_ann_ivf precedent).
-    "bloom_point_lookup" ->
-      """SELECT o_orderkey,
-        |  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  o_orderstatus, TRUE AS pruned_ok
-        |FROM orders WHERE o_orderkey = (SELECT MIN(o_orderkey) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "bucketed_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n,
-        |  CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "zorder_scan" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  o_orderdate, TRUE AS files_pruned_ok
-        |FROM orders
-        |WHERE o_custkey BETWEEN 10 AND 40
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |ORDER BY o_orderkey""".stripMargin,
-    "zorder_scan3" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  o_orderdate, TRUE AS files_pruned_ok
-        |FROM orders
-        |WHERE o_custkey BETWEEN 10 AND 40
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) BETWEEN 1000000 AND 4000000
-        |ORDER BY o_orderkey""".stripMargin,
-    "table_merge_cow" -> mergeCowOracle,
-    "stream_upsert_cdc" -> mergeCowOracle,
-    // the full-sync final state: updated keeps + inserts, source-absent
-    // keys (o_orderkey % 10 >= 5) deleted
-    "table_merge_sync" ->
-      """SELECT * FROM (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 < 2 THEN 0
-        |         ELSE CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END AS cents,
-        |    o_orderstatus
-        |  FROM orders WHERE o_orderkey % 10 < 5
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000 AS o_orderkey, CAST(42 AS BIGINT) AS cents,
-        |    'X' AS o_orderstatus
-        |  FROM orders WHERE o_orderkey % 100 = 0)
-        |ORDER BY o_orderkey""".stripMargin,
-    "table_merge_cols" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 10 < 2
-        |       THEN LEAST(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT), o_orderkey * 31)
-        |       ELSE CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END AS cents,
-        |  o_orderstatus
-        |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    // legacy rows read NULL for the evolved column; matched rows carry
-    // the source's values, inserts their literal
-    "table_merge_evolve" ->
-      """SELECT * FROM (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 10 < 2 THEN 0
-        |         ELSE CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END AS cents,
-        |    o_orderstatus,
-        |    CASE WHEN o_orderkey % 10 < 2 THEN o_orderkey % 3
-        |         ELSE CAST(NULL AS BIGINT) END AS tier
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000 AS o_orderkey, CAST(42 AS BIGINT) AS cents,
-        |    'X' AS o_orderstatus, CAST(7 AS BIGINT) AS tier
-        |  FROM orders WHERE o_orderkey % 100 = 0)
-        |ORDER BY o_orderkey""".stripMargin,
-    // restore-after-delete ≡ the untouched table; the time-travel read
-    // of the pre-delete version shares the contract BY REFERENCE
-    "table_restore" -> fullOrdersAggOracle,
-    "sql_time_travel" -> fullOrdersAggOracle,
-    "sql_time_travel_ts" -> fullOrdersAggOracle,
-    "sql_table_changes" ->
-      """WITH base AS (
-        |  SELECT o_orderkey,
-        |    CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |    o_orderstatus
-        |  FROM orders
-        |)
-        |SELECT * FROM (
-        |  SELECT o_orderkey, cents, o_orderstatus, 'delete' AS _change_type, 1 AS span
-        |  FROM base WHERE o_orderkey % 10 < 3
-        |  UNION ALL
-        |  SELECT o_orderkey, cents, o_orderstatus, 'delete' AS _change_type, 2 AS span
-        |  FROM base WHERE o_orderkey % 10 = 5
-        |  UNION ALL
-        |  SELECT o_orderkey, cents + 7, o_orderstatus, 'insert' AS _change_type, 2 AS span
-        |  FROM base WHERE o_orderkey % 10 = 5
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, cents, o_orderstatus, 'insert' AS _change_type, 2 AS span
-        |  FROM base WHERE o_orderkey % 10 = 5
-        |)
-        |ORDER BY span, o_orderkey, _change_type""".stripMargin,
-    "table_delete_cow" -> deleteCowOracle,
-    "sql_delete_cow" -> deleteCowOracle,
-    "sql_delete_by_name" -> deleteCowOracle,
-    "table_update_cow" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 0
-        |                ELSE CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END) AS BIGINT) AS sum_cents
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "table_optimize_part" ->
-      """SELECT o_orderkey,
-        |  CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  TRUE AS untouched_ok, TRUE AS files_pruned_ok
-        |FROM orders
-        |WHERE o_orderstatus = 'F' AND o_orderkey BETWEEN 100 AND 500
-        |ORDER BY o_orderkey""".stripMargin,
-    "table_optimize_part_range" ->
-      """SELECT o_orderkey,
-        |  CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  CAST(o_orderkey % 4 + 8 AS INTEGER) AS hour,
-        |  TRUE AS untouched_ok, TRUE AS files_pruned_ok
-        |FROM orders
-        |WHERE o_orderkey % 4 + 8 >= 10 AND o_orderkey BETWEEN 100 AND 500
-        |ORDER BY o_orderkey""".stripMargin,
-    "table_sort_cluster" ->
-      """SELECT o_orderkey,
-        |  CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-        |  o_orderstatus, TRUE AS files_pruned_ok
-        |FROM orders
-        |WHERE o_orderkey BETWEEN 100 AND 500
-        |ORDER BY o_orderkey""".stripMargin,
-    "compact_scan" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  TRUE AS packed_ok
-        |FROM orders
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "orc_sink_roundtrip" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  ${sqlSum("l_extendedprice")} AS sum_price,
-         |  ${sqlSum("l_quantity")} AS sum_qty,
-         |  COUNT(*) AS n
-         |FROM lineitem WHERE l_returnflag <> 'N'
-         |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "orc_nested_roundtrip" ->
-      s"""SELECT label, COUNT(*) AS n,
-         |  (${sqlSum("embedding[1]::DOUBLE")} / COUNT(*)) AS avg_e1,
-         |  (${sqlSum("embedding[2]::DOUBLE")} / COUNT(*)) AS avg_e2,
-         |  CAST(SUM(vec_id) AS BIGINT) AS sum_id,
-         |  CAST(MAX(len(embedding)) AS INT) AS dim,
-         |  CAST(COUNT(*) AS BIGINT) AS n_map_ok
-         |FROM embeddings WHERE label <= 7
-         |GROUP BY label ORDER BY label""".stripMargin,
-    "orc_bucketer_roundtrip" ->
-      s"""SELECT event_type || '_' || (CASE WHEN value < 50 THEN 'small' ELSE 'big' END) AS bucket,
-         |  ${sqlSum("value")} AS sum_value, COUNT(*) AS n
-         |FROM events
-         |WHERE ends_with(event_type || '_' || (CASE WHEN value < 50 THEN 'small' ELSE 'big' END), '_big')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "csv_scan_roundtrip" ->
-      s"""SELECT o_orderstatus, ${sqlSum("o_totalprice")} AS sum_price,
-         |  MAX(o_orderdate) AS max_date, COUNT(*) AS n
-         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "json_scan_roundtrip" ->
-      s"""SELECT c_mktsegment, ${sqlSum("c_acctbal")} AS sum_bal,
-         |  COUNT(DISTINCT c_nationkey) AS n_nations, COUNT(*) AS n
-         |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "parquet_sink_roundtrip" ->
-      s"""SELECT o_orderpriority, ${sqlSum("o_totalprice")} AS sum_price, COUNT(*) AS n
-         |FROM orders WHERE o_orderstatus = 'F'
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // Ground truth for the evolved table: the original parquet always
-    // had the column; the even/odd split decides which rows read as
-    // legacy (null) after the merge.
-    "schema_evolution" ->
-      s"""SELECT c_mktsegment, COUNT(*) AS n,
-         |  CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
-         |  ${sqlSum("c_acctbal")} AS sum_bal,
-         |  CAST(SUM(CASE WHEN c_custkey % 2 = 1 THEN c_nationkey ELSE 0 END) AS BIGINT)
-         |    AS sum_nation
-         |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // Ground truth for the upsert: the merged table recomputed from the
-    // original parquet with the same update/insert expressions.
-    "merge_upsert" ->
-      s"""WITH src AS (
-         |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders),
-         |m AS (
-         |  SELECT o_orderkey, o_custkey,
-         |    CASE WHEN o_orderkey % 97 = 0 THEN o_totalprice + 1000 ELSE o_totalprice END
-         |      AS o_totalprice,
-         |    o_orderstatus
-         |  FROM src
-         |  UNION ALL
-         |  SELECT o_orderkey + 10000000, o_custkey, 42.5, o_orderstatus
-         |  FROM src WHERE o_orderkey % 499 = 0)
-         |SELECT o_orderstatus, COUNT(*) AS n,
-         |  ${sqlSum("o_totalprice")} AS sum_price,
-         |  CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
-         |FROM m GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // Ground truth for the stream→promote→register→SQL-by-name chain is
-    // the ORIGINAL events parquet.
-    "catalog_sink_table" ->
-      s"""SELECT event_type,
-         |  ${sqlSum("value")} AS sum_value,
-         |  COUNT(DISTINCT user_id) AS n_users,
-         |  CAST(SUM(event_id) AS BIGINT) AS sum_id,
-         |  COUNT(*) AS n
-         |FROM events WHERE event_type <> 'view'
-         |GROUP BY event_type ORDER BY event_type""".stripMargin
-  )
 }

@@ -737,7 +737,7 @@ object Optimize {
 
   /** The copy-on-write output layout: `nOut` files for an unpartitioned
     * table, or `nOut` hash-split across the partition dirs. */
-  private def cowLayout(df: DataFrame, partCols: Seq[String], nOut: Int): DataFrameWriter[Row] =
+  private[graft] def cowLayout(df: DataFrame, partCols: Seq[String], nOut: Int): DataFrameWriter[Row] =
     if (partCols.isEmpty) df.coalesce(nOut).write
     else df.repartition(nOut, partCols.map(col): _*).write.partitionBy(partCols: _*)
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, DedupClusters, Similarity, TextOps}
 import graft.streaming.CorpusMaintenance
-import graft.tools.ScaleRehearsal
+import graft.tools.ScaleFixtures
 
 /** SCALING.md promoted to a regression gate: the cheap heavy operators
   * re-run at m ∈ {1, 10} on the rehearsal's deterministic synthetic
@@ -61,14 +61,14 @@ class ScaleRegressionSpec extends AnyFunSuite {
   private def docs(m: Long): DataFrame = {
     val path = s"$workDir/docs_m$m"
     if (!new java.io.File(path).exists())
-      ScaleRehearsal.genDocs(spark, 5000L * m).write.mode(SaveMode.Overwrite).parquet(path)
+      ScaleFixtures.genDocs(spark, 5000L * m).write.mode(SaveMode.Overwrite).parquet(path)
     spark.read.parquet(path)
   }
 
   private def embPlanted(m: Long): DataFrame = {
     val path = s"$workDir/emb_m$m"
     if (!new java.io.File(path).exists())
-      ScaleRehearsal.genEmbeddingsPlanted(spark, 2000L * m)
+      ScaleFixtures.genEmbeddingsPlanted(spark, 2000L * m)
         .write.mode(SaveMode.Overwrite).parquet(path)
     spark.read.parquet(path)
   }

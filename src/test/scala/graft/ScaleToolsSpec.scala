@@ -100,7 +100,7 @@ class ScaleToolsSpec extends AnyFunSuite {
   }
 
   test("rehearsal-shape skew join: salted ≡ plain, and AQE's skew split actually fires") {
-    // The AQE-skew rehearsal's fixture shape (ScaleRehearsal.genSkewed*:
+    // The AQE-skew rehearsal's fixture shape (ScaleFixtures.genSkewed*:
     // 40% of the large side on ONE key) at CI scale, proving both halves
     // of the SCALING.md comparison: the salted join is semantically
     // identical to the plain one, and AQE's runtime skew split engages
@@ -113,8 +113,8 @@ class ScaleToolsSpec extends AnyFunSuite {
     // median — under the default 5x factor; at rehearsal scale (32
     // partitions) the same shape is ~20x and fires with defaults
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    val large = graft.tools.ScaleRehearsal.genSkewedLarge(s, 200000L, 2000L, hotPct = 40)
-    val small = graft.tools.ScaleRehearsal.genSkewedSmall(s, 2000L)
+    val large = graft.tools.ScaleFixtures.genSkewedLarge(s, 200000L, 2000L, hotPct = 40)
+    val small = graft.tools.ScaleFixtures.genSkewedSmall(s, 2000L)
     // the checksum folds `id` in so the large side's unique column rides
     // the shuffle: a keys-only hot partition is constant zeros, which
     // lz4 squeezes under any realistic skew threshold — real payloads

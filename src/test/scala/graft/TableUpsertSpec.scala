@@ -194,43 +194,6 @@ class TableUpsertSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming CDC apply (upsertSink): batches fold in order, versions collapse, replay converges") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = freshDir() + "/table"
-    val ck = freshDir()
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String, Long)]
-    val df = stream.toDF().toDF("id", "payload", "part", "ver")
-
-    // batch 1 bootstraps; carries two versions of key 1 — the higher wins
-    stream.addData((1L, "v1-old", "a", 1L), (1L, "v1-new", "a", 2L), (2L, "v2", "b", 1L))
-    val q1 = FileIO.upsertSink(df, dir, Seq("id"), "part", ck, versionCol = Some("ver"))
-    q1.awaitTermination()
-    val t1 = spark.read.parquet(dir).select("id", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(t1 === Map(1L -> "v1-new", 2L -> "v2"))
-
-    // batch 2 (restart from the same checkpoint): update key 2, insert key 3
-    stream.addData((2L, "v2-upd", "b", 2L), (3L, "v3", "a", 1L))
-    val q2 = FileIO.upsertSink(df, dir, Seq("id"), "part", ck, versionCol = Some("ver"))
-    q2.awaitTermination()
-    val t2 = spark.read.parquet(dir).select("id", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(t2 === Map(1L -> "v1-new", 2L -> "v2-upd", 3L -> "v3"))
-
-    // crash-replay convergence: re-applying batch 2's rows BY HAND (the
-    // at-least-once redelivery) leaves the table unchanged — exactly-once
-    // by idempotence
-    FileIO.upsertByKey(spark, dir,
-      Seq((2L, "v2-upd", "b", 2L), (3L, "v3", "a", 1L)).toDF("id", "payload", "part", "ver"),
-      Seq("id"), "part")
-    val t3 = spark.read.parquet(dir).select("id", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(t3 === t2, "replayed batch changed the table — idempotence broke")
-  }
-
   test("idempotence: re-applying the same upsert changes nothing") {
     val s = spark
     import s.implicits._

@@ -173,7 +173,7 @@ class TieredCompactionSpec extends AnyFunSuite {
     val st = freshDir(); val ck = freshDir()
     // the rehearsal generator: ~8% near-dups (ids ≥ 184 near-copy seeds
     // 0-15), so the maintained map carries REAL pairs through the tiers
-    val d = graft.tools.ScaleRehearsal.genDocs(spark, 200).localCheckpoint()
+    val d = graft.tools.ScaleFixtures.genDocs(spark, 200).localCheckpoint()
     CorpusMaintenance.bootstrap(spark, d.filter(col("doc_id") < 40), st)
     val ms = MemoryStream[(Long, String)]
     val q = CorpusMaintenance.sink(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** FileIO.writeZOrdered + FileIO.compact — layout operators, measured
   * like SortedLayoutSpec: pruning and file-count claims are read off
@@ -157,5 +158,31 @@ class ZOrderCompactionSpec extends AnyFunSuite {
       .agg(count(lit(1)), sum(col("l_quantity")))
       .collect()(0)
     assert(after === before, "compaction changed the data")
+  }
+
+  test("compact: a Hive-partitioned dir counts every file and keeps its partition dirs verbatim") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_compact_parts").toString
+    val (smallPath, packedPath) = (s"$root/small", s"$root/packed")
+    (0 until 400).map(i => (i.toLong, i * 3L, if (i % 2 == 0) "01" else "10"))
+      .toDF("id", "v", "part")
+      .repartition(6)
+      .write.partitionBy("part").parquet(smallPath)
+    def parquetFiles(dir: String): Seq[String] = {
+      val base = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).map(base.relativize(_).toString).toSeq
+    }
+    val k = parquetFiles(smallPath).size
+    assert(k > 2, s"fixture should spread each partition over several files, got $k")
+
+    val (nIn, nOut) = sources.FileIO.compact(spark, smallPath, packedPath, 1L << 30)
+    assert(nIn === k)
+    assert(nOut === 1)
+    // the partition dirs survive with their raw values ("01" is not re-typed to "1")
+    assert(parquetFiles(packedPath).map(_.takeWhile(_ != '/')).toSet === Set("part=01", "part=10"))
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    assert(rows(packedPath) === rows(smallPath))
   }
 }
