@@ -288,17 +288,9 @@ object TextIndex {
     new org.apache.hadoop.fs.Path(s"$indexDir/$ColspecFile")
 
   private def writeColspec(
-      spark: SparkSession, indexDir: String, idCol: String, textCol: String): Unit = {
-    val p = colspecPath(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/.$ColspecFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$idCol\t$textCol".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"could not commit colspec marker at $p")
-  }
+      spark: SparkSession, indexDir: String, idCol: String, textCol: String): Unit =
+    graft.streaming.EpochStore.writeAtomic(
+      spark, colspecPath(indexDir).toString, s"$idCol\t$textCol")
 
   private def colspecMatches(
       spark: SparkSession, indexDir: String, idCol: String, textCol: String): Boolean = {

@@ -297,7 +297,7 @@ object TextOps {
         CorpusMaintenance.bootstrap(spark, docs.filter(pmod(col("doc_id"), lit(3)) === 0), s)
         CorpusMaintenance.ingestBatch(spark, docs.filter(pmod(col("doc_id"), lit(3)) === 1), s)
         graft.streaming.EpochStore.minorFold(
-          spark, s, Seq("docs", "hashes", "shingles"), from = 1, upTo = 2)
+          spark, s, CorpusMaintenance.Stores, from = 1, upTo = 2)
         CorpusMaintenance.retireCompactedEpochs(spark, s, graceMs = 0)
         CorpusMaintenance.ingestBatch(spark, docs.filter(pmod(col("doc_id"), lit(3)) === 2), s)
         s

@@ -337,24 +337,23 @@ object FileIO {
     * — a deliberate listing-cost trade this build does not pay. */
   private[graft] final case class DataFileId(rel: String, full: String, identity: String)
 
-  /** Recursive data-file listing with all three identities, skipping
-    * underscore/dot-prefixed metadata (sidecars, _SUCCESS, .crc). */
-  private[graft] def dataFileIds(spark: SparkSession, path: String): Seq[DataFileId] = {
+  /** Every data file under `path`, recursively, skipping
+    * underscore/dot-prefixed metadata (sidecars, _SUCCESS, .crc) — the
+    * one walk [[graft.streaming.StreamSinks.dataFiles]]. */
+  private def dataFileStatuses(
+      spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.streaming.StreamSinks.dataFiles(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+  }
+
+  /** Recursive data-file listing with all three identities. */
+  private[graft] def dataFileIds(spark: SparkSession, path: String): Seq[DataFileId] = {
     val rootAbs = tableRootAbs(spark, path)
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(p: org.apache.hadoop.fs.Path): Iterator[DataFileId] =
-      fs.listStatus(p).iterator.flatMap { s =>
-        if (hidden(s.getPath.getName)) Iterator.empty
-        else if (s.isDirectory) walk(s.getPath)
-        else {
-          val rel = relPath(s.getPath.toString, rootAbs)
-          Iterator.single(
-            DataFileId(rel, s.getPath.toString, s"$rel#${s.getModificationTime}#${s.getLen}"))
-        }
-      }
-    walk(root).toSeq
+    dataFileStatuses(spark, path).map { s =>
+      val rel = relPath(s.getPath.toString, rootAbs)
+      DataFileId(rel, s.getPath.toString, s"$rel#${s.getModificationTime}#${s.getLen}")
+    }
   }
 
   /** Recursive data-file FULL paths keyed by root-relative identity,
@@ -370,18 +369,8 @@ object FileIO {
     * which a _spark_metadata manifest may restrict below the listing),
     * so the sized byte total is unchanged vs the per-file form. Same
     * hidden-skip rule as [[dataFileIds]]. */
-  private[graft] def dataFileLenByPath(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(p: org.apache.hadoop.fs.Path): Iterator[(String, Long)] =
-      fs.listStatus(p).iterator.flatMap { s =>
-        if (hidden(s.getPath.getName)) Iterator.empty
-        else if (s.isDirectory) walk(s.getPath)
-        else Iterator.single((s.getPath.toUri.getPath, s.getLen))
-      }
-    walk(root).toMap
-  }
+  private[graft] def dataFileLenByPath(spark: SparkSession, path: String): Map[String, Long] =
+    dataFileStatuses(spark, path).map(s => s.getPath.toUri.getPath -> s.getLen).toMap
 
   /** Total bytes of `df.inputFiles` restricted to `within`, via one
     * recursive listing (see [[dataFileLenByPath]]). `filter` applies to

@@ -104,7 +104,19 @@ private[graft] object Sidecar {
     val live = v +: extraLive.filterNot(_ == v)
     val body = (live.mkString(" ") +: fingerprint.toSeq.sorted).mkString("\n")
     graft.streaming.EpochStore.writeAtomic(spark, pointerPath(root), body)
-    val liveNames = live.map(x => s"v=$x").toSet
+    gcDeadVersions(spark, root, live.toSet, gcGraceMs)
+  }
+
+  /** Post-commit GC of every `v=N` dir under `root` outside `live`
+    * (superseded versions AND crash debris above the pointer), in ONE
+    * listing: each gets a `_DEAD` marker the first time it is seen dead
+    * (the supersede instant) and is deleted once that marker is older
+    * than `gcGraceMs` — in-flight readers that dereferenced the old
+    * pointer keep their files until then. Shared by every `v=N`-layout
+    * writer (these sidecars, the bucketed AggView). */
+  private[graft] def gcDeadVersions(
+      spark: SparkSession, root: String, live: Set[Int], gcGraceMs: Long): Unit = {
+    val liveNames = live.map(x => s"v=$x")
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
     if (fs.exists(rootP)) {

@@ -55,15 +55,6 @@ object AggView {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic small-file write — EpochStore's temp + rename(OVERWRITE)
-    * through FileContext, the pointer discipline. (A delete-then-rename
-    * spelling has a window where NO pointer exists: a crash or racing
-    * reader there sees (0, -1) and the next apply silently rebuilds the
-    * view from one batch's delta, losing the accumulated totals AND the
-    * replayed-batchId ledger.) */
-  private def writeAtomic(spark: SparkSession, path: String, body: String): Unit =
-    EpochStore.writeAtomic(spark, path, body)
-
   /** Grace before a superseded version dir is deleted: a reader that
     * resolved the pointer just before rapid successive applies must be
     * able to finish its scan (the EpochStore.retireCompacted posture). */
@@ -289,22 +280,13 @@ object AggView {
     val newMap = bmap ++ touched.map(_ -> vNew)
     val body = (s"$vNew $batchId $nBuckets" +: newMap.toSeq.sorted.map { case (b, v) => s"$b $v" })
       .mkString("\n")
-    writeAtomic(spark, pointerPath(dir), body)
+    // atomic (temp + rename OVERWRITE): a delete-then-rename spelling has
+    // a window with NO pointer, where a crash or racing reader sees
+    // (0, -1) and the next apply rebuilds the view from one batch's delta
+    EpochStore.writeAtomic(spark, pointerPath(dir), body)
     // post-commit GC: versions no bucket references anymore get a _DEAD
     // marker now (the supersede instant) and are swept once aged
-    val fs = fsOf(spark, new Path(dir))
-    val live = newMap.values.toSet + vNew
-    val now = System.currentTimeMillis()
-    (1 until vNew).filterNot(live).foreach { o =>
-      val d = new Path(versionDir(dir, o))
-      if (fs.exists(d)) {
-        val marker = new Path(s"${versionDir(dir, o)}/_DEAD")
-        if (!fs.exists(marker)) { val out = fs.create(marker, true); out.close() }
-        if (gcGraceMs <= 0 ||
-            now - fs.getFileStatus(marker).getModificationTime > gcGraceMs)
-          fs.delete(d, true)
-      }
-    }
+    graft.sources.Sidecar.gcDeadVersions(spark, dir, newMap.values.toSet + vNew, gcGraceMs)
     true
   }
 

@@ -42,65 +42,21 @@ import graft.operators.{DedupClusters, TextOps}
   *                       with different values is rejected rather than
   *                       silently mixing incompatible shingle indexes
   *
-  * EPOCH COMMIT (crash atomicity): one ingest = one epoch N = one map
-  * version N. The batch's docs, hashes, shingles, and merged map are all STAGED
-  * under their epoch-N paths (overwrite mode, so a crashed attempt's
-  * debris is cleared on replay), and none of it is visible until the
-  * single atomic commit point: the `_CURRENT_MAP` pointer flip. Every
-  * reader — including the next ingest's own dedup store and corpus scan
-  * — filters to epochs ≤ the pointer. A crash anywhere before the flip
-  * leaves the old epoch live and the staged files inert; at-least-once
-  * redelivery then recomputes the SAME epoch from committed state and
-  * re-stages over the debris. A redelivery after the flip admits nothing
-  * (the batch's hashes are now committed) and is a pure no-op. That is
-  * the full exactly-once argument — it holds mid-batch, not just for
+  * EPOCH COMMIT (crash atomicity): the shared [[EpochStore.Loop]]
+  * protocol — one ingest = one epoch N = one map version N, the batch's
+  * docs, hashes, shingles and merged map all staged, none of it visible
+  * until the single `_CURRENT_MAP` flip. A crash before the flip leaves
+  * the old epoch live and redelivery recomputes the SAME epoch; a
+  * redelivery after it admits nothing (the batch's hashes are now
+  * committed) and is a pure no-op — exactly-once mid-batch, not just for
   * whole-batch replay. CorpusMaintenanceSpec pins both crash positions.
-  *
-  * The pointer itself is written through the Hadoop FileSystem API
-  * (works on HDFS/S3A/local alike, matching the module's cluster
-  * posture) as temp-file + atomic rename — a crash mid-write can never
-  * leave a truncated pointer.
   */
-object CorpusMaintenance {
+object CorpusMaintenance
+    extends EpochStore.Loop(Seq("docs", "hashes", "shingles"), "docs", "corpus") {
 
   final case class IngestStats(nBatch: Long, nAdmitted: Long, nNewPairs: Long, mapVersion: Int)
 
-  private[streaming] val Stores = Seq("docs", "hashes", "shingles")
-  private def docsDir(stateDir: String, v: Int) = EpochStore.epochDir(s"$stateDir/docs", v)
-  private def hashesDir(stateDir: String, v: Int) = EpochStore.epochDir(s"$stateDir/hashes", v)
-  private def shinglesDir(stateDir: String, v: Int) = EpochStore.epochDir(s"$stateDir/shingles", v)
-  private[graft] def mapPath(stateDir: String, v: Int) = s"$stateDir/cluster_map_v$v"
-
-  /** Current live epoch / cluster-map version, 0 if none committed. */
-  def currentMapVersion(spark: SparkSession, stateDir: String): Int =
-    EpochStore.readIntPointer(spark, EpochStore.mainPointerPath(stateDir))
-
-  /** Atomic pointer flip — THE commit point of an epoch (temp file +
-    * atomic rename, see [[EpochStore.commitIntPointer]]). */
-  private[graft] def commitPointer(spark: SparkSession, stateDir: String, v: Int): Unit =
-    EpochStore.commitIntPointer(spark, EpochStore.mainPointerPath(stateDir), v)
-
-  /** Committed view of an epoch store: epochs ≤ the pointer only, with
-    * compacted history read from the base generation — see
-    * [[EpochStore.committed]]. Staged or crashed-orphan epochs are
-    * invisible. */
-  private def committed(spark: SparkSession, stateDir: String, store: String, upTo: Int): DataFrame =
-    EpochStore.committed(spark, stateDir, store, upTo)
-
-  /** The committed corpus (doc_id, text, …). */
-  def corpus(spark: SparkSession, stateDir: String): DataFrame =
-    committed(spark, stateDir, "docs", currentMapVersion(spark, stateDir))
-
-  /** The live cluster map (doc_id, rep); empty if no version yet. */
-  def currentMap(spark: SparkSession, stateDir: String): DataFrame =
-    mapAt(spark, stateDir, currentMapVersion(spark, stateDir))
-
-  private def mapAt(spark: SparkSession, stateDir: String, v: Int): DataFrame =
-    if (v == 0)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, rep LONG"))
-    else spark.read.parquet(mapPath(stateDir, v))
+  private def params(k: Int, threshold: Double) = Seq("k" -> k, "threshold" -> threshold)
 
   /** A POINTER-CONSISTENT view of the whole state: the live epoch is
     * resolved ONCE and every member serves from it, so a consumer that
@@ -115,43 +71,17 @@ object CorpusMaintenance {
   final case class StateSnapshot(version: Int, corpus: DataFrame, clusterMap: DataFrame)
 
   def snapshot(spark: SparkSession, stateDir: String): StateSnapshot = {
-    // The pointer and the base/minor metadata are separate reads, so a
-    // compaction committing between them can make committed() reject the
-    // just-read version as below the new base — a healthy store, stale
-    // resolve. Retry with a fresh pointer (bounded: each retry requires
-    // ANOTHER racing fold; persistent failure is real corruption and
-    // the last throw surfaces). ONLY that race retries — committed()
-    // types it as StaleViewException; bootstrap-missing and
-    // externally-deleted-epoch failures throw immediately.
-    var attempt = 0
-    while (true) {
-      val v = currentMapVersion(spark, stateDir)
-      require(v >= 1, s"no committed epoch at $stateDir — bootstrap first")
-      try
-        return StateSnapshot(v, committed(spark, stateDir, "docs", v), mapAt(spark, stateDir, v))
-      catch {
-        case _: EpochStore.StaleViewException if attempt < 5 =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    val (v, rows, map) = resolve(spark, stateDir)
+    StateSnapshot(v, rows, map)
   }
 
   /** TIME-TRAVEL read: the corpus exactly as committed at `version` — a
     * training run pinned to corpus@v stays reproducible while the loop
-    * keeps ingesting. The horizon is bounded by COMPACTION, exactly like
-    * table-format time travel is bounded by VACUUM: epochs folded into
-    * the base generation (or covered by a minor fold ending past `v`)
-    * can no longer be separated, and [[EpochStore.committed]] rejects
-    * such a version loudly (StaleViewException) instead of serving an
-    * approximation. Choose `compactEvery` with the travel horizon in
+    * keeps ingesting. Bounded by compaction (a folded-away version
+    * rejects loudly); choose `compactEvery` with the travel horizon in
     * mind. */
-  def corpusAt(spark: SparkSession, stateDir: String, version: Int): DataFrame = {
-    val live = currentMapVersion(spark, stateDir)
-    require(version >= 1 && version <= live,
-      s"corpusAt($version): committed versions are 1..$live")
-    committed(spark, stateDir, "docs", version)
-  }
+  def corpusAt(spark: SparkSession, stateDir: String, version: Int): DataFrame =
+    rowsAt(spark, stateDir, version)
 
   /** TIME-TRAVEL read of the cluster map at `version`. Map versions are
     * retained per [[retain]]'s `keep` policy — a swept version fails
@@ -168,30 +98,9 @@ object CorpusMaintenance {
     spark.read.parquet(mapPath(stateDir, version))
   }
 
-  /** Register the loop's state as POINTER-CONSISTENT temp views
-    * (`<prefix>_corpus`, `<prefix>_clusters`) so SQL users query the
-    * maintained state by NAME — both views resolve from ONE
-    * [[snapshot]], so a SQL join between them can never straddle a
-    * commit. Re-run after ingests to advance; returns the snapshot
-    * version the views serve. */
-  def registerViews(spark: SparkSession, stateDir: String, prefix: String): Int = {
-    val snap = snapshot(spark, stateDir)
-    snap.corpus.createOrReplaceTempView(s"${prefix}_corpus")
-    snap.clusterMap.createOrReplaceTempView(s"${prefix}_clusters")
-    snap.version
-  }
-
   /** Bootstrap the state from an initial corpus (runs the one full-graph
-    * CC the maintenance loop exists to never run again). Epoch 1.
-    *
-    * All mutators (`bootstrap`/[[ingestBatch]]/[[compactEpochs]]) pass
-    * the WRITER FENCE first ([[EpochStore.fence]]): a second concurrent
-    * maintainer — a double-scheduled loop, a forgotten old deployment —
-    * REJECTS loudly instead of interleaving pointer flips, and a crashed
-    * writer's stale lease is taken over after `leaseGraceMs` without a
-    * heartbeat. `writerId` defaults to the Spark applicationId, so one
-    * application's replays (gates, crash-recovery re-ingests) are always
-    * self-compatible. */
+    * CC the maintenance loop exists to never run again). Epoch 1 — see
+    * [[EpochStore.Loop.bootstrapEpoch]]. */
   def bootstrap(
       spark: SparkSession,
       initial: DataFrame,
@@ -200,34 +109,17 @@ object CorpusMaintenance {
       threshold: Double = 0.5,
       writerId: Option[String] = None,
       leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
-  ): Unit = {
-    val entryGen = EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.clearBasePointer(spark, stateDir)
-    EpochStore.writeParams(spark, stateDir,
-      Seq("k" -> k.toString, "threshold" -> threshold.toString))
-    // Writer-unique staging, promoted only after the commit-point
-    // re-fence: bootstrap's full-graph CC is the longest mutation of
-    // all, so a takeover mid-CC must leave the successor's store
-    // untouched — see ingestBatch.
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val stages = Seq(
-      docsDir(stateDir, 1), hashesDir(stateDir, 1),
-      shinglesDir(stateDir, 1), mapPath(stateDir, 1))
-      .map(dst => EpochStore.stagePath(stateDir, dst, wid) -> dst)
-    initial.write.mode(SaveMode.Overwrite).parquet(stages(0)._1)
-    initial.select(md5(lower(trim(col("text")))).as("h"))
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(stages(1)._1)
-    TextOps.hashedShingles(initial, k)
-      .write.mode(SaveMode.Overwrite).parquet(stages(2)._1)
-    val pairs = TextOps.ngramJaccardPairs(initial, k, threshold).select(col("d1"), col("d2"))
-    DedupClusters.connectedComponents(pairs)
-      .write.mode(SaveMode.Overwrite).parquet(stages(3)._1)
-    // generation-matched commit-point re-fence — never takes over
-    EpochStore.refence(spark, stateDir, writerId, entryGen)
-    EpochStore.promoteStaged(spark, stages)
-    commitPointer(spark, stateDir, 1)
-  }
+  ): Unit =
+    bootstrapEpoch(spark, stateDir, params(k, threshold), writerId, leaseGraceMs) {
+      case Seq(docs, hashes, shingles, map) =>
+        initial.write.mode(SaveMode.Overwrite).parquet(docs)
+        initial.select(md5(lower(trim(col("text")))).as("h"))
+          .distinct()
+          .write.mode(SaveMode.Overwrite).parquet(hashes)
+        TextOps.hashedShingles(initial, k).write.mode(SaveMode.Overwrite).parquet(shingles)
+        val pairs = TextOps.ngramJaccardPairs(initial, k, threshold).select(col("d1"), col("d2"))
+        DedupClusters.connectedComponents(pairs).write.mode(SaveMode.Overwrite).parquet(map)
+    }
 
   /** One ingest step (a pure batch function — call it from foreachBatch
     * or a scheduled job). `batch` must carry `doc_id` and `text`; rows
@@ -245,144 +137,58 @@ object CorpusMaintenance {
       writerId: Option[String] = None,
       leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
   ): IngestStats = {
-    val entryGen = EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.requireParams(spark, stateDir,
-      Seq("k" -> k.toString, "threshold" -> threshold.toString))
+    val entry = begin(spark, stateDir, params(k, threshold), writerId, leaseGraceMs)
     val nBatch = batch.count()
-    val v = currentMapVersion(spark, stateDir)
-    val store = committed(spark, stateDir, "hashes", v)
+    val v = entry.version
     // Materialize the admitted set once: it feeds the corpus append, the
     // hash append, and the pair generation.
-    val admitted = TextOps.incrementalDedup(batch, store).localCheckpoint()
+    val admitted = TextOps
+      .incrementalDedup(batch, EpochStore.committed(spark, stateDir, "hashes", v))
+      .localCheckpoint()
     val nAdmitted = admitted.count()
     if (nAdmitted == 0) return IngestStats(nBatch, 0, 0, v)
 
-    // Stage epoch v+1 under this WRITER's hidden staging dir (Overwrite
-    // clears the same writer's crashed debris); nothing is committed —
-    // or even visible at a final path — yet.
-    val next = v + 1
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val stages = Seq(
-      docsDir(stateDir, next), hashesDir(stateDir, next),
-      shinglesDir(stateDir, next), mapPath(stateDir, next))
-      .map(dst => EpochStore.stagePath(stateDir, dst, wid) -> dst)
-    admitted.drop("__hash")
-      .write.mode(SaveMode.Overwrite).parquet(stages(0)._1)
-    admitted.select(col("__hash").as("h"))
-      .write.mode(SaveMode.Overwrite).parquet(stages(1)._1)
-    // Only the BATCH is shingled from text; its rows join the persisted
-    // index (the whole point of the shingle store — ingest cost no
-    // longer re-reads the landed corpus text, see SCALING.md).
-    TextOps.hashedShingles(admitted.drop("__hash"), k)
-      .write.mode(SaveMode.Overwrite).parquet(stages(2)._1)
-
-    // Restricted (batch × corpus) candidate join over the committed
-    // shingle index plus THIS attempt's staged rows (read back from the
-    // staging path — ≡ the former committed-through-next view). Batch
-    // membership joins onto the index as a flag — never a driver-side
-    // id literal, so any batch size is fine.
-    val idxNow =
-      if (v == 0) spark.read.parquet(stages(2)._1)
-      else committed(spark, stateDir, "shingles", v)
-        .unionByName(spark.read.parquet(stages(2)._1))
-    val newPairs = TextOps
-      .ngramJaccardPairsIncrFromIndex(idxNow, admitted.select(col("doc_id")), threshold)
-      .select(col("d1"), col("d2")).localCheckpoint()
-    val nPairs = newPairs.count()
-
-    val merged =
-      if (v == 0) DedupClusters.connectedComponents(newPairs)
-      else DedupClusters.augment(currentMap(spark, stateDir), newPairs)
-    merged.write.mode(SaveMode.Overwrite).parquet(stages(3)._1)
-    // Commit-point re-fence THEN promote: a batch slow enough to outlive
-    // the lease grace may have been legitimately taken over — it must
-    // fail here with its staging inert, never having overwritten the
-    // successor's identically-numbered committed epoch. The re-fence is
-    // generation-matched and never takes over (a successor that committed
-    // and then crashed still fences this writer out); the pointer
-    // re-check below catches the one hole the lease can't — a concurrent
-    // SAME-ID mutation sharing this generation.
-    EpochStore.refence(spark, stateDir, writerId, entryGen)
-    require(currentMapVersion(spark, stateDir) == v,
-      s"ingest at $stateDir: the committed pointer moved from $v to " +
-        s"${currentMapVersion(spark, stateDir)} between entry and commit — a concurrent " +
-        "same-writer ingest is running (serialize mutations within one writer id)")
-    EpochStore.promoteStaged(spark, stages)
-    commitPointer(spark, stateDir, next)
-    IngestStats(nBatch, nAdmitted, nPairs, next)
+    commitEpoch(spark, stateDir, writerId, entry, v + 1) {
+      case Seq(docs, hashes, shingles, map) =>
+        admitted.drop("__hash").write.mode(SaveMode.Overwrite).parquet(docs)
+        admitted.select(col("__hash").as("h")).write.mode(SaveMode.Overwrite).parquet(hashes)
+        // Only the BATCH is shingled from text; its rows join the persisted
+        // index (the whole point of the shingle store — ingest cost no
+        // longer re-reads the landed corpus text, see SCALING.md).
+        TextOps.hashedShingles(admitted.drop("__hash"), k)
+          .write.mode(SaveMode.Overwrite).parquet(shingles)
+        // Restricted (batch × corpus) candidate join over the committed
+        // shingle index plus THIS attempt's staged rows (read back from
+        // the staging path). Batch membership joins onto the index as a
+        // flag — never a driver-side id literal, so any batch size is fine.
+        val idxNow =
+          if (v == 0) spark.read.parquet(shingles)
+          else EpochStore.committed(spark, stateDir, "shingles", v)
+            .unionByName(spark.read.parquet(shingles))
+        val newPairs = TextOps
+          .ngramJaccardPairsIncrFromIndex(idxNow, admitted.select(col("doc_id")), threshold)
+          .select(col("d1"), col("d2")).localCheckpoint()
+        val nPairs = newPairs.count()
+        foldPairs(spark, stateDir, v, newPairs).write.mode(SaveMode.Overwrite).parquet(map)
+        IngestStats(nBatch, nAdmitted, nPairs, v + 1)
+    }
   }
-
-  /** Fold committed epochs 1..`upTo` of the docs/hashes/shingles stores
-    * into one base generation each ([[EpochStore.compact]] — blue/green,
-    * single `_BASE_EPOCH` flip, crash-safe). Run it from the maintenance
-    * loop every N batches: without it the committed view of a long-running
-    * loop is a one-dir-per-ingest listing — the metadata/small-file
-    * bottleneck the reference's file-per-checkpoint layout foreshadows
-    * (`RowOrcBucketingSink.java:157-164`). Readers (including the next
-    * ingest) are unaffected: the committed view is identical before and
-    * after, which EpochCompactionSpec pins (maintained ≡ rebuild across a
-    * mid-history compaction) and the corpus_maintain/semantic_maintain
-    * oracles re-prove at fixture scale. */
-  def compactEpochs(
-      spark: SparkSession,
-      stateDir: String,
-      upTo: Int,
-      writerId: Option[String] = None,
-      leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
-  ): Unit = {
-    EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.compact(spark, stateDir, Stores, upTo, writerId, leaseGraceMs)
-  }
-
-  /** GC for epoch dirs superseded by [[compactEpochs]] (and older base
-    * generations): see [[EpochStore.retireCompacted]]. Returns deleted
-    * paths. */
-  def retireCompactedEpochs(
-      spark: SparkSession,
-      stateDir: String,
-      graceMs: Long = 10 * 60 * 1000L
-  ): Seq[String] =
-    EpochStore.retireCompacted(spark, stateDir, Stores, graceMs)
-
-  /** GC for superseded cluster-map versions: keep the live map plus
-    * `keep - 1` predecessors, delete older ones past the mtime grace
-    * window. Never touches docs/hashes EPOCHS ≤ the pointer that are not
-    * yet compacted (they ARE the corpus — [[compactEpochs]] +
-    * [[retireCompactedEpochs]] is the path that reclaims those), the
-    * pointers, or the live map — see [[Retention.retainVersioned]].
-    * Returns the deleted paths. */
-  def retain(
-      spark: SparkSession,
-      stateDir: String,
-      keep: Int,
-      graceMs: Long = 10 * 60 * 1000L
-  ): Seq[String] =
-    Retention.retainVersioned(
-      spark, stateDir, "cluster_map_v",
-      live = currentMapVersion(spark, stateDir), keep = keep, graceMs = graceMs)
 
   /** Streaming entry: every micro-batch of (doc_id, text, …) runs one
-    * [[ingestBatch]] step. foreachBatch gives at-least-once delivery;
-    * the epoch-commit protocol makes any redelivery — mid-batch crash
-    * included — converge to exactly-once state.
+    * [[ingestBatch]] step through the shared foreachBatch body
+    * ([[EpochStore.Loop.sinkVia]]).
     *
     * @param retainVersions when set, [[retain]] sweeps superseded map
-    *   versions after every ingest (keep = this many, including live),
-    *   so a long-running loop GCs itself instead of accumulating one
-    *   dead `cluster_map_v<N>` per batch. `retainGraceMs` is the mtime
-    *   window protecting versions a concurrent reader may still hold.
-    * @param compactEvery when set, [[compactEpochs]] folds the committed
-    *   epoch tail into the base generation whenever it reaches this
-    *   length (and [[retireCompactedEpochs]] sweeps what the grace
-    *   window allows), so the loop keeps its own committed listing at
-    *   O(compactEvery) directories forever — no external maintenance
-    *   job. Safe here BECAUSE foreachBatch serializes with ingest: the
-    *   single-writer assumption compaction documents holds by
-    *   construction.
+    *   versions after every ingest (keep = this many, including live).
+    *   `retainGraceMs` is the mtime window protecting versions a
+    *   concurrent reader may still hold.
+    * @param compactEvery when set, the committed epoch tail folds into
+    *   the base generation whenever it reaches this length, so the loop
+    *   keeps its own committed listing at O(compactEvery) directories.
     * @param majorEvery tiered-compaction escalation: when set alongside
     *   `compactEvery`, each fold is a cheap O(tail) MINOR generation and
     *   only every `majorEvery`-th escalates to the O(corpus) base
-    *   rewrite — see [[maybeCompact]]. */
+    *   rewrite — see [[EpochStore.maybeCompact]]. */
   def sink(
       stream: DataFrame,
       stateDir: String,
@@ -395,62 +201,6 @@ object CorpusMaintenance {
       compactEvery: Option[Int] = None,
       majorEvery: Option[Int] = None
   ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        ingestBatch(b.sparkSession, b, stateDir, k, threshold)
-        retainVersions.foreach(n => retain(b.sparkSession, stateDir, n, retainGraceMs))
-        compactEvery.foreach { every =>
-          maybeCompact(b.sparkSession, stateDir, Stores, every, retainGraceMs, majorEvery)
-        }
-        ()
-      }
-      .start()
-
-  /** Fold + sweep when the committed epoch tail reached `every` — shared
-    * by both loops' sinks.
-    *
-    * Without `majorEvery` (the default), every fold is a MAJOR compact:
-    * the whole committed history rewrites into one base generation —
-    * O(corpus) every `every` batches, amortized corpus/every per ingest.
-    * With `majorEvery = Some(g)`, compaction is TIERED: the loose epoch
-    * tail folds into a MINOR generation (cost O(tail) — see
-    * [[EpochStore.minorFold]]) and only every g-th fold escalates to the
-    * major rewrite, so the O(corpus) cost amortizes to
-    * corpus/(every·g) per ingest while the committed listing stays
-    * bounded at O(every + g) dirs per store — the policy a loop whose
-    * corpus dwarfs its batches should run. */
-  private[streaming] def maybeCompact(
-      spark: SparkSession,
-      stateDir: String,
-      stores: Seq[String],
-      every: Int,
-      graceMs: Long,
-      majorEvery: Option[Int] = None
-  ): Unit = {
-    require(every >= 1, s"compactEvery must be >= 1, got $every")
-    val live = currentMapVersion(spark, stateDir)
-    val base = EpochStore.baseEpoch(spark, stateDir)
-    majorEvery match {
-      case None =>
-        if (live - base >= every) {
-          EpochStore.compact(spark, stateDir, stores, live)
-          EpochStore.retireCompacted(spark, stateDir, stores, graceMs)
-          ()
-        }
-      case Some(g) =>
-        require(g >= 1, s"majorEvery must be >= 1, got $g")
-        val covered = math.max(base,
-          EpochStore.minorFolds(spark, stateDir).lastOption.map(_._2).getOrElse(0))
-        if (live - covered >= every) {
-          EpochStore.minorFold(spark, stateDir, stores, covered + 1, live)
-          if (EpochStore.minorFolds(spark, stateDir).size >= g)
-            EpochStore.compact(spark, stateDir, stores, live)
-          EpochStore.retireCompacted(spark, stateDir, stores, graceMs)
-          ()
-        }
-    }
-  }
+    sinkVia(stream, stateDir, checkpoint, trigger, retainVersions, retainGraceMs,
+      compactEvery, majorEvery)(b => ingestBatch(b.sparkSession, b, stateDir, k, threshold))
 }

@@ -1,13 +1,22 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.DedupClusters
 
-/** Shared machinery for the epoch-partitioned maintenance stores
-  * ([[CorpusMaintenance]]'s docs/hashes/shingles, [[SemanticMaintenance]]'s
-  * vecs/keys): pointer files, the committed read view, persisted index
-  * parameters, and EPOCH COMPACTION — the fold that keeps a long-running
+/** The epoch-partitioned maintenance stores and the one loop that drives
+  * them ([[CorpusMaintenance]]'s docs/hashes/shingles,
+  * [[SemanticMaintenance]]'s vecs/keys). [[Loop]] is everything the two
+  * loops share — the epoch commit ([[Loop.commitEpoch]]: stage →
+  * re-fence → pointer re-check → promote → `_CURRENT_MAP` flip), the
+  * pointer-consistent snapshot, time travel, views, compaction,
+  * retention and the foreachBatch sink with its [[maybeCompact]]
+  * policy; each loop supplies only its stores, `_PARAMS`, admission
+  * step, stage writers and pair generator. Below it: pointer files, the
+  * committed read view, persisted index parameters, the writer fence,
+  * and EPOCH COMPACTION — the fold that keeps a long-running
   * loop's committed listing at O(1) directories instead of one `epoch=N`
   * dir per ingest forever (the engine's answer to the reference's
   * file-per-checkpoint growth, `RowOrcBucketingSink.java:157-164`, where
@@ -84,17 +93,8 @@ object EpochStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read a one-line int pointer file; 0 if absent. */
-  private[streaming] def readIntPointer(spark: SparkSession, path: String): Int = {
-    val p = new Path(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) 0
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s.toInt
-    }
-  }
+  private[streaming] def readIntPointer(spark: SparkSession, path: String): Int =
+    readSmallFile(spark, path).fold(0)(_.trim.toInt)
 
   /** Temp file + rename(OVERWRITE) through FileContext: atomic on local
     * and HDFS, never observable half-written. The temp name is
@@ -113,16 +113,24 @@ object EpochStore {
     FileContext.getFileContext(dst.toUri, conf).rename(tmp, dst, Options.Rename.OVERWRITE)
   }
 
-  private def readSmallFile(spark: SparkSession, p: Path): String = {
+  /** The body of a small state file (pointer, lease, params), None when
+    * absent. */
+  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
     val fs = fsOf(spark, p)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    }
   }
 
-  /** Atomic pointer flip — THE commit point for both ingest epochs and
-    * compactions. */
-  private[streaming] def commitIntPointer(spark: SparkSession, path: String, v: Int): Unit =
-    writeAtomic(spark, path, v.toString)
+  private def deleteIfExists(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    if (fs.exists(p)) fs.delete(p, false)
+    ()
+  }
 
   /** Parse a lease body into (holderId, generation). A pre-generation
     * lease file (single line, written by an older build) parses as
@@ -135,11 +143,8 @@ object EpochStore {
   /** Current lease generation, 0 when no lease file exists. Mutators that
     * cannot call [[fence]] at their own entry (their caller already did)
     * observe this at entry and hand it to the commit-point [[refence]]. */
-  private[streaming] def leaseGen(spark: SparkSession, stateDir: String): Long = {
-    val p = new Path(leasePath(stateDir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) 0L else parseLease(readSmallFile(spark, p))._2
-  }
+  private[streaming] def leaseGen(spark: SparkSession, stateDir: String): Long =
+    readSmallFile(spark, leasePath(stateDir)).fold(0L)(parseLease(_)._2)
 
   /** WRITER FENCING for a maintenance state dir: assert this writer may
     * mutate it, then write/refresh the lease (`_WRITER_LEASE` — writer id
@@ -173,15 +178,13 @@ object EpochStore {
   ): Long = {
     val id = writerId.getOrElse(spark.sparkContext.applicationId)
     val p = new Path(leasePath(stateDir))
-    val fs = fsOf(spark, p)
-    if (fs.exists(p)) {
-      val (held, gen) = parseLease(readSmallFile(spark, p))
-      if (held == id) {
+    readSmallFile(spark, leasePath(stateDir)).map(parseLease) match {
+      case Some((held, gen)) if held == id =>
         // heartbeat refresh — same holder keeps its generation
         writeAtomic(spark, leasePath(stateDir), s"$id\n$gen")
         gen
-      } else {
-        val age = System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime
+      case Some((held, gen)) =>
+        val age = System.currentTimeMillis() - fsOf(spark, p).getFileStatus(p).getModificationTime
         if (age <= graceMs)
           throw new IllegalStateException(
             s"maintenance state at $stateDir is leased to writer '$held' " +
@@ -189,8 +192,8 @@ object EpochStore {
               s"maintainer '$id' would interleave pointer flips and corrupt the store — " +
               "stop the other loop, or wait out the grace window for a crashed writer")
         casTakeover(spark, stateDir, id, expectedGen = gen, graceMs)
-      }
-    } else casTakeover(spark, stateDir, id, expectedGen = 0L, graceMs)
+      case None => casTakeover(spark, stateDir, id, expectedGen = 0L, graceMs)
+    }
   }
 
   /** Compare-and-swap lease takeover. The acquire itself is made atomic
@@ -270,13 +273,12 @@ object EpochStore {
           s"already claimed by a racing writer ($claim exists) — writer '$id' loses the race " +
           "deterministically; retry after the winner's heartbeat or its claim ages out")
     try {
-      val pl = new Path(leasePath(stateDir))
-      if (fs.exists(pl)) {
-        val (heldNow, genNow) = parseLease(readSmallFile(spark, pl))
-        if (genNow != expectedGen)
-          throw new IllegalStateException(
-            s"maintenance state at $stateDir: lease advanced to generation $genNow " +
-              s"(holder '$heldNow') while writer '$id' raced to claim ${newGen} — takeover lost")
+      readSmallFile(spark, leasePath(stateDir)).map(parseLease).foreach {
+        case (heldNow, genNow) =>
+          if (genNow != expectedGen)
+            throw new IllegalStateException(
+              s"maintenance state at $stateDir: lease advanced to generation $genNow " +
+                s"(holder '$heldNow') while writer '$id' raced to claim ${newGen} — takeover lost")
       }
       writeAtomic(spark, leasePath(stateDir), s"$id\n$newGen")
       // Post-win GC of skipped stale claims: safe only NOW — any racer
@@ -309,13 +311,10 @@ object EpochStore {
       entryGen: Long
   ): Unit = {
     val id = writerId.getOrElse(spark.sparkContext.applicationId)
-    val p = new Path(leasePath(stateDir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p))
+    val (held, gen) = parseLease(readSmallFile(spark, leasePath(stateDir)).getOrElse(
       throw new IllegalStateException(
         s"maintenance state at $stateDir: lease vanished before the commit point — writer " +
-          s"'$id' cannot prove it still owns the store; aborting with its staging left inert")
-    val (held, gen) = parseLease(readSmallFile(spark, p))
+          s"'$id' cannot prove it still owns the store; aborting with its staging left inert")))
     if (held != id)
       throw new IllegalStateException(
         s"maintenance state at $stateDir is leased to writer '$held' but '$id' reached its " +
@@ -347,6 +346,31 @@ object EpochStore {
     s"$stateDir/.staging_${writerId.replaceAll("[^A-Za-z0-9_-]", "_")}/$rel"
   }
 
+  /** THE commit sequence every mutation of a state dir ends with (epoch
+    * ingest/bootstrap, major and minor folds): `stage` fills
+    * writer-unique staging paths for `finals` (in order); then, at the
+    * commit point, the generation-matched [[refence]] (never takes over:
+    * a batch or fold slow enough to outlive the lease grace may have been
+    * legitimately taken over, and must fail here with its staging inert
+    * rather than overwrite the successor's identically-numbered
+    * commits — even if that successor has since crashed), `recheck`
+    * (the pointers are still as read at entry: the one hole the lease
+    * cannot see, a concurrent SAME-ID mutation sharing this generation),
+    * [[promoteStaged]], and `flip`, the single pointer write that makes
+    * the promoted dirs visible. Returns what `stage` returns. */
+  private def stagedCommit[A](spark: SparkSession, stateDir: String, writerId: Option[String],
+      entryGen: Long, finals: Seq[String], recheck: () => Unit, flip: () => Unit)(
+      stage: Seq[String] => A): A = {
+    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
+    val pairs = finals.map(dst => stagePath(stateDir, dst, wid) -> dst)
+    val out = stage(pairs.map(_._1))
+    refence(spark, stateDir, writerId, entryGen)
+    recheck()
+    promoteStaged(spark, pairs)
+    flip()
+    out
+  }
+
   /** Move writer-unique staged dirs into their final paths. The caller
     * must have passed [[fence]] immediately before: once the fence says
     * this writer still owns the store, any pre-existing final dir is a
@@ -372,10 +396,8 @@ object EpochStore {
     * fence-break a successor that already took over. */
   def releaseLease(spark: SparkSession, stateDir: String, writerId: Option[String] = None): Unit = {
     val id = writerId.getOrElse(spark.sparkContext.applicationId)
-    val p = new Path(leasePath(stateDir))
-    val fs = fsOf(spark, p)
-    if (fs.exists(p) && parseLease(readSmallFile(spark, p))._1 == id) fs.delete(p, false)
-    ()
+    if (readSmallFile(spark, leasePath(stateDir)).exists(parseLease(_)._1 == id))
+      deleteIfExists(spark, leasePath(stateDir))
   }
 
   /** Compacted-through epoch B; 0 if this state was never compacted.
@@ -383,23 +405,17 @@ object EpochStore {
     * what [[retireCompacted]] gates base-superseded victims on (see the
     * starvation note there); a pre-timestamp file (bare int) parses fine
     * and falls back to file mtime for the commit time. */
-  def baseEpoch(spark: SparkSession, stateDir: String): Int = {
-    val p = new Path(basePointerPath(stateDir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) 0
-    else readSmallFile(spark, p).trim.split("\\s+")(0).toInt
-  }
+  def baseEpoch(spark: SparkSession, stateDir: String): Int =
+    readSmallFile(spark, basePointerPath(stateDir)).fold(0)(_.trim.split("\\s+")(0).toInt)
 
   /** When the live base generation committed (its `_BASE_EPOCH` flip);
     * 0 when never compacted. Falls back to the pointer file's mtime for
     * pre-timestamp files. */
   private[streaming] def baseCommitTime(spark: SparkSession, stateDir: String): Long = {
     val p = new Path(basePointerPath(stateDir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) 0L
-    else {
-      val toks = readSmallFile(spark, p).trim.split("\\s+")
-      if (toks.length > 1) toks(1).toLong else fs.getFileStatus(p).getModificationTime
+    readSmallFile(spark, p.toString).fold(0L) { body =>
+      val toks = body.trim.split("\\s+")
+      if (toks.length > 1) toks(1).toLong else fsOf(spark, p).getFileStatus(p).getModificationTime
     }
   }
 
@@ -410,13 +426,8 @@ object EpochStore {
     * instead make every committed read resolve through dead
     * generations). Old `<store>_base_v*` / `<store>_minor_*` dirs become
     * inert debris the next fold overwrites or supersedes. */
-  private[streaming] def clearBasePointer(spark: SparkSession, stateDir: String): Unit = {
-    Seq(basePointerPath(stateDir), minorFoldsPath(stateDir)).foreach { path =>
-      val p = new Path(path)
-      val fs = fsOf(spark, p)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-  }
+  private[streaming] def clearBasePointer(spark: SparkSession, stateDir: String): Unit =
+    Seq(basePointerPath(stateDir), minorFoldsPath(stateDir)).foreach(deleteIfExists(spark, _))
 
   /** Committed minor folds LIVE above the base epoch `b`: parsed from
     * `_MINOR_FOLDS` ("a-b ts" per line, ts = that range's commit time —
@@ -433,12 +444,10 @@ object EpochStore {
   private[streaming] def minorFoldsWithTs(
       spark: SparkSession, stateDir: String): Seq[(Int, Int, Long)] = {
     val p = new Path(minorFoldsPath(stateDir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val mtime = fs.getFileStatus(p).getModificationTime
+    readSmallFile(spark, p.toString).fold(Seq.empty[(Int, Int, Long)]) { body =>
+      val mtime = fsOf(spark, p).getFileStatus(p).getModificationTime
       val b = baseEpoch(spark, stateDir)
-      readSmallFile(spark, p).split("\n").toSeq
+      body.split("\n").toSeq
         .map(_.trim).filter(_.nonEmpty)
         .map { line =>
           val toks = line.split("\\s+")
@@ -468,7 +477,7 @@ object EpochStore {
     * inert debris a rerun overwrites.
     *
     * Amortized ingest cost with the two-level policy
-    * ([[CorpusMaintenance.maybeCompact]]'s `majorEvery`): minor folds
+    * ([[maybeCompact]]'s `majorEvery`): minor folds
     * every K batches cost O(K·batch); the major fold runs once per G
     * minors, so its O(corpus) rewrite amortizes to corpus/(K·G) per
     * ingest instead of corpus/K — at 100 TB the difference between
@@ -493,26 +502,21 @@ object EpochStore {
       s"minorFold must start at the first uncovered epoch ${covered + 1}, got $from " +
         "(gaps or overlaps would corrupt the committed view)")
     require(upTo >= from, s"minorFold empty range $from..$upTo")
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val staged = stores.map { store =>
-      val base = s"$stateDir/$store"
-      val dst = minorGenDir(stateDir, store, from, upTo)
-      val tmp = stagePath(stateDir, dst, wid)
-      spark.read.parquet((from to upTo).map(epochDir(base, _)): _*)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      tmp -> dst
+    stagedCommit(spark, stateDir, writerId, entryGen,
+      stores.map(minorGenDir(stateDir, _, from, upTo)),
+      recheck = () =>
+        require(baseEpoch(spark, stateDir) == b && minorFoldsWithTs(spark, stateDir) == existing,
+          s"minorFold at $stateDir: fold metadata changed between entry and commit — a " +
+            "concurrent same-writer mutation is running against this store (the single-writer " +
+            "contract requires serializing mutations within one writer id too)"),
+      flip = () =>
+        writeMinorFolds(spark, stateDir, existing :+ ((from, upTo, System.currentTimeMillis())))
+    ) { staged =>
+      stores.zip(staged).foreach { case (store, tmp) =>
+        spark.read.parquet((from to upTo).map(epochDir(s"$stateDir/$store", _)): _*)
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+      }
     }
-    // commit-point re-fence (generation-matched, never takes over) —
-    // same contract as [[compact]] — plus a belt-and-braces check that
-    // the fold metadata is exactly as read at entry (a SAME-ID concurrent
-    // mutation shares the lease generation and only this catches it)
-    refence(spark, stateDir, writerId, entryGen)
-    require(baseEpoch(spark, stateDir) == b && minorFoldsWithTs(spark, stateDir) == existing,
-      s"minorFold at $stateDir: fold metadata changed between entry and commit — a " +
-        "concurrent same-writer mutation is running against this store (the single-writer " +
-        "contract requires serializing mutations within one writer id too)")
-    promoteStaged(spark, staged)
-    writeMinorFolds(spark, stateDir, existing :+ ((from, upTo, System.currentTimeMillis())))
   }
 
   /** Committed view of a store: epochs ≤ `upTo` only, with everything at
@@ -590,43 +594,31 @@ object EpochStore {
     val b0 = baseEpoch(spark, stateDir)
     require(upTo <= live, s"compact upTo=$upTo beyond the committed pointer $live")
     require(upTo > b0, s"compact upTo=$upTo does not advance the base epoch $b0")
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val staged = stores.map { store =>
-      val dst = baseGenDir(stateDir, store, upTo)
-      val tmp = stagePath(stateDir, dst, wid)
-      committed(spark, stateDir, store, upTo)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      tmp -> dst
+    // the fold can outlive the lease grace window: the commit-point
+    // re-fence in stagedCommit is what keeps it from regressing
+    // `_BASE_EPOCH` past a successor's commits
+    stagedCommit(spark, stateDir, writerId, entryGen, stores.map(baseGenDir(stateDir, _, upTo)),
+      recheck = () =>
+        require(baseEpoch(spark, stateDir) == b0 &&
+            readIntPointer(spark, mainPointerPath(stateDir)) == live,
+          s"compact at $stateDir: pointers moved between entry and commit (base " +
+            s"${baseEpoch(spark, stateDir)} vs $b0, live " +
+            s"${readIntPointer(spark, mainPointerPath(stateDir))} vs $live) — a concurrent " +
+            "same-writer mutation is running against this store"),
+      flip = () =>
+        writeAtomic(spark, basePointerPath(stateDir), s"$upTo ${System.currentTimeMillis()}")
+    ) { staged =>
+      stores.zip(staged).foreach { case (store, tmp) =>
+        committed(spark, stateDir, store, upTo).write.mode(SaveMode.Overwrite).parquet(tmp)
+      }
     }
-    // Commit-point re-fence: the fold above can outlive the lease grace
-    // window, and a successor may have legitimately taken the store
-    // over — this writer must then FAIL here, with its writer-unique
-    // staging left inert (never having touched any final path). The
-    // re-fence is GENERATION-matched and never takes over, so even a
-    // successor that committed and then itself crashed (its lease now
-    // stale) still fences this writer out — committing entry-time values
-    // would regress `_BASE_EPOCH` past its commits. The pointer re-reads
-    // below catch the one case the lease can't: a same-id concurrent
-    // mutation sharing this generation.
-    refence(spark, stateDir, writerId, entryGen)
-    require(baseEpoch(spark, stateDir) == b0 &&
-        readIntPointer(spark, mainPointerPath(stateDir)) == live,
-      s"compact at $stateDir: pointers moved between entry and commit (base " +
-        s"${baseEpoch(spark, stateDir)} vs $b0, live " +
-        s"${readIntPointer(spark, mainPointerPath(stateDir))} vs $live) — a concurrent " +
-        "same-writer mutation is running against this store")
-    promoteStaged(spark, staged)
-    writeAtomic(spark, basePointerPath(stateDir), s"$upTo ${System.currentTimeMillis()}")
     // Drop the minor-folds file the new base supersedes. GC-only
     // cosmetics AFTER the one atomic commit above: the read path already
     // ignores minors ending ≤ the base epoch, so a crash between the
     // flip and this delete loses nothing. (Every live minor necessarily
     // ended ≤ upTo — the staging read's committed() view required it —
     // so post-flip there are no survivors to rewrite.)
-    val p = new Path(minorFoldsPath(stateDir))
-    val fs = fsOf(spark, p)
-    if (fs.exists(p)) fs.delete(p, false)
-    ()
+    deleteIfExists(spark, minorFoldsPath(stateDir))
   }
 
   /** GC after compaction: delete each store's `epoch=N` dirs with
@@ -647,8 +639,7 @@ object EpochStore {
     val liveTs = minorFoldsWithTs(spark, stateDir)
     val liveDirs = stores.flatMap(store =>
       liveTs.map { case (a, mb, _) => minorGenDir(stateDir, store, a, mb) }).toSet
-    val now = System.currentTimeMillis()
-    val cutoff = now - graceMs
+    val cutoff = System.currentTimeMillis() - graceMs
     // Grace is measured from EACH VICTIM'S OWN superseding commit — the
     // per-range timestamp recorded in `_MINOR_FOLDS` (resp. the commit
     // time inside `_BASE_EPOCH`) — NOT the shared pointer file's mtime:
@@ -663,6 +654,16 @@ object EpochStore {
     // mid-write.
     val baseTs = baseCommitTime(spark, stateDir)
     val baseCommitAged = graceMs <= 0 || baseTs == 0L || baseTs < cutoff
+    // one listing of the state root serves both root-level sweeps
+    val root = new Path(stateDir)
+    val rootFs = fsOf(spark, root)
+    val agedRootDirs =
+      if (!rootFs.exists(root)) Seq.empty
+      else
+        rootFs.listStatus(root).toSeq
+          .filter(st => st.isDirectory && st.getModificationTime < cutoff)
+    def sweep(victims: Seq[FileStatus]): Seq[String] =
+      victims.map { st => rootFs.delete(st.getPath, true); st.getPath.toString }
     val minorSweep = stores.flatMap { store =>
       // epoch dirs covered by a live minor fold (they read from the
       // minor generation now; justified by THAT range's commit time) ...
@@ -680,29 +681,17 @@ object EpochStore {
         // ... and minor dirs no live fold references (superseded by a
         // major — justified by the _BASE_EPOCH commit — or debris of a
         // crashed fold attempt)
-        val root = new Path(stateDir)
-        val fs = fsOf(spark, root)
-        if (!baseCommitAged || !fs.exists(root)) Seq.empty
+        if (!baseCommitAged) Seq.empty
         else
-          fs.listStatus(root).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${store}_minor_"))
-            .filter(st => !liveDirs.contains(s"$stateDir/${st.getPath.getName}"))
-            .filter(_.getModificationTime < cutoff)
-            .map { st => fs.delete(st.getPath, true); st.getPath.toString }
+          sweep(agedRootDirs.filter { st =>
+            val n = st.getPath.getName
+            n.startsWith(s"${store}_minor_") && !liveDirs.contains(s"$stateDir/$n")
+          })
       }
     }
     // crashed writers' staging debris: never referenced by any reader,
     // so the victim's own age is the right clock here
-    val stagingSweep = {
-      val root = new Path(stateDir)
-      val fs = fsOf(spark, root)
-      if (!fs.exists(root)) Seq.empty
-      else
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging_"))
-          .filter(_.getModificationTime < cutoff)
-          .map { st => fs.delete(st.getPath, true); st.getPath.toString }
-    }
+    val stagingSweep = sweep(agedRootDirs.filter(_.getPath.getName.startsWith(".staging_")))
     val baseSweep =
       if (b == 0 || !baseCommitAged) Seq.empty
       else
@@ -720,7 +709,7 @@ object EpochStore {
     * never mix: [[requireParams]] rejects a mismatched caller instead of
     * silently corrupting candidate generation. */
   private[streaming] def writeParams(
-      spark: SparkSession, stateDir: String, params: Seq[(String, String)]): Unit =
+      spark: SparkSession, stateDir: String, params: Seq[(String, Any)]): Unit =
     writeAtomic(spark, paramsPath(stateDir),
       params.map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
@@ -728,11 +717,8 @@ object EpochStore {
     * dir without the file (written by a pre-metadata version) is
     * accepted as-is — the caller owns consistency there, as before. */
   private[streaming] def requireParams(
-      spark: SparkSession, stateDir: String, params: Seq[(String, String)]): Unit = {
-    val p = new Path(paramsPath(stateDir))
-    val fs = fsOf(spark, p)
-    if (fs.exists(p)) {
-      val body = readSmallFile(spark, p)
+      spark: SparkSession, stateDir: String, params: Seq[(String, Any)]): Unit = {
+    readSmallFile(spark, paramsPath(stateDir)).foreach { body =>
       val stored = body.split("\n").toSeq
         .map(_.trim).filter(_.nonEmpty)
         .map { line =>
@@ -742,12 +728,279 @@ object EpochStore {
         .toMap
       params.foreach { case (k, v) =>
         stored.get(k).foreach { s =>
-          require(s == v,
+          require(s == v.toString,
             s"maintenance state at $stateDir was bootstrapped with $k=$s but this ingest " +
               s"passed $k=$v — mixing parameters corrupts the persisted index; pass the " +
               "bootstrap values (or bootstrap a fresh state dir)")
         }
       }
     }
+  }
+
+  /** Fold + sweep when the committed epoch tail reached `every` — the
+    * self-compaction step of every loop's sink.
+    *
+    * Without `majorEvery` (the default), every fold is a MAJOR compact:
+    * the whole committed history rewrites into one base generation —
+    * O(corpus) every `every` batches, amortized corpus/every per ingest.
+    * With `majorEvery = Some(g)`, compaction is TIERED: the loose epoch
+    * tail folds into a MINOR generation (cost O(tail) — see
+    * [[minorFold]]) and only every g-th fold escalates to the major
+    * rewrite, so the O(corpus) cost amortizes to corpus/(every·g) per
+    * ingest while the committed listing stays bounded at O(every + g)
+    * dirs per store — the policy a loop whose corpus dwarfs its batches
+    * should run. */
+  private[streaming] def maybeCompact(spark: SparkSession, stateDir: String,
+      stores: Seq[String], every: Int, graceMs: Long, majorEvery: Option[Int]): Unit = {
+    require(every >= 1, s"compactEvery must be >= 1, got $every")
+    majorEvery.foreach(g => require(g >= 1, s"majorEvery must be >= 1, got $g"))
+    val live = readIntPointer(spark, mainPointerPath(stateDir))
+    val base = baseEpoch(spark, stateDir)
+    // a tiered policy's tail starts past the last minor fold too
+    val covered = majorEvery.fold(base)(_ =>
+      math.max(base, minorFolds(spark, stateDir).lastOption.map(_._2).getOrElse(0)))
+    if (live - covered >= every) {
+      majorEvery match {
+        case None => compact(spark, stateDir, stores, live)
+        case Some(g) =>
+          minorFold(spark, stateDir, stores, covered + 1, live)
+          if (minorFolds(spark, stateDir).size >= g) compact(spark, stateDir, stores, live)
+      }
+      retireCompacted(spark, stateDir, stores, graceMs): Unit
+    }
+  }
+
+  /** Where a loop mutation stands after [[Loop.begin]]: the lease
+    * generation the commit-point re-fence must match, and the committed
+    * epoch the mutation derives from. */
+  private[streaming] final case class Entry(gen: Long, version: Int)
+
+  /** One continuous-maintenance loop over this layout: one ingest = one
+    * epoch N = one cluster-map version N, every store's `epoch=N` and
+    * `cluster_map_v<N>` staged under the writer's staging dir, promoted
+    * after the commit-point re-fence, and made visible by the single
+    * `_CURRENT_MAP` flip. Every reader — the next ingest's own admission
+    * store included — filters to epochs ≤ the pointer, so a crash before
+    * the flip leaves the old epoch live and the staging inert, and
+    * at-least-once redelivery recomputes the SAME epoch from committed
+    * state (after the flip it admits nothing: a no-op).
+    *
+    * A loop is its `Stores` (in staging order), the store holding its
+    * corpus rows, and that corpus's public name (`corpus`/`vectors`: the
+    * `<name>At` time-travel read and the `<prefix>_<name>` view). The
+    * loop objects add their `_PARAMS`, admission step, stage writers and
+    * pair generator through [[bootstrapEpoch]], [[begin]] and
+    * [[commitEpoch]]. */
+  abstract class Loop(
+      private[graft] val Stores: Seq[String],
+      rowsStore: String,
+      rowsName: String) {
+
+    private[graft] def mapPath(stateDir: String, v: Int) = s"$stateDir/cluster_map_v$v"
+
+    /** Current live epoch / cluster-map version, 0 if none committed. */
+    def currentMapVersion(spark: SparkSession, stateDir: String): Int =
+      readIntPointer(spark, mainPointerPath(stateDir))
+
+    /** Atomic pointer flip — THE commit point of an epoch (temp file +
+      * atomic rename, see [[writeAtomic]]). */
+    private[graft] def commitPointer(spark: SparkSession, stateDir: String, v: Int): Unit =
+      writeAtomic(spark, mainPointerPath(stateDir), v.toString)
+
+    /** The committed corpus rows — epochs ≤ the pointer only, see
+      * [[EpochStore.committed]]. */
+    def corpus(spark: SparkSession, stateDir: String): DataFrame =
+      committed(spark, stateDir, rowsStore, currentMapVersion(spark, stateDir))
+
+    /** The live cluster map (doc_id, rep); empty if no version yet. */
+    def currentMap(spark: SparkSession, stateDir: String): DataFrame =
+      mapAt(spark, stateDir, currentMapVersion(spark, stateDir))
+
+    private def mapAt(spark: SparkSession, stateDir: String, v: Int): DataFrame =
+      if (v == 0)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, rep LONG"))
+      else spark.read.parquet(mapPath(stateDir, v))
+
+    /** The POINTER-CONSISTENT (version, rows, map) behind each loop's
+      * `snapshot`: the live epoch is resolved ONCE and both surfaces serve
+      * from it. The pointer and the base/minor metadata are separate
+      * reads, so a compaction committing between them can make
+      * committed() reject the just-read version as below the new base — a
+      * healthy store, stale resolve. Retry with a fresh pointer (bounded:
+      * each retry requires ANOTHER racing fold; persistent failure is real
+      * corruption and the last throw surfaces). ONLY that race retries —
+      * committed() types it as StaleViewException; bootstrap-missing and
+      * externally-deleted-epoch failures throw immediately. */
+    protected def resolve(spark: SparkSession, stateDir: String): (Int, DataFrame, DataFrame) = {
+      var attempt = 0
+      while (true) {
+        val v = currentMapVersion(spark, stateDir)
+        require(v >= 1, s"no committed epoch at $stateDir — bootstrap first")
+        try return (v, committed(spark, stateDir, rowsStore, v), mapAt(spark, stateDir, v))
+        catch {
+          case _: StaleViewException if attempt < 5 =>
+            attempt += 1
+        }
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    /** TIME-TRAVEL read: the corpus rows exactly as committed at
+      * `version`. The horizon is bounded by COMPACTION, exactly like
+      * table-format time travel is bounded by VACUUM: epochs folded into
+      * the base generation (or covered by a minor fold ending past `v`)
+      * can no longer be separated, and [[EpochStore.committed]] rejects
+      * such a version loudly (StaleViewException) instead of serving an
+      * approximation. */
+    protected def rowsAt(spark: SparkSession, stateDir: String, version: Int): DataFrame = {
+      val live = currentMapVersion(spark, stateDir)
+      require(version >= 1 && version <= live,
+        s"${rowsName}At($version): committed versions are 1..$live")
+      committed(spark, stateDir, rowsStore, version)
+    }
+
+    /** Register the loop's state as POINTER-CONSISTENT temp views
+      * (`<prefix>_<corpus name>`, `<prefix>_clusters`) so SQL users query
+      * the maintained state by NAME — both views resolve from ONE
+      * snapshot, so a SQL join between them can never straddle a commit.
+      * Re-run after ingests to advance; returns the version served. */
+    def registerViews(spark: SparkSession, stateDir: String, prefix: String): Int = {
+      val (v, rows, map) = resolve(spark, stateDir)
+      rows.createOrReplaceTempView(s"${prefix}_$rowsName")
+      map.createOrReplaceTempView(s"${prefix}_clusters")
+      v
+    }
+
+    /** Entry of an ingest: pass the writer [[fence]] (a second live
+      * maintainer rejects; a crashed writer's lease is taken over after
+      * `leaseGraceMs`; `writerId` defaults to the Spark applicationId, so
+      * one application's replays are self-compatible), then CHECK the
+      * loop's `_PARAMS` against the bootstrap's. */
+    protected def begin(spark: SparkSession, stateDir: String, params: Seq[(String, Any)],
+        writerId: Option[String], leaseGraceMs: Long): Entry = {
+      val gen = fence(spark, stateDir, writerId, leaseGraceMs)
+      requireParams(spark, stateDir, params)
+      Entry(gen, currentMapVersion(spark, stateDir))
+    }
+
+    /** Bootstrap = epoch 1 of a fresh state: pass the writer fence, drop
+      * stale base/minor pointers (re-bootstrapping a compacted dir
+      * restarts from scratch), PIN the loop's `_PARAMS`, then
+      * [[commitEpoch]] — staging promoted only after the commit-point
+      * re-fence, so a takeover during the full-corpus pass (the longest
+      * mutation of all) leaves the successor's store untouched. */
+    protected def bootstrapEpoch(spark: SparkSession, stateDir: String,
+        params: Seq[(String, Any)], writerId: Option[String], leaseGraceMs: Long)(
+        stage: Seq[String] => Unit): Unit = {
+      val gen = fence(spark, stateDir, writerId, leaseGraceMs)
+      clearBasePointer(spark, stateDir)
+      writeParams(spark, stateDir, params)
+      commitEpoch(spark, stateDir, writerId, Entry(gen, currentMapVersion(spark, stateDir)), 1)(
+        stage)
+    }
+
+    /** THE epoch commit: `stage` writes epoch `next` of every store and
+      * its cluster map into the staged paths it is handed (`Stores` order,
+      * map last) and may read them back; then the commit-point re-fence,
+      * a check that the pointer still names `entry`'s epoch (a concurrent
+      * same-writer mutation moved it otherwise), promotion, and the
+      * `_CURRENT_MAP` flip to `next` — see [[stagedCommit]]. Returns what
+      * `stage` returns. */
+    protected def commitEpoch[A](spark: SparkSession, stateDir: String,
+        writerId: Option[String], entry: Entry, next: Int)(stage: Seq[String] => A): A =
+      stagedCommit(spark, stateDir, writerId, entry.gen,
+        Stores.map(s => epochDir(s"$stateDir/$s", next)) :+ mapPath(stateDir, next),
+        recheck = () => {
+          val now = currentMapVersion(spark, stateDir)
+          require(now == entry.version,
+            s"ingest at $stateDir: the committed pointer moved from ${entry.version} to $now " +
+              "between entry and commit — a concurrent same-writer ingest is running " +
+              "(serialize mutations within one writer id)")
+        },
+        flip = () => commitPointer(spark, stateDir, next))(stage)
+
+    /** Fold an ingest's verified pairs into the map of epoch `v`:
+      * full connected components on the first ingest into an empty
+      * store, [[DedupClusters.augment]] (affected components only)
+      * after. */
+    protected def foldPairs(
+        spark: SparkSession, stateDir: String, v: Int, pairs: DataFrame): DataFrame =
+      if (v == 0) DedupClusters.connectedComponents(pairs)
+      else DedupClusters.augment(currentMap(spark, stateDir), pairs)
+
+    /** Fold committed epochs 1..`upTo` of every store into one base
+      * generation each ([[EpochStore.compact]] — blue/green, single
+      * `_BASE_EPOCH` flip, crash-safe). Without it the committed view of
+      * a long-running loop is a one-dir-per-ingest listing — the
+      * metadata/small-file bottleneck the reference's file-per-checkpoint
+      * layout foreshadows (`RowOrcBucketingSink.java:157-164`). Readers
+      * (the next ingest included) are unaffected: the committed view is
+      * identical before and after, which EpochCompactionSpec pins and the
+      * corpus_maintain/semantic_maintain oracles re-prove at fixture
+      * scale. */
+    def compactEpochs(
+        spark: SparkSession,
+        stateDir: String,
+        upTo: Int,
+        writerId: Option[String] = None,
+        leaseGraceMs: Long = DefaultLeaseGraceMs
+    ): Unit = {
+      fence(spark, stateDir, writerId, leaseGraceMs)
+      compact(spark, stateDir, Stores, upTo, writerId, leaseGraceMs)
+    }
+
+    /** GC for epoch dirs superseded by [[compactEpochs]] (and older base
+      * generations): see [[EpochStore.retireCompacted]]. Returns deleted
+      * paths. */
+    def retireCompactedEpochs(
+        spark: SparkSession,
+        stateDir: String,
+        graceMs: Long = 10 * 60 * 1000L
+    ): Seq[String] =
+      retireCompacted(spark, stateDir, Stores, graceMs)
+
+    /** GC for superseded cluster-map versions: keep the live map plus
+      * `keep - 1` predecessors, delete older ones past the mtime grace
+      * window. Never touches store EPOCHS ≤ the pointer that are not yet
+      * compacted (they ARE the corpus — [[compactEpochs]] +
+      * [[retireCompactedEpochs]] reclaim those), the pointers, or the live
+      * map — see [[Retention.retainVersioned]]. Returns the deleted
+      * paths. */
+    def retain(
+        spark: SparkSession,
+        stateDir: String,
+        keep: Int,
+        graceMs: Long = 10 * 60 * 1000L
+    ): Seq[String] =
+      Retention.retainVersioned(
+        spark, stateDir, "cluster_map_v",
+        live = currentMapVersion(spark, stateDir), keep = keep, graceMs = graceMs)
+
+    /** The foreachBatch body of every loop's `sink`: each micro-batch runs
+      * one `ingest` step (at-least-once delivery; the epoch commit makes
+      * any redelivery — mid-batch crash included — converge to
+      * exactly-once state), then [[retain]] when `retainVersions` is set
+      * and [[maybeCompact]] when `compactEvery` is set, so a long-running
+      * loop GCs and compacts itself. Safe BECAUSE foreachBatch
+      * serializes them with ingest: the single-writer assumption holds by
+      * construction. */
+    protected def sinkVia(stream: DataFrame, stateDir: String, checkpoint: String,
+        trigger: Trigger, retainVersions: Option[Int], retainGraceMs: Long,
+        compactEvery: Option[Int], majorEvery: Option[Int])(
+        ingest: DataFrame => Unit): StreamingQuery =
+      stream.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(trigger)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          ingest(b)
+          retainVersions.foreach(n => retain(b.sparkSession, stateDir, n, retainGraceMs))
+          compactEvery.foreach { every =>
+            maybeCompact(b.sparkSession, stateDir, Stores, every, retainGraceMs, majorEvery)
+          }
+        }
+        .start()
   }
 }

@@ -255,24 +255,16 @@ object Optimize {
     * snapshot can slow a sweep down, never under-protect it. */
   private val ProtectedHeader = "#graft-protected-v1"
 
-  /** Temp-write + atomic rename (r18): the r17 in-place
-    * `fs.create(overwrite)` left a window where a crash mid-write — or a
-    * concurrent vacuum reading between create and close — saw an
-    * empty/truncated set as authoritative and swept files archived
-    * versions still reference. Now the only transient states a reader
-    * can observe are the OLD complete snapshot or (between the delete
-    * and the rename) no snapshot at all, which falls back to scanning. */
-  private def writeProtected(fs: FileSystem, path: String, set: Set[String]): Unit = {
-    fs.mkdirs(historyDir(path))
-    val tmp = new Path(historyDir(path),
-      s"_PROTECTED.tmp-${newToken()}")
-    val out = fs.create(tmp, true)
-    try out.write((ProtectedHeader +: set.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(protectedMarker(path), false)
-    require(fs.rename(tmp, protectedMarker(path)),
-      s"writeProtected($path): rename $tmp -> ${protectedMarker(path)} failed")
-  }
+  /** Temp-write + atomic rename(OVERWRITE) ([[EpochStore.writeAtomic]]):
+    * an in-place `fs.create(overwrite)` leaves a window where a crash
+    * mid-write — or a concurrent vacuum reading between create and
+    * close — sees an empty/truncated set as authoritative and sweeps
+    * files archived versions still reference, and a delete-then-rename
+    * leaves a window with no snapshot at all. A reader only ever sees
+    * the old complete snapshot or the new one. */
+  private def writeProtected(spark: SparkSession, path: String, set: Set[String]): Unit =
+    EpochStore.writeAtomic(spark, protectedMarker(path).toString,
+      (ProtectedHeader +: set.toSeq.sorted).mkString("\n"))
 
   private def readProtected(fs: FileSystem, path: String): Option[Set[String]] = {
     val m = protectedMarker(path)
@@ -328,7 +320,7 @@ object Optimize {
   private def rewriteOrDropProtected(
       spark: SparkSession, fs: FileSystem, path: String, extra: Set[String]): Unit =
     scanProtectedFilesStrict(spark, path) match {
-      case Some(set) => writeProtected(fs, path, set ++ extra)
+      case Some(set) => writeProtected(spark, path, set ++ extra)
       case None      => fs.delete(protectedMarker(path), false): Unit
     }
 
@@ -391,10 +383,11 @@ object Optimize {
     }
   }
 
-  private def writeVmax(fs: FileSystem, path: String, v: Long): Unit = {
-    val out = fs.create(vmaxMarker(path), true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
+  /** Atomic, like every pointer ([[EpochStore.writeAtomic]]): a torn or
+    * empty `_vmax` would read as 0, and after a KEEP 0 expiry ids would
+    * be reused — exactly what the marker exists to prevent. */
+  private def writeVmax(spark: SparkSession, path: String, v: Long): Unit =
+    EpochStore.writeAtomic(spark, vmaxMarker(path).toString, v.toString)
 
   /** Archive a retired manifest dir as the next history version — one
     * rename, never a copy. Version ids come off the persisted high-water
@@ -413,14 +406,14 @@ object Optimize {
       readVmax(fs, path)) + 1
     val entries = versionEntries(spark, retired).getOrElse(Nil).map(e => normKey(e.path)).toSet
     readProtected(fs, path) match {
-      case Some(cur) => writeProtected(fs, path, cur ++ entries)
+      case Some(cur) => writeProtected(spark, path, cur ++ entries)
       case None      => rewriteOrDropProtected(spark, fs, path, entries)
     }
     val dest = new Path(historyDir(path), s"v$next")
     require(fs.rename(retired, dest), s"archiveToHistory: rename $retired -> $dest failed")
     try fs.setTimes(dest, System.currentTimeMillis(), -1)
     catch { case _: UnsupportedOperationException => () } // best-effort on exotic FS
-    writeVmax(fs, path, next)
+    writeVmax(spark, path, next)
     next
   }
 

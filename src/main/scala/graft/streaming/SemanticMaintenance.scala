@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{DedupClusters, Similarity}
 
-/** Continuous SEMANTIC-dedup maintenance — the embedding sibling of
-  * [[CorpusMaintenance]]: as batches of vectors land, the loop keeps a
-  * semantic cluster map (connected components of the cosine ≥ threshold
-  * near-dup graph) current without ever re-pairing the landed corpus:
+/** Continuous SEMANTIC-dedup maintenance — the embedding loop over the
+  * shared epoch loop ([[EpochStore.Loop]]): as batches of vectors land,
+  * it keeps a semantic cluster map (connected components of the cosine ≥
+  * threshold near-dup graph) current without ever re-pairing the landed
+  * corpus:
   *
   *  1. identity dedup of the batch against landed ids (vec_id is the
   *     document key — a re-delivered or re-crawled vector never lands
@@ -26,8 +27,8 @@ import graft.operators.{DedupClusters, Similarity}
   *     per-cluster selection (dedup_semantic's `kept` flag) stays
   *     current for the whole corpus at per-batch cost.
   *
-  * State layout under `stateDir` (plain parquet; same epoch protocol as
-  * CorpusMaintenance — shared pointer helpers):
+  * State layout under `stateDir` (plain parquet; the [[EpochStore]]
+  * layout and epoch commit):
   *   vecs/epoch=N/       (vec_id, v) vector rows landed by epoch N
   *   keys/epoch=N/       (vec_id, band_idx, band_key) sign-LSH index rows
   *   <store>_base_v<B>/  compacted base generation ([[compactEpochs]])
@@ -40,12 +41,7 @@ import graft.operators.{DedupClusters, Similarity}
   *                       ingest with different values is rejected
   *                       instead of silently mixing incompatible keys
   *
-  * Crash atomicity is inherited verbatim: all of an epoch's stores stage
-  * under `epoch=N` in overwrite mode, the pointer flip
-  * ([[CorpusMaintenance.commitPointer]] — Hadoop-FS temp + atomic
-  * rename) is the single commit point, readers filter epochs ≤ pointer,
-  * and redelivery re-stages over debris or no-ops once the ids are
-  * committed. SemanticMaintenanceSpec pins maintained ≡ rebuild, replay
+  * SemanticMaintenanceSpec pins maintained ≡ rebuild, replay
   * idempotence, and staged-epoch invisibility.
   *
   * The maintained ≡ rebuild contract is cap-relative: the hot-bucket
@@ -55,82 +51,28 @@ import graft.operators.{DedupClusters, Similarity}
   * [[Similarity.embedNearDupLshIncr]]. Exact whenever no bucket crosses
   * the cap between bootstrap and now (all fixture gates).
   */
-object SemanticMaintenance {
+object SemanticMaintenance extends EpochStore.Loop(Seq("vecs", "keys"), "vecs", "vectors") {
 
   final case class IngestStats(nBatch: Long, nAdmitted: Long, nNewPairs: Long, mapVersion: Int)
 
-  private[streaming] val Stores = Seq("vecs", "keys")
-  private def vecsDir(stateDir: String, v: Int) = EpochStore.epochDir(s"$stateDir/vecs", v)
-  private def keysDir(stateDir: String, v: Int) = EpochStore.epochDir(s"$stateDir/keys", v)
-  private[graft] def mapPath(stateDir: String, v: Int) = s"$stateDir/cluster_map_v$v"
+  private def params(threshold: Double, bitsPerBand: Int, bands: Int) =
+    Seq("threshold" -> threshold, "bitsPerBand" -> bitsPerBand, "bands" -> bands)
 
-  private def committed(spark: SparkSession, stateDir: String, store: String, upTo: Int): DataFrame =
-    EpochStore.committed(spark, stateDir, store, upTo)
-
-  private def params(threshold: Double, bitsPerBand: Int, bands: Int): Seq[(String, String)] =
-    Seq(
-      "threshold" -> threshold.toString,
-      "bitsPerBand" -> bitsPerBand.toString,
-      "bands" -> bands.toString)
-
-  /** The committed vector corpus (vec_id, v). */
-  def corpus(spark: SparkSession, stateDir: String): DataFrame =
-    committed(spark, stateDir, "vecs",
-      CorpusMaintenance.currentMapVersion(spark, stateDir))
-
-  /** The live cluster map (doc_id, rep); empty if no version yet. */
-  def currentMap(spark: SparkSession, stateDir: String): DataFrame =
-    mapAt(spark, stateDir, CorpusMaintenance.currentMapVersion(spark, stateDir))
-
-  private def mapAt(spark: SparkSession, stateDir: String, v: Int): DataFrame =
-    if (v == 0)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, rep LONG"))
-    else spark.read.parquet(mapPath(stateDir, v))
-
-  /** Pointer-consistent (vectors, cluster map) view — the semantic twin
-    * of [[CorpusMaintenance.snapshot]]: one pointer read serves both
-    * surfaces, so a keep-one-per-cluster consumer can never join
-    * vectors@v+1 against map@v across a commit. */
+  /** Pointer-consistent (vectors, cluster map) view: one pointer read
+    * serves both surfaces, so a keep-one-per-cluster consumer can never
+    * join vectors@v+1 against map@v across a commit. */
   final case class StateSnapshot(version: Int, vectors: DataFrame, clusterMap: DataFrame)
 
   def snapshot(spark: SparkSession, stateDir: String): StateSnapshot = {
-    // bounded retry across a racing compaction — ONLY the typed
-    // stale-resolve race; see [[CorpusMaintenance.snapshot]]
-    var attempt = 0
-    while (true) {
-      val v = CorpusMaintenance.currentMapVersion(spark, stateDir)
-      require(v >= 1, s"no committed epoch at $stateDir — bootstrap first")
-      try
-        return StateSnapshot(v, committed(spark, stateDir, "vecs", v), mapAt(spark, stateDir, v))
-      catch {
-        case _: EpochStore.StaleViewException if attempt < 5 =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    val (v, rows, map) = resolve(spark, stateDir)
+    StateSnapshot(v, rows, map)
   }
 
   /** TIME-TRAVEL read: the vector store exactly as committed at
-    * `version` — same horizon contract as [[CorpusMaintenance.corpusAt]]
-    * (bounded by compaction; a folded-away version rejects loudly). */
-  def vectorsAt(spark: SparkSession, stateDir: String, version: Int): DataFrame = {
-    val live = CorpusMaintenance.currentMapVersion(spark, stateDir)
-    require(version >= 1 && version <= live,
-      s"vectorsAt($version): committed versions are 1..$live")
-    committed(spark, stateDir, "vecs", version)
-  }
-
-  /** Register the loop's state as pointer-consistent temp views
-    * (`<prefix>_vectors`, `<prefix>_clusters`) — the semantic twin of
-    * [[CorpusMaintenance.registerViews]]. Returns the served version. */
-  def registerViews(spark: SparkSession, stateDir: String, prefix: String): Int = {
-    val snap = snapshot(spark, stateDir)
-    snap.vectors.createOrReplaceTempView(s"${prefix}_vectors")
-    snap.clusterMap.createOrReplaceTempView(s"${prefix}_clusters")
-    snap.version
-  }
+    * `version` (bounded by compaction; a folded-away version rejects
+    * loudly). */
+  def vectorsAt(spark: SparkSession, stateDir: String, version: Int): DataFrame =
+    rowsAt(spark, stateDir, version)
 
   /** Bootstrap from an initial corpus — runs the one full banded
     * pair-join the loop exists to never run again. Epoch 1. */
@@ -143,27 +85,18 @@ object SemanticMaintenance {
       bands: Int = 64,
       writerId: Option[String] = None,
       leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
-  ): Unit = {
-    val entryGen = EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.clearBasePointer(spark, stateDir)
-    EpochStore.writeParams(spark, stateDir, params(threshold, bitsPerBand, bands))
-    // writer-unique staging promoted after the commit-point re-fence —
-    // see CorpusMaintenance.bootstrap
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val stages = Seq(vecsDir(stateDir, 1), keysDir(stateDir, 1), mapPath(stateDir, 1))
-      .map(dst => EpochStore.stagePath(stateDir, dst, wid) -> dst)
-    initial.write.mode(SaveMode.Overwrite).parquet(stages(0)._1)
-    Similarity.bandKeyRows(initial, bitsPerBand, bands)
-      .write.mode(SaveMode.Overwrite).parquet(stages(1)._1)
-    DedupClusters.connectedComponents(
-      Similarity.embedNearDupLsh(initial, threshold, bitsPerBand, bands)
-        .select(col("v1").as("d1"), col("v2").as("d2")))
-      .write.mode(SaveMode.Overwrite).parquet(stages(2)._1)
-    // generation-matched commit-point re-fence — never takes over
-    EpochStore.refence(spark, stateDir, writerId, entryGen)
-    EpochStore.promoteStaged(spark, stages)
-    CorpusMaintenance.commitPointer(spark, stateDir, 1)
-  }
+  ): Unit =
+    bootstrapEpoch(spark, stateDir, params(threshold, bitsPerBand, bands), writerId,
+        leaseGraceMs) {
+      case Seq(vecs, keys, map) =>
+        initial.write.mode(SaveMode.Overwrite).parquet(vecs)
+        Similarity.bandKeyRows(initial, bitsPerBand, bands)
+          .write.mode(SaveMode.Overwrite).parquet(keys)
+        DedupClusters.connectedComponents(
+          Similarity.embedNearDupLsh(initial, threshold, bitsPerBand, bands)
+            .select(col("v1").as("d1"), col("v2").as("d2")))
+          .write.mode(SaveMode.Overwrite).parquet(map)
+    }
 
   /** One ingest step — a pure batch function (call from foreachBatch or
     * a scheduled job). `batch` must carry (vec_id, v); rows whose vec_id
@@ -181,11 +114,11 @@ object SemanticMaintenance {
       writerId: Option[String] = None,
       leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
   ): IngestStats = {
-    val entryGen = EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.requireParams(spark, stateDir, params(threshold, bitsPerBand, bands))
+    val entry = begin(spark, stateDir, params(threshold, bitsPerBand, bands), writerId,
+      leaseGraceMs)
     val nBatch = batch.count()
-    val v = CorpusMaintenance.currentMapVersion(spark, stateDir)
-    val landedIds = committed(spark, stateDir, "vecs", v).select(col("vec_id"))
+    val v = entry.version
+    val landedIds = EpochStore.committed(spark, stateDir, "vecs", v).select(col("vec_id"))
     val admitted = batch
       .dropDuplicates("vec_id")
       .join(landedIds, Seq("vec_id"), "left_anti")
@@ -193,89 +126,33 @@ object SemanticMaintenance {
     val nAdmitted = admitted.count()
     if (nAdmitted == 0) return IngestStats(nBatch, 0, 0, v)
 
-    val next = v + 1
-    val wid = writerId.getOrElse(spark.sparkContext.applicationId)
-    val stages = Seq(vecsDir(stateDir, next), keysDir(stateDir, next), mapPath(stateDir, next))
-      .map(dst => EpochStore.stagePath(stateDir, dst, wid) -> dst)
-    admitted.write.mode(SaveMode.Overwrite).parquet(stages(0)._1)
-    // Only the BATCH is signatured; the corpus index is read back.
-    Similarity.bandKeyRows(admitted, bitsPerBand, bands)
-      .write.mode(SaveMode.Overwrite).parquet(stages(1)._1)
-
-    // committed index/vectors ∪ this attempt's staged rows (read back
-    // from the staging paths — ≡ the former committed-through-next view)
-    val keysNow = committed(spark, stateDir, "keys", v)
-      .unionByName(spark.read.parquet(stages(1)._1))
-    val vecsNow = committed(spark, stateDir, "vecs", v)
-      .unionByName(spark.read.parquet(stages(0)._1))
-    val newPairs = Similarity.verifyCosine(
-        Similarity.lshCandidatesIncrFromKeys(keysNow, admitted.select(col("vec_id"))),
-        vecsNow, threshold)
-      .select(col("v1").as("d1"), col("v2").as("d2"))
-      .localCheckpoint()
-    val nPairs = newPairs.count()
-
-    val merged =
-      if (v == 0) DedupClusters.connectedComponents(newPairs)
-      else DedupClusters.augment(currentMap(spark, stateDir), newPairs)
-    merged.write.mode(SaveMode.Overwrite).parquet(stages(2)._1)
-    // generation-matched commit-point re-fence (never takes over) +
-    // pointer re-check — see CorpusMaintenance.ingestBatch
-    EpochStore.refence(spark, stateDir, writerId, entryGen)
-    require(CorpusMaintenance.currentMapVersion(spark, stateDir) == v,
-      s"ingest at $stateDir: the committed pointer moved from $v to " +
-        s"${CorpusMaintenance.currentMapVersion(spark, stateDir)} between entry and commit " +
-        "— a concurrent same-writer ingest is running (serialize mutations within one " +
-        "writer id)")
-    EpochStore.promoteStaged(spark, stages)
-    CorpusMaintenance.commitPointer(spark, stateDir, next)
-    IngestStats(nBatch, nAdmitted, nPairs, next)
+    commitEpoch(spark, stateDir, writerId, entry, v + 1) {
+      case Seq(vecs, keys, map) =>
+        admitted.write.mode(SaveMode.Overwrite).parquet(vecs)
+        // Only the BATCH is signatured; the corpus index is read back.
+        Similarity.bandKeyRows(admitted, bitsPerBand, bands)
+          .write.mode(SaveMode.Overwrite).parquet(keys)
+        // committed index/vectors ∪ this attempt's staged rows (read back
+        // from the staging paths)
+        val keysNow = EpochStore.committed(spark, stateDir, "keys", v)
+          .unionByName(spark.read.parquet(keys))
+        val vecsNow = EpochStore.committed(spark, stateDir, "vecs", v)
+          .unionByName(spark.read.parquet(vecs))
+        val newPairs = Similarity.verifyCosine(
+            Similarity.lshCandidatesIncrFromKeys(keysNow, admitted.select(col("vec_id"))),
+            vecsNow, threshold)
+          .select(col("v1").as("d1"), col("v2").as("d2"))
+          .localCheckpoint()
+        val nPairs = newPairs.count()
+        foldPairs(spark, stateDir, v, newPairs).write.mode(SaveMode.Overwrite).parquet(map)
+        IngestStats(nBatch, nAdmitted, nPairs, v + 1)
+    }
   }
-
-  /** Fold committed epochs 1..`upTo` of the vecs/keys stores into one
-    * base generation each — see [[CorpusMaintenance.compactEpochs]]; the
-    * committed view (and so every restricted candidate join) is
-    * identical before and after. */
-  def compactEpochs(
-      spark: SparkSession,
-      stateDir: String,
-      upTo: Int,
-      writerId: Option[String] = None,
-      leaseGraceMs: Long = EpochStore.DefaultLeaseGraceMs
-  ): Unit = {
-    EpochStore.fence(spark, stateDir, writerId, leaseGraceMs)
-    EpochStore.compact(spark, stateDir, Stores, upTo, writerId, leaseGraceMs)
-  }
-
-  /** GC for epoch dirs superseded by [[compactEpochs]] and older base
-    * generations — see [[EpochStore.retireCompacted]]. */
-  def retireCompactedEpochs(
-      spark: SparkSession,
-      stateDir: String,
-      graceMs: Long = 10 * 60 * 1000L
-  ): Seq[String] =
-    EpochStore.retireCompacted(spark, stateDir, Stores, graceMs)
-
-  /** GC for superseded cluster-map versions — see [[Retention.retainVersioned]]. */
-  def retain(
-      spark: SparkSession,
-      stateDir: String,
-      keep: Int,
-      graceMs: Long = 10 * 60 * 1000L
-  ): Seq[String] =
-    Retention.retainVersioned(
-      spark, stateDir, "cluster_map_v",
-      live = CorpusMaintenance.currentMapVersion(spark, stateDir),
-      keep = keep, graceMs = graceMs)
 
   /** Streaming entry: every micro-batch of (vec_id, v) runs one
-    * [[ingestBatch]] step; at-least-once delivery converges to
-    * exactly-once state by the epoch-commit protocol. `compactEvery`
-    * makes the loop self-maintaining exactly like
-    * [[CorpusMaintenance.sink]]: whenever the committed epoch tail
-    * reaches that length it is folded into the base generation and the
-    * grace-window sweep runs — foreachBatch serializes it with ingest,
-    * so the single-writer assumption holds by construction. */
+    * [[ingestBatch]] step through the shared foreachBatch body
+    * ([[EpochStore.Loop.sinkVia]]: `retainVersions`, `compactEvery` and
+    * `majorEvery` make the loop self-maintaining). */
   def sink(
       stream: DataFrame,
       stateDir: String,
@@ -289,18 +166,7 @@ object SemanticMaintenance {
       compactEvery: Option[Int] = None,
       majorEvery: Option[Int] = None
   ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        ingestBatch(b.sparkSession, b, stateDir, threshold, bitsPerBand, bands)
-        retainVersions.foreach(n => retain(b.sparkSession, stateDir, n, retainGraceMs))
-        compactEvery.foreach { every =>
-          CorpusMaintenance.maybeCompact(
-            b.sparkSession, stateDir, Stores, every, retainGraceMs, majorEvery)
-        }
-        ()
-      }
-      .start()
+    sinkVia(stream, stateDir, checkpoint, trigger, retainVersions, retainGraceMs,
+      compactEvery, majorEvery)(b =>
+      ingestBatch(b.sparkSession, b, stateDir, threshold, bitsPerBand, bands))
 }

@@ -210,6 +210,24 @@ object StreamSinks {
       format: String = "orc",
       dryRun: Boolean = false,
       graceMs: Long = 10 * 60 * 1000L
+  ): Seq[String] =
+    // default retention: age out archived generations past the window so
+    // history never pins retired bytes forever by silent default
+    vacuumRetaining(spark, path, format, dryRun, graceMs,
+      retainMs = spark.conf
+        .getOption("spark.graft.history.retainMs").map(_.toLong)
+        .getOrElse(7L * 24 * 3600 * 1000))
+
+  /** [[vacuum]] with an explicit history retention window instead of the
+    * session's `spark.graft.history.retainMs` — the form a sink with its
+    * own window calls, so it never rewrites session conf. */
+  private[streaming] def vacuumRetaining(
+      spark: SparkSession,
+      path: String,
+      format: String,
+      dryRun: Boolean,
+      graceMs: Long,
+      retainMs: Long
   ): Seq[String] = {
     val root = new Path(path)
     requireNoActiveWriter(spark, path, "vacuum")
@@ -217,11 +235,6 @@ object StreamSinks {
     val committed = committedFiles(spark, path, format)
       .map(u => Path.getPathWithoutSchemeAndAuthority(new Path(u)).toString)
       .toSet
-    // default retention: age out archived generations past the window so
-    // history never pins retired bytes forever by silent default
-    val retainMs = spark.conf
-      .getOption("spark.graft.history.retainMs").map(_.toLong)
-      .getOrElse(7L * 24 * 3600 * 1000)
     // dryRun is a PREVIEW: report which versions a real sweep would
     // expire, but delete no history, rewrite no snapshot, reset no
     // grace clock (r18 — the r17 sweep expired history even on dryRun,
@@ -266,7 +279,7 @@ object StreamSinks {
     * are invisible to Spark readers, so their contents are never
     * manifest-listed — recursing into them would sweep a live sidecar as
     * orphans. */
-  private[streaming] def dataFiles(fs: FileSystem, root: Path): Seq[FileStatus] =
+  private[graft] def dataFiles(fs: FileSystem, root: Path): Seq[FileStatus] =
     fs.listStatus(root).toSeq.flatMap { st =>
       val name = st.getPath.getName
       if (name.startsWith("_") || name.startsWith(".")) Nil
@@ -578,11 +591,8 @@ object StreamSinks {
             // vacuum's auto-expiry with the sink's window as the policy
             // (versions younger than w stay restore targets, older ones
             // expire and their unique files sweep)
-            val key = "spark.graft.history.retainMs"
-            val was = spark.conf.getOption(key)
-            spark.conf.set(key, w.toString)
-            try vacuum(spark, path, "parquet", dryRun = false, graceMs = 0L): Unit
-            finally was.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+            vacuumRetaining(spark, path, "parquet", dryRun = false, graceMs = 0L,
+              retainMs = w): Unit
           }
         }
         refreshIndexes(spark, path, bloomKeys, postingsCols)

@@ -223,4 +223,61 @@ class TieredCompactionSpec extends AnyFunSuite {
       EpochStore.committed(spark, st, "docs", upTo = 1).count()
     }
   }
+
+  test("semantic loop's tiered sink: bounded listing, majors escalate, map rebuild-exact") {
+    import graft.streaming.SemanticMaintenance
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val st = freshDir(); val ck = freshDir()
+    val rnd = new scala.util.Random(17)
+    def unit(v: Seq[Double]): Seq[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(_ / n)
+    }
+    val seeds = (0 until 140).map(_ => unit(Seq.fill(64)(rnd.nextGaussian())))
+    // every 5th vector past the bootstrap set is a near-copy of an earlier
+    // one (cosine ≈ 0.99), so clusters grow across batches and tiers
+    val vecs = seeds.indices.map { i =>
+      if (i >= 20 && i % 5 == 0) i.toLong -> unit(seeds(i / 5).map(_ + 0.02 * rnd.nextGaussian()))
+      else i.toLong -> seeds(i)
+    }
+    SemanticMaintenance.bootstrap(spark, vecs.take(20).toDF("vec_id", "v"), st,
+      threshold = 0.9, bitsPerBand = 4, bands = 32)
+    val ms = MemoryStream[(Long, Seq[Double])]
+    val q = SemanticMaintenance.sink(
+      ms.toDF().toDF("vec_id", "v"), st, ck, threshold = 0.9, bitsPerBand = 4, bands = 32,
+      trigger = Trigger.ProcessingTime(0), retainVersions = Some(2),
+      retainGraceMs = 0, compactEvery = Some(2), majorEvery = Some(2))
+    def listing(): Int = {
+      def dirs(p: String, pfx: String): Int =
+        Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
+          .count(f => f.isDirectory && f.getName.startsWith(pfx))
+      dirs(s"$st/vecs", "epoch=") + dirs(st, "vecs_base_v") + dirs(st, "vecs_minor_")
+    }
+    var maxListing = 0
+    for (i <- 0 until 6) {
+      ms.addData(vecs.slice(20 + i * 20, 40 + i * 20))
+      q.processAllAvailable()
+      maxListing = math.max(maxListing, listing())
+    }
+    q.stop()
+    // 7 epochs through (compactEvery=2, majorEvery=2): minor folds at
+    // live 2/4/6, the second escalating to a major over epochs 1..4
+    assert(maxListing <= 5, s"tiered semantic sink listing reached $maxListing dirs")
+    assert(EpochStore.baseEpoch(spark, st) === 4, "no major fold escalated")
+    assert(EpochStore.minorFolds(spark, st) === Seq((5, 6)))
+    assert(SemanticMaintenance.currentMapVersion(spark, st) === 7)
+    val landed = SemanticMaintenance.corpus(spark, st)
+    assert(landed.count() === 140)
+    def mapOf(d: DataFrame): Map[Long, Long] =
+      d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val maintained = mapOf(SemanticMaintenance.currentMap(spark, st))
+    assert(maintained.get(135L).nonEmpty && maintained.get(135L) === maintained.get(27L),
+      "a near-copy ingested in the last batch did not join its seed's cluster")
+    val rebuilt = mapOf(DedupClusters.connectedComponents(
+      graft.operators.Similarity.embedNearDupLsh(landed, threshold = 0.9, bitsPerBand = 4,
+        bands = 32).select(col("v1").as("d1"), col("v2").as("d2"))))
+    assert(maintained === rebuilt, "tiered semantic sink's maintained map diverged from rebuild")
+  }
 }
