@@ -55,11 +55,27 @@ object Tables {
     new java.io.File(ScratchRoot).getAbsolutePath +
       s"/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
 
-  /** Scratch dir for gates that materialize an index/layout before
-    * querying it — ONE definition of the single-maintainer path
-    * discipline: keyed by fixture dir AND applicationId so a
-    * concurrently running suite + bench on one machine can never
-    * overwrite each other's layouts mid-scan. */
-  private[graft] def gateScratchDir(spark: SparkSession, sfDir: String, name: String): String =
-    scratchDir(sfDir, s"${name}_${spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}")
+  /** Scratch dir for gates that materialize an index/layout or keep
+    * setup state before querying it — ONE definition of the
+    * single-maintainer path discipline: keyed by fixture dir AND
+    * applicationId so a concurrently running suite + bench on one
+    * machine can never overwrite each other's layouts mid-scan. Every
+    * dir handed out is deleted once, when its application ends. */
+  private[graft] def gateScratchDir(spark: SparkSession, sfDir: String, name: String): String = {
+    val app = spark.sparkContext.applicationId
+    val dir = scratchDir(sfDir, s"${name}_${app.replaceAll("[^A-Za-z0-9]", "_")}")
+    appScratch.computeIfAbsent(app, _ => {
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          Option(appScratch.remove(app)).foreach(_.forEach(d =>
+            org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)): Unit))
+      })
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    }).add(dir)
+    dir
+  }
+
+  private val appScratch =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
 }

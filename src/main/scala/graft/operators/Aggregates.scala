@@ -57,7 +57,12 @@ object Aggregates {
           col("o_orderstatus").as("status"),
           floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"),
           pmod(col("o_orderkey"), lit(3)).as("b"))
-      val viewDir = java.nio.file.Files.createTempDirectory("agg_view_gate").toString
+      // a fresh view per call (under the application's scratch): every
+      // run folds all four batches for real
+      val viewDir = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get(Tables.gateScratchDir(spark, dir, "agg_view_gate"))),
+        "call").toString
       def batch(i: Int) = base.filter(col("b") === i).drop("b")
       graft.streaming.AggView.applyBatch(spark, viewDir, 0L, batch(0), Seq("status"), Seq("cents"))
       graft.streaming.AggView.applyBatch(spark, viewDir, 1L, batch(1), Seq("status"), Seq("cents"))

@@ -324,9 +324,7 @@ object GraphOps {
     // REFERENCE: both modes must land the identical integer-grid scores.
     "graph_pagerank_ckpt" -> { (spark, dir) =>
       if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(
-          s"${sys.props("java.io.tmpdir")}/graft_ckpt_" +
-            spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_"))
+        spark.sparkContext.setCheckpointDir(Tables.gateScratchDir(spark, dir, "ckpt"))
       val li = Tables.lineitem(spark, dir)
       val fwd = li.select((col("l_partkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       val edges = fwd
@@ -389,9 +387,7 @@ object GraphOps {
     // identical minimum-hop depths.
     "graph_bfs_depth_ckpt" -> { (spark, dir) =>
       if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(
-          s"${sys.props("java.io.tmpdir")}/graft_ckpt_" +
-            spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_"))
+        spark.sparkContext.setCheckpointDir(Tables.gateScratchDir(spark, dir, "ckpt"))
       val li = Tables.lineitem(spark, dir)
       val fwd = li.select((col("l_partkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       val edges = fwd

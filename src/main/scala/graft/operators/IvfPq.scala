@@ -339,11 +339,8 @@ object IvfPq {
           org.apache.spark.sql.functions.avg(acdExpr(pq.coarse, col("v"), col("cl"))),
           org.apache.spark.sql.functions.count(lit(1)))
         .collect()(0)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(driftBaseMarker(path), true)
-      try out.write(s"${r.getDouble(0)} ${r.getLong(1)}".getBytes("UTF-8"))
-      finally out.close()
+      graft.streaming.EpochStore.writeAtomic(spark, driftBaseMarker(path).toString,
+        s"${r.getDouble(0)} ${r.getLong(1)}")
     }
   }
 
@@ -395,17 +392,11 @@ object IvfPq {
       bound: Double = 1.5): DriftReport = {
     val conf = spark.conf.getOption("spark.graft.pq.driftRatioBound").map(_.toDouble)
     val b = conf.getOrElse(bound)
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = driftBaseMarker(basePath)
-    require(fs.exists(m),
-      s"driftReport($basePath): no _graft_drift_base sidecar — the base index predates " +
-        "drift tracking; rebuild with writeIndexedPq to record the training statistic")
-    val body = {
-      val in = fs.open(m)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    }
-    val parts = body.split("\\s+")
+    val body = graft.streaming.EpochStore.readSmallFile(spark, driftBaseMarker(basePath).toString)
+      .getOrElse(throw new IllegalArgumentException(
+        s"driftReport($basePath): no _graft_drift_base sidecar — the base index predates " +
+          "drift tracking; rebuild with writeIndexedPq to record the training statistic"))
+    val parts = body.trim.split("\\s+")
     val (baseMean, baseN) = (parts(0).toDouble, parts(1).toLong)
     val delta = spark.read.parquet(deltaPath)
     require(delta.columns.contains("acd"),

@@ -905,8 +905,7 @@ object Similarity {
       val state = semStateCache.computeIfAbsent(
         s"${spark.sparkContext.applicationId}:$dir",
         _ => {
-          val s = s"${sys.props("java.io.tmpdir")}/graft_semantic_maintain_" +
-            (dir + "_" + spark.sparkContext.applicationId).replaceAll("[^A-Za-z0-9]", "_")
+          val s = Tables.gateScratchDir(spark, dir, "semantic_maintain")
           SemanticMaintenance.bootstrap(spark, e.filter(pmod(col("vec_id"), lit(3)) === 0), s)
           SemanticMaintenance.ingestBatch(spark, e.filter(pmod(col("vec_id"), lit(3)) === 1), s)
           SemanticMaintenance.compactEpochs(spark, s, upTo = 2)

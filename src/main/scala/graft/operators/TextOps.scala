@@ -292,8 +292,7 @@ object TextOps {
       _ => {
         import graft.streaming.CorpusMaintenance
         val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        val s = s"${sys.props("java.io.tmpdir")}/graft_corpus_maintain_" +
-          (dir + "_" + spark.sparkContext.applicationId).replaceAll("[^A-Za-z0-9]", "_")
+        val s = Tables.gateScratchDir(spark, dir, "corpus_maintain")
         CorpusMaintenance.bootstrap(spark, docs.filter(pmod(col("doc_id"), lit(3)) === 0), s)
         CorpusMaintenance.ingestBatch(spark, docs.filter(pmod(col("doc_id"), lit(3)) === 1), s)
         graft.streaming.EpochStore.minorFold(
@@ -489,9 +488,7 @@ object TextOps {
     // REFERENCE: both modes must land the identical cluster map.
     "dedup_clusters_ckpt" -> { (spark, dir) =>
       if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(
-          s"${sys.props("java.io.tmpdir")}/graft_ckpt_" +
-            spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_"))
+        spark.sparkContext.setCheckpointDir(Tables.gateScratchDir(spark, dir, "ckpt"))
       val cc = DedupClusters
         .clusters(
           ngramJaccardPairs(Tables.documents(spark, dir), 3, 0.5).select(col("d1"), col("d2")),

@@ -64,20 +64,14 @@ private[graft] object Sidecar {
   /** The committed sidecar state, None before the first commit. The
     * pointer's first line is the live version list (newest first —
     * a single id for single-dir sidecars); the rest is the fingerprint. */
-  def current(spark: SparkSession, root: String): Option[Current] = {
-    val p = new Path(pointerPath(root))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  def current(spark: SparkSession, root: String): Option[Current] =
+    graft.streaming.EpochStore.readSmallFile(spark, pointerPath(root)).map { body =>
       val lines = body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
       require(lines.nonEmpty, s"malformed sidecar pointer at $root: empty")
       val live = lines.head.split("\\s+").map(_.toInt).toSeq
       val v = live.head
-      Some(Current(v, versionDir(root, v), lines.tail.toSet, live))
+      Current(v, versionDir(root, v), lines.tail.toSet, live)
     }
-  }
 
   /** Where the NEXT version's data goes — invisible until [[commit]].
     * Crash debris at the same path is overwritten by the writer

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** INCREMENTAL MATERIALIZED AGGREGATE VIEW — the classic warehouse IVM:
   * a per-key totals table (`SELECT keys, SUM(x)…, COUNT(*) GROUP BY
@@ -52,9 +51,6 @@ object AggView {
   private def pointerPath(dir: String) = s"$dir/_CURRENT"
   private def versionDir(dir: String, v: Int) = s"$dir/v=$v"
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Grace before a superseded version dir is deleted: a reader that
     * resolved the pointer just before rapid successive applies must be
     * able to finish its scan (the EpochStore.retireCompacted posture). */
@@ -94,18 +90,12 @@ object AggView {
     }
   }
 
-  private def legacyPointer(spark: SparkSession, dir: String): Option[(Int, Long)] = {
-    val p = new Path(pointerPath(dir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      val lines = body.split("\n").map(_.trim).filter(_.nonEmpty)
+  private def legacyPointer(spark: SparkSession, dir: String): Option[(Int, Long)] =
+    EpochStore.readSmallFile(spark, pointerPath(dir)).flatMap { body =>
+      val lines = body.trim.split("\n").map(_.trim).filter(_.nonEmpty)
       val toks = if (lines.length == 1) lines.head.split("\\s+") else Array.empty[String]
       if (toks.length == 2) Some((toks(0).toInt, toks(1).toLong)) else None
     }
-  }
 
   /** Per-batch partials: one row per key — `n` plus `sum_<c>` per
     * maintained column (LONG-exact: callers pass integral columns, e.g.
@@ -201,26 +191,19 @@ object AggView {
     * (0, -1, -1, empty) before bootstrap. committedNBuckets is -1 only
     * for pre-r14 pointers written before the modulus was pinned; the
     * next apply records it. */
-  def bucketedPointer(spark: SparkSession, dir: String): (Int, Long, Int, Map[Int, Int]) = {
-    val p = new Path(pointerPath(dir))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) (0, -1L, -1, Map.empty)
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(in.readAllBytes(), "UTF-8").trim
-        finally in.close()
-      val lines = body.split("\n").map(_.trim).filter(_.nonEmpty)
-      val head = lines.head.split("\\s+")
-      require(head.length == 2 || head.length == 3,
-        s"malformed bucketed AggView pointer at $dir: '${lines.head}'")
-      val m = lines.tail.map { l =>
-        val Array(b, v) = l.split("\\s+")
-        b.toInt -> v.toInt
-      }.toMap
-      (head(0).toInt, head(1).toLong, if (head.length == 3) head(2).toInt else -1, m)
+  def bucketedPointer(spark: SparkSession, dir: String): (Int, Long, Int, Map[Int, Int]) =
+    EpochStore.readSmallFile(spark, pointerPath(dir)).fold((0, -1L, -1, Map.empty[Int, Int])) {
+      body =>
+        val lines = body.trim.split("\n").map(_.trim).filter(_.nonEmpty)
+        val head = lines.head.split("\\s+")
+        require(head.length == 2 || head.length == 3,
+          s"malformed bucketed AggView pointer at $dir: '${lines.head}'")
+        val m = lines.tail.map { l =>
+          val Array(b, v) = l.split("\\s+")
+          b.toInt -> v.toInt
+        }.toMap
+        (head(0).toInt, head(1).toLong, if (head.length == 3) head(2).toInt else -1, m)
     }
-  }
 
   private def requireSameModulus(dir: String, committed: Int, asked: Int): Unit =
     require(committed == -1 || committed == asked,

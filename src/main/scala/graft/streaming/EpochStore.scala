@@ -115,7 +115,7 @@ object EpochStore {
 
   /** The body of a small state file (pointer, lease, params), None when
     * absent. */
-  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
+  private[graft] def readSmallFile(spark: SparkSession, path: String): Option[String] = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) None

@@ -26,11 +26,15 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   * Spark's fixed-location manifest; the reference's in-progress →
   * pending → final rename, RowOrcBucketingSink.java:153-213, with the
   * manifest as the final step):
-  *  1. OPEN ([[open]]): stop-the-writer guard (same as
-  *     [[StreamSinks.vacuum]]) — refuses while any active streaming
-  *     query in this session sinks here; whole-table ops also refuse on
-  *     any maintenance debris; the live log's latest batch id and
-  *     committed entries are read once;
+  *  1. OPEN + ACQUIRE ([[maintain]]): stop-the-writer guard (same
+  *     as [[StreamSinks.vacuum]]) — refuses while any active streaming
+  *     query in this session sinks here; then, for every op, a refusal
+  *     on mid-swap debris (no live `_spark_metadata`, or a `.bak`)
+  *     BEFORE the log opens. The op then takes ONE `_graft_scope_<token>`
+  *     lock — its partition scope, or the whole table, which overlaps
+  *     every scope; the younger of two overlapping claimants yields —
+  *     and reads the committed entries with the lock held. The lock is
+  *     released on success and on every in-JVM failure;
   *  2. HIT FILES ([[hitFiles]]): the files a rewrite must touch, found by
   *     a scan projecting the file path, split off the manifest entries
   *     with a loud scan-vs-manifest agreement check (OPTIMIZE selects by
@@ -39,18 +43,21 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   *     back (partition values re-attached from their Hive-style dir names
   *     as exact strings), transformed by the op's row function, and laid
   *     out copy-on-write;
-  *  4. LAND ([[land]]): every writer's output goes to an invisible
-  *     `_`-prefixed stage dir, then each data file moves to a fresh
-  *     `<prefix>-<uuid>-<i>.<fmt>` name in its final partition dir —
+  *  4. LAND ([[land]]): every writer's output goes to the op's
+  *     invisible `_graft_optimize_data_<token>` stage dir, then each
+  *     data file moves to a fresh `<prefix>-<uuid>-<i>.<fmt>` name in
+  *     its final partition dir —
   *     still invisible: nothing references it. A failure before the
   *     swap deletes the stage dir (its moved files are unreferenced
   *     orphans the graced vacuum reclaims);
-  *  5. SWAP ([[swapManifest]]): a replacement log is staged at
-  *     `_graft_optimize_stage_meta` with the writer's latest batch id
-  *     PRESERVED (a checkpointed writer restarted after the swap appends
-  *     batch N+1 normally; a replayed batch ≤ N is still skipped —
-  *     exactly-once intact). Staging is O(compactInterval) writes, never
-  *     O(batches): the snapshot lands as a manually-serialized
+  *  5. SWAP ([[swapManifest]]): under the per-table [[swapLock]] the
+  *     live manifest is re-read and the replacement — live − replaced +
+  *     added, refused if a replaced entry vanished — is staged at
+  *     `_graft_optimize_stage_meta_<token>` with the writer's latest
+  *     batch id PRESERVED (a checkpointed writer restarted after the
+  *     swap appends batch N+1 normally; a replayed batch ≤ N is still
+  *     skipped — exactly-once intact). Staging is O(compactInterval)
+  *     writes, never O(batches): the snapshot lands as a manually-serialized
   *     `.compact` file at the conf-consistent boundary ≤ latest plus
   *     empty tail batches (measured in SCALING.md r15 — the naive
   *     0..latest replay costs ~48 ms/batch, hours at a production sink's
@@ -65,7 +72,8 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   *     repair before serving reads after a crash, exactly as a
   *     half-restored database is fsck'd before use.
   * The append-only writers (the upsert bootstrap, the compacting sink's
-  * batches) land and then commit by `log.add` instead of a swap.
+  * batches) land and then commit by `log.add` instead of a swap — one
+  * step, [[appendBatch]].
   *
   * Retired files stay on disk, unreferenced — invisible to manifest
   * readers. They are NOT immediately vacuum-able: every swap ARCHIVES
@@ -122,76 +130,89 @@ object Optimize {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[streaming] def metaDir(path: String) = new Path(s"$path/_spark_metadata")
-  private[streaming] def bakDir(path: String) = new Path(s"$path/_spark_metadata.bak")
-  private[streaming] def stageMetaDir(path: String) = new Path(s"$path/_graft_optimize_stage_meta")
-  private[streaming] def stageDataDir(path: String) = new Path(s"$path/_graft_optimize_data")
+  private def metaDir(path: String) = new Path(s"$path/_spark_metadata")
+  private def bakDir(path: String) = new Path(s"$path/_spark_metadata.bak")
 
-  /** Per-operation stage dirs + scope lock (r18 — concurrent DISJOINT
-    * partition-scoped maintenance): a scoped OPTIMIZE stages under
-    * token-keyed names so two jobs on disjoint scopes never collide on
-    * the filesystem, and announces its scope in a `_graft_scope_<token>`
-    * lock file (the selected partition sub-paths, one per line) so an
-    * OVERLAPPING scope refuses loudly at acquire time. Only the manifest
-    * swap itself serializes (a per-table JVM lock around the one-rename
-    * commit point, with the replacement entries re-merged against the
-    * LIVE manifest under that lock — so the second committer keeps the
-    * first's work). All names are `_`-prefixed: invisible to readers,
+  /** Per-operation stage dirs + scope lock: every rewrite stages under
+    * token-keyed names, so two ops never collide on the filesystem, and
+    * announces its claim in a `_graft_scope_<token>` lock file — the
+    * selected partition sub-paths one per line, or [[WholeTable]]. Only
+    * the manifest swap itself serializes ([[swapLock]]). The empty token
+    * names the legacy untokened dirs, which only [[repairOptimize]]
+    * still touches. All names are `_`-prefixed: invisible to readers,
     * skipped by vacuum's orphan walk. */
-  private[streaming] def stageMetaDirT(path: String, token: String) =
-    new Path(s"$path/_graft_optimize_stage_meta_$token")
-  private[streaming] def stageDataDirT(path: String, token: String) =
-    new Path(s"$path/_graft_optimize_data_$token")
+  private val StageMetaPrefix = "_graft_optimize_stage_meta"
+  private val StageDataPrefix = "_graft_optimize_data"
   private val ScopePrefix = "_graft_scope_"
-  private[streaming] def scopeMarker(path: String, token: String) =
-    new Path(path, s"$ScopePrefix$token")
+  private def tokened(prefix: String, token: String) =
+    if (token.isEmpty) prefix else s"${prefix}_$token"
+  private def stageMetaDir(path: String, token: String) =
+    new Path(path, tokened(StageMetaPrefix, token))
+  private def stageDataDir(path: String, token: String) =
+    new Path(path, tokened(StageDataPrefix, token))
+  private def scopeMarker(path: String, token: String) = new Path(path, s"$ScopePrefix$token")
+
+  /** The token a maintenance dir or lock name carries ("" for a legacy
+    * untokened stage dir), None for any other name. */
+  private def tokenOf(name: String): Option[String] =
+    Seq(ScopePrefix, StageMetaPrefix, StageDataPrefix).collectFirst {
+      case pre if name.startsWith(pre) => name.stripPrefix(pre).stripPrefix("_")
+    }
+
+  /** A whole-table op's lock line: it overlaps every scope. (A partition
+    * sub-path is `k=v[/k=v...]`, never this.) */
+  private val WholeTable = "*"
 
   /** Per-table swap serialization (same-JVM: the local[...] regime; on a
     * multi-driver deployment the scope locks still keep DATA disjoint
-    * and the manifest rename is the single commit point). */
+    * and the manifest rename is the single commit point). Every swap,
+    * every repair and every live-manifest read of a maintenance op runs
+    * under it, so in-JVM ops never see another op's mid-swap state. */
   private val swapLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def swapLock(path: String): Object =
     swapLocks.computeIfAbsent(
       Path.getPathWithoutSchemeAndAuthority(new Path(path)).toString, _ => new Object)
 
-  /** Write-then-check scope acquisition: create our lock, then re-list
-    * every `_graft_scope_*` and back off (delete our lock, refuse) when
-    * an overlapping one is OLDER (mtime, ties by token) — the younger
-    * claimant always yields, so two racing acquires never both proceed
-    * on a shared partition. Returns the token. */
-  private def acquireScope(
-      fs: FileSystem, path: String, subs: Set[String], op: String): String = {
-    require(
-      !fs.exists(bakDir(path)) && !fs.exists(stageMetaDir(path)) && !fs.exists(stageDataDir(path)),
-      s"$op($path): whole-table stage/backup dirs present (an unscoped maintenance op is " +
-        "in flight or died) — run repairOptimize first")
+  /** ACQUIRE, write-then-check: create our lock (`scope` None claims the
+    * whole table), then re-list every `_graft_scope_*` and back off
+    * (delete our lock, refuse) when an overlapping one is OLDER (mtime,
+    * ties by token) — the younger claimant always yields, so of two
+    * racing overlapping acquires exactly one proceeds, and a dead op's
+    * lock refuses every overlapping op until repaired. Returns the
+    * token. */
+  private def acquire(
+      spark: SparkSession, fs: FileSystem, path: String, scope: Option[Set[String]],
+      op: String): String = {
     val token = newToken()
     val m = scopeMarker(path, token)
+    val claim = scope.getOrElse(Set(WholeTable))
     val out = fs.create(m, false)
-    try out.write(subs.toSeq.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
+    try out.write(claim.toSeq.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
     val mine = fs.getFileStatus(m)
     fs.listStatus(new Path(path))
       .filter(st => st.getPath.getName.startsWith(ScopePrefix) && st.getPath.getName != m.getName)
       .foreach { st =>
-        val theirs = {
-          val in = fs.open(st.getPath)
-          val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-          body.split("\n").map(_.trim).filter(_.nonEmpty).toSet
-        }
-        val overlap = theirs.intersect(subs)
-        if (overlap.nonEmpty) {
-          val iWin = mine.getModificationTime < st.getModificationTime ||
-            (mine.getModificationTime == st.getModificationTime &&
-              m.getName < st.getPath.getName)
-          if (!iWin) {
-            fs.delete(m, false)
-            throw new IllegalArgumentException(
-              s"$op($path): partition scope overlaps in-flight scoped maintenance " +
-                s"(${st.getPath.getName}; shared: ${overlap.toSeq.sorted.take(3).mkString(", ")})" +
-                " — disjoint scopes run concurrently; rerun after it completes, or " +
-                s"repairOptimize(path, \"${st.getPath.getName.stripPrefix(ScopePrefix)}\") " +
-                "if it died")
-          }
+        // a lock released since our listing claims nothing
+        val theirs = EpochStore.readSmallFile(spark, st.getPath.toString).toSeq
+          .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty).toSet
+        val overlaps = theirs(WholeTable) || claim(WholeTable) || theirs.exists(claim)
+        val theyWin = st.getModificationTime < mine.getModificationTime ||
+          (st.getModificationTime == mine.getModificationTime && st.getPath.getName < m.getName)
+        if (overlaps && theyWin) {
+          fs.delete(m, false)
+          val repair = s"repairOptimize(path, \"${st.getPath.getName.stripPrefix(ScopePrefix)}\")"
+          throw new IllegalArgumentException(scope match {
+            case None =>
+              s"$op($path): maintenance dirs/locks present (${st.getPath.getName}) — another " +
+                s"maintenance op is in flight; rerun after it completes, or $repair if it died"
+            case Some(_) =>
+              val shared =
+                if (theirs(WholeTable)) "the whole table"
+                else theirs.intersect(claim).toSeq.sorted.take(3).mkString(", ")
+              s"$op($path): partition scope overlaps in-flight maintenance " +
+                s"(${st.getPath.getName}; shared: $shared) — disjoint scopes run concurrently; " +
+                s"rerun after it completes, or $repair if it died"
+          })
         }
       }
     token
@@ -266,21 +287,17 @@ object Optimize {
     EpochStore.writeAtomic(spark, protectedMarker(path).toString,
       (ProtectedHeader +: set.toSeq.sorted).mkString("\n"))
 
-  private def readProtected(fs: FileSystem, path: String): Option[Set[String]] = {
-    val m = protectedMarker(path)
-    if (!fs.exists(m)) None
-    else {
-      val body =
-        try {
-          val in = fs.open(m)
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        } catch {
-          // unreadable snapshot (torn write, checksum mismatch, FS
-          // hiccup): not authoritative — scan fallback, never a crash
-          // and never an under-protecting partial read
-          case _: java.io.IOException => return None
-        }
-      val lines = body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  private def readProtected(spark: SparkSession, path: String): Option[Set[String]] = {
+    val body =
+      try EpochStore.readSmallFile(spark, protectedMarker(path).toString)
+      catch {
+        // unreadable snapshot (torn write, checksum mismatch, FS
+        // hiccup): not authoritative — scan fallback, never a crash
+        // and never an under-protecting partial read
+        case _: java.io.IOException => None
+      }
+    body.flatMap { b =>
+      val lines = b.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
       // header missing ⇒ empty or garbled or pre-header debris: not
       // authoritative, fall back to the ground-truth scan
       if (lines.headOption.contains(ProtectedHeader)) Some(lines.drop(1).toSet) else None
@@ -329,10 +346,8 @@ object Optimize {
     * One `_PROTECTED` read when the snapshot exists; the full
     * O(versions) manifest scan only for pre-snapshot tables. */
   private[streaming] def historyProtectedFiles(
-      spark: SparkSession, path: String): Set[String] = {
-    val fs = fsFor(spark, path)
-    readProtected(fs, path).getOrElse(scanProtectedFiles(spark, path))
-  }
+      spark: SparkSession, path: String): Set[String] =
+    readProtected(spark, path).getOrElse(scanProtectedFiles(spark, path))
 
   /** Monotonic version high-water marker: the largest version id EVER
     * issued, persisted so `GRAFT EXPIRE HISTORY KEEP 0` can never cause
@@ -373,15 +388,9 @@ object Optimize {
     }
   }
 
-  private def readVmax(fs: FileSystem, path: String): Long = {
-    val m = vmaxMarker(path)
-    if (!fs.exists(m)) 0L
-    else {
-      val in = fs.open(m)
-      val body = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      try body.toLong catch { case _: NumberFormatException => 0L }
-    }
-  }
+  private def readVmax(spark: SparkSession, path: String): Long =
+    EpochStore.readSmallFile(spark, vmaxMarker(path).toString)
+      .flatMap(_.trim.toLongOption).getOrElse(0L)
 
   /** Atomic, like every pointer ([[EpochStore.writeAtomic]]): a torn or
     * empty `_vmax` would read as 0, and after a KEEP 0 expiry ids would
@@ -403,9 +412,9 @@ object Optimize {
     ensureStamped(fs, path): Unit
     val next = math.max(
       versionDirs(fs, path).lastOption.map(_._1).getOrElse(0L),
-      readVmax(fs, path)) + 1
+      readVmax(spark, path)) + 1
     val entries = versionEntries(spark, retired).getOrElse(Nil).map(e => normKey(e.path)).toSet
-    readProtected(fs, path) match {
+    readProtected(spark, path) match {
       case Some(cur) => writeProtected(spark, path, cur ++ entries)
       case None      => rewriteOrDropProtected(spark, fs, path, entries)
     }
@@ -417,7 +426,7 @@ object Optimize {
     next
   }
 
-  private[streaming] def sinkLog(spark: SparkSession, logPath: String): FileStreamSinkLog =
+  private def sinkLog(spark: SparkSession, logPath: String): FileStreamSinkLog =
     new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, logPath)
 
   /** The file's partition sub-path relative to the table root — "" for
@@ -494,9 +503,9 @@ object Optimize {
         "partition-level surgery is directory pruning, not a row rewrite; data columns only")
   }
 
-  /** PARTITION-SCOPED maintenance selection (r17, TYPED r18): split the
-    * committed entries into (selected, untouched) by evaluating `pred`
-    * against each PARTITION's values, decoded from the Hive dir names
+  /** PARTITION-SCOPED maintenance selection (r17, TYPED r18): the
+    * partition sub-paths of the committed entries whose values satisfy
+    * `pred`, evaluated against each PARTITION's values, decoded from the Hive dir names
     * and then CAST through the type the column's values infer — the
     * same lattice partition discovery applies (long → double → date →
     * string). r17 evaluated the raw strings, so `WHERE hour >= '10'`
@@ -526,7 +535,7 @@ object Optimize {
       partCols: Seq[String],
       pred: Column,
       op: String
-  ): (Seq[SinkFileStatus], Seq[SinkFileStatus], Set[String]) = {
+  ): Set[String] = {
     require(partCols.nonEmpty,
       s"$op($path): WHERE partition scope needs a Hive-partitioned table — " +
         "this table has no partition dirs")
@@ -586,14 +595,11 @@ object Optimize {
           case _ => ()
         }
       }
-    val selected = filtered
+    filtered
       .select(col("__graft_sub"))
       .collect()
       .map(_.getString(0))
       .toSet
-    val (inScope, outScope) =
-      all.partition(e => selected.contains(partitionSubPath(e.path, rootAbs)))
-    (inScope, outScope, selected)
   }
 
   /** Partition-value type inference (r18) — the discovery lattice over
@@ -627,61 +633,94 @@ object Optimize {
     }
   }
 
-  /** Open a table for maintenance: stop-the-writer, then — for a
-    * WHOLE-TABLE op — the debris refusal ([[requireNoDebris]]), then the
-    * live log read: latest batch id + committed entries. A SCOPED op
-    * skips the debris refusal: scoped ops coexist with other scoped ops,
-    * and [[acquireScope]] arbitrates overlap and refuses whole-table
-    * debris. The refusal runs before the log opens: opening a sink log
-    * creates a missing `_spark_metadata`, which would hide a crashed
-    * swap from repair. */
-  private def open(
-      spark: SparkSession, path: String, op: String, wholeTable: Boolean
-  ): (FileSystem, Long, Seq[SinkFileStatus]) = {
+  /** One rewrite's hold on the table: its token (naming its stage dirs
+    * `_graft_optimize_{data,stage_meta}_<token>` and its lock), the
+    * live latest batch id at open, the committed entries read WITH THE
+    * LOCK HELD, and the partition scope it claimed (None: the whole
+    * table). */
+  private final case class Held(
+      fs: FileSystem, token: String, latestId: Long, all: Seq[SinkFileStatus],
+      scope: Option[Set[String]])
+
+  /** OPEN → ACQUIRE → `body` → RELEASE, the lifecycle every rewrite
+    * runs. OPEN: stop-the-writer, the mid-swap refusal ([[liveLog]]),
+    * the latest batch id. ACQUIRE: one lock claiming the whole table,
+    * or the partition sub-paths `scope` selects off the entries as of
+    * open; `body` then gets the entries as of NOW — a disjoint scoped
+    * op that committed between open and acquire rides through. RELEASE:
+    * the lock goes on success and on every in-JVM failure; so does an
+    * uncommitted or never-swapped stage, while a swap that failed
+    * between its renames (no live manifest) keeps its committed stage
+    * for [[repairOptimize]] to roll forward. */
+  private def maintain[R](
+      spark: SparkSession, path: String, op: String,
+      scope: Option[Seq[SinkFileStatus] => Set[String]] = None
+  )(body: Held => R): R = {
     StreamSinks.requireNoActiveWriter(spark, path, op)
     val fs = fsFor(spark, path)
-    if (wholeTable) requireNoDebris(fs, path, op)
-    val log = sinkLog(spark, metaDir(path).toString)
-    val latest: Long = log.getLatestBatchId().getOrElse(
-      throw new IllegalStateException(s"$op($path): no committed batches"))
-    (fs, latest, log.allFiles().toSeq)
+    val latestId = swapLock(path).synchronized(liveLog(spark, fs, path, op).getLatestBatchId())
+      .getOrElse(throw new IllegalStateException(s"$op($path): no committed batches"))
+    val claim = scope.map(_(liveEntries(spark, fs, path, op)))
+    val token = acquire(spark, fs, path, claim, op)
+    try body(Held(fs, token, latestId, liveEntries(spark, fs, path, op), claim))
+    finally {
+      if (fs.exists(metaDir(path))) fs.delete(stageMetaDir(path, token), true)
+      fs.delete(scopeMarker(path, token), false): Unit
+    }
   }
 
-  /** Whole-table mutation refuses on ANY maintenance debris — the global
-    * protocol dirs, a token'd scoped op's stage dirs, or a scope lock (a
-    * disjoint-scoped OPTIMIZE may be live right now; a whole-table
-    * rewrite cannot merge around it). */
-  private def requireNoDebris(fs: FileSystem, path: String, op: String): Unit = {
-    val debris = fs.listStatus(new Path(path)).map(_.getPath.getName).filter(n =>
-      n.startsWith("_graft_optimize_stage_meta") || n.startsWith("_graft_optimize_data") ||
-        n.startsWith(ScopePrefix) || n == "_spark_metadata.bak")
-    require(debris.isEmpty,
-      s"$op($path): maintenance dirs/locks present (${debris.sorted.take(3).mkString(", ")}) — " +
-        "a scoped operation is in flight, or an interrupted run needs repairOptimize " +
-        "(scoped debris: repairOptimize(path, token))")
+  /** The live sink log — refused, for every op, when a swap died
+    * mid-way (no live `_spark_metadata`, or a leftover `.bak`). The
+    * refusal runs BEFORE the log opens: opening a sink log creates a
+    * missing `_spark_metadata`, which would hide the crashed swap from
+    * [[repairOptimize]] and leave the table empty. Callers hold
+    * [[swapLock]], so an in-JVM swap in progress is never mistaken for
+    * a crashed one. */
+  private def liveLog(
+      spark: SparkSession, fs: FileSystem, path: String, op: String): FileStreamSinkLog = {
+    if (!fs.exists(metaDir(path)) || fs.exists(bakDir(path)))
+      throw new IllegalStateException(
+        s"$op($path): no live _spark_metadata, or a leftover _spark_metadata.bak — a " +
+          "maintenance swap died mid-way (run repairOptimize), or this is not a sink table")
+    sinkLog(spark, metaDir(path).toString)
   }
 
-  /** Heal a crashed whole-table swap before a foreachBatch sink touches
-    * the manifest. It runs BEFORE any bootstrap-vs-append decision: a
-    * crash between the swap's two renames leaves NO live manifest, and
-    * deciding on its absence alone would re-bootstrap and silently reset
-    * the table. */
-  private[streaming] def healSwap(spark: SparkSession, fs: FileSystem, path: String): Unit =
-    if (fs.exists(stageMetaDir(path)) || fs.exists(bakDir(path)) ||
-        fs.exists(stageDataDir(path))) repairOptimize(spark, path): Unit
+  private def liveEntries(
+      spark: SparkSession, fs: FileSystem, path: String, op: String): Seq[SinkFileStatus] =
+    swapLock(path).synchronized(liveLog(spark, fs, path, op).allFiles().toSeq)
+
+  /** Heal crashed maintenance before a foreachBatch sink touches the
+    * manifest. It runs BEFORE any bootstrap-vs-append decision: a crash
+    * between the swap's two renames leaves NO live manifest, and
+    * deciding on its absence alone would re-bootstrap and silently
+    * reset the table. The sink is the table's one writer and its table
+    * is unpartitioned, so every maintenance dir or lock left at a batch
+    * boundary belongs to a dead op (the sink's own compaction or merge):
+    * one [[repairOptimize]] resolves the swap, then each remaining token
+    * is released. One listing when there is nothing to heal. */
+  private def healSwap(spark: SparkSession, fs: FileSystem, path: String): Unit = {
+    def tokens(): Seq[String] =
+      if (!fs.exists(new Path(path))) Nil
+      else fs.listStatus(new Path(path)).toSeq.map(_.getPath.getName).flatMap(n =>
+        if (n == bakDir(path).getName) Some("") else tokenOf(n)).distinct
+    if (tokens().nonEmpty) {
+      repairOptimize(spark, path): Unit
+      tokens().filter(_.nonEmpty).foreach(repairOptimize(spark, path, _))
+    }
+  }
 
   /** Delete the table root's `<prefix>*` stage dirs — a crashed writer's
     * invisible debris (its moved-but-uncommitted files are orphans the
     * graced vacuum reclaims). Single-writer callers only: a live
     * writer's stage dir matches too. */
-  private[streaming] def sweepStageDirs(fs: FileSystem, path: String, prefix: String): Unit =
+  private def sweepStageDirs(fs: FileSystem, path: String, prefix: String): Unit =
     if (fs.exists(new Path(path))) {
       fs.listStatus(new Path(path)).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
         .foreach(st => fs.delete(st.getPath, true))
     }
 
-  private[streaming] def newToken(): String = java.util.UUID.randomUUID().toString.take(8)
+  private def newToken(): String = java.util.UUID.randomUUID().toString.take(8)
 
   /** LAND — the one staged-write path: `write` fills the `_`-prefixed
     * `stage` dir (invisible to readers, skipped by vacuum), then every
@@ -692,7 +731,7 @@ object Optimize {
     * unreferenced orphans for the graced vacuum). The returned entries
     * are still invisible: only a manifest commit naming them publishes
     * them. */
-  private[streaming] def land(
+  private def land(
       fs: FileSystem,
       path: String,
       stage: Path,
@@ -778,7 +817,7 @@ object Optimize {
   }
 
   /** The copy-on-write rewrite of `hit`: the row function's output in
-    * [[cowLayout]], sized to `targetFileBytes`, staged whole-table. */
+    * [[cowLayout]], sized to `targetFileBytes`, staged under `stage`. */
   private def copyOnWrite(
       spark: SparkSession,
       fs: FileSystem,
@@ -786,26 +825,47 @@ object Optimize {
       format: String,
       hit: Seq[SinkFileStatus],
       namePrefix: String,
-      targetFileBytes: Long
+      targetFileBytes: Long,
+      stage: Path
   )(rows: (DataFrame, Seq[String]) => DataFrame): Seq[SinkFileStatus] = {
     val nOut = outFiles(hit, targetFileBytes)
-    stageRewrite(spark, fs, path, format, hit, namePrefix, stageDataDir(path)) {
+    stageRewrite(spark, fs, path, format, hit, namePrefix, stage) {
       (df, partCols) => cowLayout(rows(df, partCols), partCols, nOut)
     }
   }
 
-  /** Stage the replacement manifest (O(compactInterval) writes — see the
-    * object scaladoc) and swap it live under the `_COMMITTED` marker. */
+  /** SWAP, the one commit of every rewrite: under [[swapLock]], re-read
+    * the LIVE manifest, refuse if a `replaced` entry vanished from it
+    * (the locks guarantee it stays; its absence means a writer outside
+    * the protocol touched the table — loud refusal, no swap), and stage
+    * `live − replaced + added` at the token's stage dir with the live
+    * latest batch id (O(compactInterval) writes — see the object
+    * scaladoc). Then swap it live under the `_COMMITTED` marker and
+    * archive the retired manifest. Entries outside `replaced` ride
+    * through from whatever is committed NOW, so a disjoint scoped op
+    * that landed meanwhile keeps its work; only this read-merge-rename
+    * is serialized, the expensive stage writes ran concurrently. */
   private def swapManifest(
       spark: SparkSession,
       fs: FileSystem,
       path: String,
-      latestId: Long,
-      newEntries: Array[SinkFileStatus],
-      op: String,
-      stageMetaOverride: Option[Path] = None
-  ): Unit = {
-    val stageMeta = stageMetaOverride.getOrElse(stageMetaDir(path))
+      token: String,
+      replaced: Seq[SinkFileStatus],
+      added: Seq[SinkFileStatus],
+      op: String
+  ): Unit = swapLock(path).synchronized {
+    val log = liveLog(spark, fs, path, op)
+    val latestId: Long = log.getLatestBatchId().getOrElse(
+      throw new IllegalStateException(s"$op($path): no committed batches at swap time"))
+    val live = log.allFiles().toSeq
+    val replacedKeys = replaced.map(e => normKey(e.path)).toSet
+    val vanished = replacedKeys -- live.map(e => normKey(e.path))
+    require(vanished.isEmpty,
+      s"$op($path): ${vanished.size} replaced file(s) vanished from the live manifest " +
+        s"mid-operation (first: ${vanished.headOption.getOrElse("")}) — an external " +
+        "writer touched the table; refusing the swap")
+    val newEntries = (live.filterNot(e => replacedKeys.contains(normKey(e.path))) ++ added).toArray
+    val stageMeta = stageMetaDir(path, token)
     val stageLog = sinkLog(spark, stageMeta.toString)
     val interval = spark.conf
       .getOption("spark.sql.streaming.fileSink.log.compactInterval").map(_.toInt).getOrElse(10)
@@ -833,39 +893,6 @@ object Optimize {
     fs.delete(marker(metaDir(path)), false)
     archiveToHistory(spark, fs, path, bakDir(path)): Unit
     touchMaintMarker(fs, path)
-  }
-
-  /** The SCOPED commit (r18): re-reads the LIVE manifest under the
-    * per-table swap lock and merges — entries outside the replaced set
-    * ride through from whatever is committed NOW (including a disjoint
-    * scoped op that landed after this op's open), the replaced in-scope
-    * entries must all still be present (the scope lock guarantees it;
-    * their absence means an external writer broke the contract — loud
-    * refusal, no swap), and the rewrite's files append. Only this
-    * read-merge-rename is serialized; the expensive stage writes ran
-    * fully concurrently. */
-  private def swapManifestScoped(
-      spark: SparkSession,
-      fs: FileSystem,
-      path: String,
-      replacedKeys: Set[String],
-      added: Seq[SinkFileStatus],
-      token: String,
-      op: String
-  ): Unit = swapLock(path).synchronized {
-    val log = sinkLog(spark, metaDir(path).toString)
-    val latest: Long = log.getLatestBatchId().getOrElse(
-      throw new IllegalStateException(s"$op($path): no committed batches at swap time"))
-    val now = log.allFiles().toSeq
-    val nowKeys = now.map(e => normKey(e.path)).toSet
-    val vanished = replacedKeys -- nowKeys
-    require(vanished.isEmpty,
-      s"$op($path): ${vanished.size} in-scope file(s) vanished from the live manifest " +
-        s"mid-operation (first: ${vanished.headOption.getOrElse("")}) — an external " +
-        "writer touched the scope; refusing the swap")
-    val kept = now.filterNot(e => replacedKeys.contains(normKey(e.path)))
-    swapManifest(spark, fs, path, latest, (kept ++ added).toArray, op,
-      stageMetaOverride = Some(stageMetaDirT(path, token)))
   }
 
   /** @param zOrderDims when set, the rewrite is a RE-CLUSTERING, not a
@@ -920,88 +947,55 @@ object Optimize {
     require(zDims.isEmpty || sortDims.isEmpty,
       "optimizeSink: ZORDER BY and SORT BY are mutually exclusive re-clusterings")
     val recluster = zDims.nonEmpty || sortDims.nonEmpty
-    // SCOPED ops take a scope lock and coexist with disjoint scoped ops
-    // (r18); whole-table ops take the exclusive debris guard
-    val (fs, latestId, all) =
-      open(spark, path, "optimizeSink", wholeTable = partitionWhere.isEmpty)
-    val tPartCols = tablePartCols(spark, path, all)
-    // partition scope: out-of-scope entries ride through the swap
-    // verbatim, exactly like a copy-on-write DML's untouched files
-    val (scope0, _, scopeSubs) = partitionWhere match {
-      case None       => (all, Seq.empty[SinkFileStatus], Set.empty[String])
-      case Some(pred) => selectPartitionScope(spark, path, all, tPartCols, pred, "optimizeSink")
+    // partition scope: the lock claims the selected partitions;
+    // out-of-scope entries ride through the swap verbatim, exactly like
+    // a copy-on-write DML's untouched files
+    val selectScope = partitionWhere.map(pred => (all0: Seq[SinkFileStatus]) =>
+      selectPartitionScope(spark, path, all0, tablePartCols(spark, path, all0), pred,
+        "optimizeSink"))
+    maintain(spark, path, "optimizeSink", selectScope) { case Held(fs, token, latestId, all, scope) =>
+      val tPartCols = tablePartCols(spark, path, all)
+      (zDims ++ sortDims).foreach(d => require(!tPartCols.contains(d),
+        s"optimizeSink: re-clustering key $d is a partition column — already a directory level"))
+      require(!recluster || tPartCols.isEmpty || partitionWhere.nonEmpty,
+        s"optimizeSink($path): whole-table re-clustering applies to unpartitioned tables " +
+          s"(this table partitions on ${tPartCols.mkString(",")}) — scope it with a " +
+          "partition predicate (GRAFT OPTIMIZE ... WHERE <partition predicate>)")
+      val rootAbs = graft.sources.FileIO.tableRootAbs(spark, path)
+      val inScope = scope.fold(all)(subs =>
+        all.filter(e => subs.contains(partitionSubPath(e.path, rootAbs))))
+      // a re-clustering (ZORDER/SORT BY) means "rewrite the scope": every
+      // in-scope file participates; plain OPTIMIZE repacks only files
+      // below the small-file threshold
+      val small = if (recluster) inScope else inScope.filter(_.size < smallFileBytes)
+      if (small.size < (if (recluster) 1 else 2)) OptimizeReport(0, 0, all.size, latestId, Nil)
+      else {
+        val nOut = outFiles(small, targetFileBytes)
+        val landed = stageRewrite(spark, fs, path, format, small, "graft-compact",
+          stageDataDir(path, token)) { (df, partCols) =>
+          val clusterKeys = if (zDims.nonEmpty) zDims else sortDims
+          if (recluster && partCols.isEmpty)
+            (if (zDims.nonEmpty) graft.sources.FileIO.zOrderedN(df, zDims, nOut)
+             else
+               df.repartitionByRange(nOut, clusterKeys.map(col): _*)
+                 .sortWithinPartitions(clusterKeys.map(col): _*)).write
+          else if (recluster)
+            // partition-scoped re-cluster: range-cluster on (partition
+            // cols, keys) so tasks split along partition boundaries and
+            // each partition dir's files cover tight key/curve ranges
+            (if (zDims.nonEmpty)
+               graft.sources.FileIO.zOrderedN(df, zDims, nOut, prefix = partCols)
+             else
+               df.repartitionByRange(nOut, (partCols ++ clusterKeys).map(col): _*)
+                 .sortWithinPartitions((partCols ++ clusterKeys).map(col): _*))
+              .write.partitionBy(partCols: _*)
+          else cowLayout(df, partCols, nOut)
+        }
+        swapManifest(spark, fs, path, token, small, landed, "optimizeSink")
+        OptimizeReport(small.size, landed.size, all.size - small.size, latestId,
+          small.map(_.sparkPath.toPath.toString))
+      }
     }
-    // every pre-stage refusal must fire BEFORE the scope lock exists —
-    // an in-JVM refusal is not a crash and must not leave a lock that
-    // blocks the next attempt behind a repair
-    (zDims ++ sortDims).foreach(d => require(!tPartCols.contains(d),
-      s"optimizeSink: re-clustering key $d is a partition column — already a directory level"))
-    require(!recluster || tPartCols.isEmpty || partitionWhere.nonEmpty,
-      s"optimizeSink($path): whole-table re-clustering applies to unpartitioned tables " +
-        s"(this table partitions on ${tPartCols.mkString(",")}) — scope it with a " +
-        "partition predicate (GRAFT OPTIMIZE ... WHERE <partition predicate>)")
-    val scopeToken: Option[String] =
-      partitionWhere.map(_ => acquireScope(fs, path, scopeSubs, "optimizeSink"))
-    // with the lock held, re-read the live entries: a DISJOINT scoped op
-    // may have committed between our open and our acquire — its swap
-    // must ride through ours untouched, so our in/out split must come
-    // from the manifest as of NOW
-    val rootAbs = graft.sources.FileIO.tableRootAbs(spark, path)
-    val (scope, outOfScope) = scopeToken match {
-      case None => (scope0, Seq.empty[SinkFileStatus])
-      case Some(_) =>
-        sinkLog(spark, metaDir(path).toString).allFiles().toSeq
-          .partition(e => scopeSubs.contains(partitionSubPath(e.path, rootAbs)))
-    }
-    // a re-clustering (ZORDER/SORT BY) means "rewrite the scope": every
-    // in-scope file participates; plain OPTIMIZE repacks only files
-    // below the small-file threshold
-    val (small, keptInScope) =
-      if (recluster) (scope, Seq.empty[SinkFileStatus])
-      else scope.partition(_.size < smallFileBytes)
-    val kept = keptInScope ++ outOfScope
-    if (small.size < (if (recluster) 1 else 2)) {
-      scopeToken.foreach(t => fs.delete(scopeMarker(path, t), false))
-      return OptimizeReport(0, 0, all.size, latestId, Nil)
-    }
-    val nOut = outFiles(small, targetFileBytes)
-    val stage = scopeToken.fold(stageDataDir(path))(stageDataDirT(path, _))
-    val landed = try stageRewrite(spark, fs, path, format, small, "graft-compact", stage) {
-      (df, partCols) =>
-        val clusterKeys = if (zDims.nonEmpty) zDims else sortDims
-        if (recluster && partCols.isEmpty)
-          (if (zDims.nonEmpty) graft.sources.FileIO.zOrderedN(df, zDims, nOut)
-           else
-             df.repartitionByRange(nOut, clusterKeys.map(col): _*)
-               .sortWithinPartitions(clusterKeys.map(col): _*)).write
-        else if (recluster)
-          // partition-scoped re-cluster: range-cluster on (partition
-          // cols, keys) so tasks split along partition boundaries and
-          // each partition dir's files cover tight key/curve ranges
-          (if (zDims.nonEmpty)
-             graft.sources.FileIO.zOrderedN(df, zDims, nOut, prefix = partCols)
-           else
-             df.repartitionByRange(nOut, (partCols ++ clusterKeys).map(col): _*)
-               .sortWithinPartitions((partCols ++ clusterKeys).map(col): _*))
-            .write.partitionBy(partCols: _*)
-        else cowLayout(df, partCols, nOut)
-    } catch {
-      // an in-JVM stage failure ends the operation: the stage dir is
-      // already gone, and the lock would only block the scope behind a
-      // needless repair
-      case e: Throwable => scopeToken.foreach(t => fs.delete(scopeMarker(path, t), false)); throw e
-    }
-
-    scopeToken match {
-      case None =>
-        swapManifest(spark, fs, path, latestId, (kept ++ landed).toArray, "optimizeSink")
-      case Some(t) =>
-        swapManifestScoped(spark, fs, path, small.map(e => normKey(e.path)).toSet, landed, t,
-          "optimizeSink")
-        fs.delete(scopeMarker(path, t), false): Unit
-    }
-    OptimizeReport(small.size, landed.size, kept.size, latestId,
-      small.map(_.sparkPath.toPath.toString))
   }
 
   /** Row-level DELETE on a live manifest-committed table — COPY-ON-WRITE:
@@ -1089,27 +1083,29 @@ object Optimize {
       format: String,
       targetFileBytes: Long
   )(rows: (DataFrame, Seq[String]) => DataFrame): DeleteReport = {
-    val (fs, latestId, all) = open(spark, path, op, wholeTable = true)
-    val partCols = tablePartCols(spark, path, all)
-    requireDataColumnPredicate(op, predicate, partCols)
-    // SET VALUE expressions read partition columns as verbatim STRINGS
-    // during the rewrite — `SET v = part_col * 2` would silently
-    // mis-evaluate, the exact hazard the predicate guard exists for
-    set.foreach { case (c, e) =>
-      val overlap = refNames(e).intersect(partCols.toSet)
-      require(overlap.isEmpty,
-        s"$op: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
-          "partition values are verbatim strings during the rewrite; data columns only")
+    maintain(spark, path, op) { case Held(fs, token, latestId, all, _) =>
+      val partCols = tablePartCols(spark, path, all)
+      requireDataColumnPredicate(op, predicate, partCols)
+      // SET VALUE expressions read partition columns as verbatim STRINGS
+      // during the rewrite — `SET v = part_col * 2` would silently
+      // mis-evaluate, the exact hazard the predicate guard exists for
+      set.foreach { case (c, e) =>
+        val overlap = refNames(e).intersect(partCols.toSet)
+        require(overlap.isEmpty,
+          s"$op: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
+            "partition values are verbatim strings during the rewrite; data columns only")
+      }
+      val (hit, untouched) = hitFiles(op, path, all,
+        spark.read.format(format).load(path).filter(predicate).select(col("_metadata.file_path")))
+      if (hit.isEmpty) DeleteReport(0, 0, all.size, latestId, Nil)
+      else {
+        val landed = copyOnWrite(spark, fs, path, format, hit, namePrefix, targetFileBytes,
+          stageDataDir(path, token))(rows)
+        swapManifest(spark, fs, path, token, hit, landed, op)
+        DeleteReport(hit.size, landed.size, untouched.size, latestId,
+          hit.map(_.sparkPath.toPath.toString))
+      }
     }
-    val (hit, untouched) = hitFiles(op, path, all,
-      spark.read.format(format).load(path).filter(predicate).select(col("_metadata.file_path")))
-    if (hit.isEmpty) {
-      return DeleteReport(0, 0, all.size, latestId, Nil)
-    }
-    val landed = copyOnWrite(spark, fs, path, format, hit, namePrefix, targetFileBytes)(rows)
-    swapManifest(spark, fs, path, latestId, (untouched ++ landed).toArray, op)
-    DeleteReport(hit.size, landed.size, untouched.size, latestId,
-      hit.map(_.sparkPath.toPath.toString))
   }
 
   /** MERGE (upsert) into a live manifest-committed table — copy-on-write:
@@ -1183,204 +1179,203 @@ object Optimize {
       evolveSchema: Boolean = false
   ): DeleteReport = {
     require(keyCols.nonEmpty, "mergeInto: empty key column list")
-    val (fs, latestId, all) = open(spark, path, "mergeInto", wholeTable = true)
-    val partCols0 = tablePartCols(spark, path, all)
-    require(!partCols0.exists(keyCols.contains),
-      s"mergeInto: key columns overlap partition columns ${partCols0.mkString(",")} — " +
-        "partition surgery is a move, not a merge")
-    val table = spark.read.format(format).load(path)
-    require(keyCols.forall(source.columns.contains) && keyCols.forall(table.columns.contains),
-      s"mergeInto: key columns ${keyCols.mkString(",")} must exist on both sides")
-    // add-only schema evolution: new source columns append; shared
-    // columns must keep their types (a type CHANGE silently corrupting
-    // old files' reads is the hazard evolution must refuse)
-    val newCols: Seq[String] =
-      if (evolveSchema) source.columns.toSeq.filterNot(table.columns.contains) else Nil
-    matchedSet match {
-      case None if evolveSchema =>
-        require(table.columns.forall(source.columns.contains),
-          s"mergeInto: schema evolution is ADD-ONLY — the source must still carry every " +
-            s"existing column (missing: " +
-            s"${table.columns.filterNot(source.columns.contains).mkString(",")})")
-        table.columns.foreach { c =>
-          val tt = table.schema(c).dataType
-          val st = source.schema(c).dataType
-          require(tt == st,
-            s"mergeInto: schema evolution is ADD-ONLY — column $c changes type $tt -> $st; " +
-              "evolve by adding columns, never by retyping (old files would misread)")
-        }
-      case None =>
-        require(table.columns.sorted.sameElements(source.columns.sorted),
-          s"mergeInto: source schema ${source.columns.sorted.mkString(",")} must match the " +
-            s"table's ${table.columns.sorted.mkString(",")} (whole-row replacement; pass " +
-            "evolveSchema = true to ADD the new columns)")
-      case Some(set) =>
-        require(!evolveSchema,
-          "mergeInto: schema evolution applies to WHOLE-ROW merges (the updateAll/insertAll " +
-            "shape) — drop matchedSet or drop evolveSchema")
-        require(set.nonEmpty, "mergeInto: empty WHEN MATCHED UPDATE SET")
-        set.keys.foreach { c =>
-          require(table.columns.contains(c),
-            s"mergeInto: SET column $c not in the table schema")
-          require(!partCols0.contains(c),
-            s"mergeInto: $c is a partition column — updating it is a move, not a merge")
-          require(!keyCols.contains(c),
-            s"mergeInto: SET column $c is a merge key — updating keys is ambiguous")
-        }
-        // same hazard as updateWhere's guard: partition values are
-        // verbatim strings during the rewrite. TABLE-SIDE references
-        // only — `s.<name>` reads the SOURCE and is always legitimate
-        // even when the table partitions on the same name
-        set.foreach { case (c, e) =>
-          val overlap = tableSideRefNames(e).intersect(partCols0.toSet)
-          require(overlap.isEmpty,
-            s"mergeInto: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
-              "partition values are verbatim strings during the rewrite; data columns only")
-        }
-        if (insertNotMatched) {
-          require(table.columns.sorted.sameElements(source.columns.sorted),
-            "mergeInto: WHEN NOT MATCHED inserts need the full table schema on the source " +
-              s"(got ${source.columns.sorted.mkString(",")}); pass insertNotMatched = false " +
-              "for an update-only merge over a partial-column source")
-        }
-    }
-    val cols = (table.columns.toSeq ++ newCols).toIndexedSeq
-    source.persist()
-    // not-matched inserts append as new files — no rewrite, pure add
-    val inserts =
-      if (!insertNotMatched) spark.emptyDataFrame
-      else source.join(table.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val nIns = inserts.persist()
-    val (hit, untouched, rewritten, inserted) = try {
-      val dupKeys = source.groupBy(keyCols.map(col): _*)
-        .count().filter(col("count") > 1).limit(1).collect()
-      require(dupKeys.isEmpty,
-        s"mergeInto: duplicate key in source (${dupKeys.headOption}) — ambiguous MERGE")
-
-      import org.apache.spark.sql.functions.broadcast
-      // the cardinality check above materialized the persisted source, so
-      // its plan stats carry the real cached size — the broadcast gate
-      // (a fresh QueryExecution picks up the cache substitution)
-      val srcBytes = spark.sessionState
-        .executePlan(source.queryExecution.logical).optimizedPlan.stats.sizeInBytes
-      val useBroadcast = srcBytes <= BigInt(maxBroadcastBytes)
-      def gated(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
-
-      val srcKeys = source.select(keyCols.map(col): _*)
-      // the _metadata column must be projected BEFORE the join — it exists
-      // only directly on the file-source relation
-      val fileKeyed = table
-        .select(col("_metadata.file_path").as("__graft_file") +: keyCols.map(col): _*)
-      // NOT MATCHED BY SOURCE: files holding any source-ABSENT row must
-      // rewrite too (their copies simply omit those rows) — the anti-join
-      // leg of hit-file discovery
-      val (hit, untouched) = hitFiles("mergeInto", path, all,
-        fileKeyed.join(gated(srcKeys), keyCols).select(col("__graft_file")) +:
-          Option.when(deleteNotMatchedBySource)(
-            fileKeyed.join(gated(srcKeys), keyCols, "left_anti").select(col("__graft_file"))
-          ).toSeq: _*)
-
-      val inserted =
-        if (!insertNotMatched || nIns.isEmpty) Nil
-        else {
-          // a PARTITIONED table's inserts must land inside their partition
-          // dirs (a flat root file would corrupt partition discovery for
-          // every reader), so the staging write partitions and the land
-          // preserves the sub-path. Data columns cast to the table's types
-          // like the rewritten rows below — a differently-typed source
-          // would otherwise leave files whose schemas disagree, and the
-          // column's type would depend on which file a reader samples;
-          // partition values stay verbatim (they become dir names)
-          val base = nIns.select(cols.map { c =>
-            if (partCols0.contains(c) || !table.columns.contains(c)) col(c)
-            else col(c).cast(table.schema(c).dataType).as(c)
-          }: _*).coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-          val uuid = newToken()
-          land(fs, path, new Path(path, s"_graft_merge_ins_$uuid"), format,
-            "graft-merge-ins", uuid) { stage =>
-            val w =
-              if (partCols0.isEmpty) base.write
-              else base.write.partitionBy(partCols0: _*)
-            w.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stage)
+    maintain(spark, path, "mergeInto") { case Held(fs, token, latestId, all, _) =>
+      val partCols0 = tablePartCols(spark, path, all)
+      require(!partCols0.exists(keyCols.contains),
+        s"mergeInto: key columns overlap partition columns ${partCols0.mkString(",")} — " +
+          "partition surgery is a move, not a merge")
+      val table = spark.read.format(format).load(path)
+      require(keyCols.forall(source.columns.contains) && keyCols.forall(table.columns.contains),
+        s"mergeInto: key columns ${keyCols.mkString(",")} must exist on both sides")
+      // add-only schema evolution: new source columns append; shared
+      // columns must keep their types (a type CHANGE silently corrupting
+      // old files' reads is the hazard evolution must refuse)
+      val newCols: Seq[String] =
+        if (evolveSchema) source.columns.toSeq.filterNot(table.columns.contains) else Nil
+      matchedSet match {
+        case None if evolveSchema =>
+          require(table.columns.forall(source.columns.contains),
+            s"mergeInto: schema evolution is ADD-ONLY — the source must still carry every " +
+              s"existing column (missing: " +
+              s"${table.columns.filterNot(source.columns.contains).mkString(",")})")
+          table.columns.foreach { c =>
+            val tt = table.schema(c).dataType
+            val st = source.schema(c).dataType
+            require(tt == st,
+              s"mergeInto: schema evolution is ADD-ONLY — column $c changes type $tt -> $st; " +
+                "evolve by adding columns, never by retyping (old files would misread)")
           }
-        }
+        case None =>
+          require(table.columns.sorted.sameElements(source.columns.sorted),
+            s"mergeInto: source schema ${source.columns.sorted.mkString(",")} must match the " +
+              s"table's ${table.columns.sorted.mkString(",")} (whole-row replacement; pass " +
+              "evolveSchema = true to ADD the new columns)")
+        case Some(set) =>
+          require(!evolveSchema,
+            "mergeInto: schema evolution applies to WHOLE-ROW merges (the updateAll/insertAll " +
+              "shape) — drop matchedSet or drop evolveSchema")
+          require(set.nonEmpty, "mergeInto: empty WHEN MATCHED UPDATE SET")
+          set.keys.foreach { c =>
+            require(table.columns.contains(c),
+              s"mergeInto: SET column $c not in the table schema")
+            require(!partCols0.contains(c),
+              s"mergeInto: $c is a partition column — updating it is a move, not a merge")
+            require(!keyCols.contains(c),
+              s"mergeInto: SET column $c is a merge key — updating keys is ambiguous")
+          }
+          // same hazard as updateWhere's guard: partition values are
+          // verbatim strings during the rewrite. TABLE-SIDE references
+          // only — `s.<name>` reads the SOURCE and is always legitimate
+          // even when the table partitions on the same name
+          set.foreach { case (c, e) =>
+            val overlap = tableSideRefNames(e).intersect(partCols0.toSet)
+            require(overlap.isEmpty,
+              s"mergeInto: SET $c = ... reads partition column(s) ${overlap.mkString(",")} — " +
+                "partition values are verbatim strings during the rewrite; data columns only")
+          }
+          if (insertNotMatched) {
+            require(table.columns.sorted.sameElements(source.columns.sorted),
+              "mergeInto: WHEN NOT MATCHED inserts need the full table schema on the source " +
+                s"(got ${source.columns.sorted.mkString(",")}); pass insertNotMatched = false " +
+                "for an update-only merge over a partial-column source")
+          }
+      }
+      val cols = (table.columns.toSeq ++ newCols).toIndexedSeq
+      source.persist()
+      // not-matched inserts append as new files — no rewrite, pure add
+      val inserts =
+        if (!insertNotMatched) spark.emptyDataFrame
+        else source.join(table.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+      val nIns = inserts.persist()
+      val (hit, untouched, rewritten, inserted) = try {
+        val dupKeys = source.groupBy(keyCols.map(col): _*)
+          .count().filter(col("count") > 1).limit(1).collect()
+        require(dupKeys.isEmpty,
+          s"mergeInto: duplicate key in source (${dupKeys.headOption}) — ambiguous MERGE")
 
-      // matched files rewrite with source rows replacing their key-matches
-      val rewritten =
-        if (hit.isEmpty) Nil
-        else copyOnWrite(spark, fs, path, format, hit, "graft-merge", targetFileBytes) {
-          (df, _) =>
-            // NOT MATCHED BY SOURCE DELETE keeps only matched rows of a
-            // rewritten file (the survivors filter rides the SAME match
-            // flag the replacement keys on)
-            matchedSet match {
-              case None =>
-                // schema evolution: the OLD files' frame gains the new
-                // columns as typed NULLs, so non-matched rows in a
-                // rewritten file read as legacy (null) exactly like rows
-                // in untouched files do under mergeSchema. Missing
-                // columns are computed against the ACTUAL hit-file frame
-                // (not the table's sampled schema): a later merge may
-                // rewrite legacy files of an already-evolved table, and
-                // a replayed merge reads already-evolved hit files —
-                // both land on the same result.
-                val dfE = cols.filterNot(df.columns.contains).foldLeft(df)((d, c) =>
-                  d.withColumn(c, lit(null).cast(source.schema(c).dataType)))
-                val srcPrefixed = gated(
-                  source.select(cols.map(c => col(c).as(s"__src_$c")) :+
-                    lit(true).as("__src_matched"): _*))
-                val joinCond = keyCols
-                  .map(k => dfE(k) === srcPrefixed(s"__src_$k"))
-                  .reduce(_ && _)
-                // replacement keys on the MATCH FLAG, not value coalesce —
-                // a legitimately-NULL source value must land as NULL, not
-                // fall back to the old value
-                val joined = dfE.join(srcPrefixed, joinCond, "left")
-                val survivors =
-                  if (deleteNotMatchedBySource) joined.filter(col("__src_matched").isNotNull)
-                  else joined
-                survivors.select(cols.map { c =>
-                  org.apache.spark.sql.functions
-                    .when(col("__src_matched").isNotNull, col(s"__src_$c"))
-                    .otherwise(col(c))
-                    .cast(dfE.schema(c).dataType).as(c)
-                }: _*)
-              case Some(set) =>
-                // column-level WHEN MATCHED UPDATE SET: the join exposes
-                // the table row as `t` and the source row as `s`; every
-                // SET expression (and the match test) evaluates against
-                // the OLD t-row — standard SQL UPDATE semantics
-                val srcS = gated(source.withColumn("__graft_matched", lit(true))).alias("s")
-                val joinCond = keyCols
-                  .map(k => col(s"t.$k") === col(s"s.$k"))
-                  .reduce(_ && _)
-                val joined = df.alias("t").join(srcS, joinCond, "left")
-                val survivors =
-                  if (deleteNotMatchedBySource)
-                    joined.filter(col("s.__graft_matched").isNotNull)
-                  else joined
-                survivors.select(cols.map { c =>
-                  set.get(c) match {
-                    case Some(e) =>
-                      org.apache.spark.sql.functions
-                        .when(col("s.__graft_matched").isNotNull, e)
-                        .otherwise(col(s"t.$c"))
-                        .cast(df.schema(c).dataType).as(c)
-                    case None => col(s"t.$c").as(c)
-                  }
-                }: _*)
+        import org.apache.spark.sql.functions.broadcast
+        // the cardinality check above materialized the persisted source, so
+        // its plan stats carry the real cached size — the broadcast gate
+        // (a fresh QueryExecution picks up the cache substitution)
+        val srcBytes = spark.sessionState
+          .executePlan(source.queryExecution.logical).optimizedPlan.stats.sizeInBytes
+        val useBroadcast = srcBytes <= BigInt(maxBroadcastBytes)
+        def gated(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
+
+        val srcKeys = source.select(keyCols.map(col): _*)
+        // the _metadata column must be projected BEFORE the join — it exists
+        // only directly on the file-source relation
+        val fileKeyed = table
+          .select(col("_metadata.file_path").as("__graft_file") +: keyCols.map(col): _*)
+        // NOT MATCHED BY SOURCE: files holding any source-ABSENT row must
+        // rewrite too (their copies simply omit those rows) — the anti-join
+        // leg of hit-file discovery
+        val (hit, untouched) = hitFiles("mergeInto", path, all,
+          fileKeyed.join(gated(srcKeys), keyCols).select(col("__graft_file")) +:
+            Option.when(deleteNotMatchedBySource)(
+              fileKeyed.join(gated(srcKeys), keyCols, "left_anti").select(col("__graft_file"))
+            ).toSeq: _*)
+
+        val inserted =
+          if (!insertNotMatched || nIns.isEmpty) Nil
+          else {
+            // a PARTITIONED table's inserts must land inside their partition
+            // dirs (a flat root file would corrupt partition discovery for
+            // every reader), so the staging write partitions and the land
+            // preserves the sub-path. Data columns cast to the table's types
+            // like the rewritten rows below — a differently-typed source
+            // would otherwise leave files whose schemas disagree, and the
+            // column's type would depend on which file a reader samples;
+            // partition values stay verbatim (they become dir names)
+            val base = nIns.select(cols.map { c =>
+              if (partCols0.contains(c) || !table.columns.contains(c)) col(c)
+              else col(c).cast(table.schema(c).dataType).as(c)
+            }: _*).coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
+            land(fs, path, stageDataDir(path, token), format, "graft-merge-ins") { stage =>
+              val w =
+                if (partCols0.isEmpty) base.write
+                else base.write.partitionBy(partCols0: _*)
+              w.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(stage)
             }
-        }
-      (hit, untouched, rewritten, inserted)
-    } finally {
-      nIns.unpersist()
-      source.unpersist(): Unit
-    }
+          }
 
-    swapManifest(spark, fs, path, latestId, (untouched ++ rewritten ++ inserted).toArray,
-      "mergeInto")
-    DeleteReport(hit.size, rewritten.size + inserted.size, untouched.size, latestId,
-      hit.map(_.sparkPath.toPath.toString))
+        // matched files rewrite with source rows replacing their key-matches
+        val rewritten =
+          if (hit.isEmpty) Nil
+          else copyOnWrite(spark, fs, path, format, hit, "graft-merge", targetFileBytes,
+            stageDataDir(path, token)) {
+            (df, _) =>
+              // NOT MATCHED BY SOURCE DELETE keeps only matched rows of a
+              // rewritten file (the survivors filter rides the SAME match
+              // flag the replacement keys on)
+              matchedSet match {
+                case None =>
+                  // schema evolution: the OLD files' frame gains the new
+                  // columns as typed NULLs, so non-matched rows in a
+                  // rewritten file read as legacy (null) exactly like rows
+                  // in untouched files do under mergeSchema. Missing
+                  // columns are computed against the ACTUAL hit-file frame
+                  // (not the table's sampled schema): a later merge may
+                  // rewrite legacy files of an already-evolved table, and
+                  // a replayed merge reads already-evolved hit files —
+                  // both land on the same result.
+                  val dfE = cols.filterNot(df.columns.contains).foldLeft(df)((d, c) =>
+                    d.withColumn(c, lit(null).cast(source.schema(c).dataType)))
+                  val srcPrefixed = gated(
+                    source.select(cols.map(c => col(c).as(s"__src_$c")) :+
+                      lit(true).as("__src_matched"): _*))
+                  val joinCond = keyCols
+                    .map(k => dfE(k) === srcPrefixed(s"__src_$k"))
+                    .reduce(_ && _)
+                  // replacement keys on the MATCH FLAG, not value coalesce —
+                  // a legitimately-NULL source value must land as NULL, not
+                  // fall back to the old value
+                  val joined = dfE.join(srcPrefixed, joinCond, "left")
+                  val survivors =
+                    if (deleteNotMatchedBySource) joined.filter(col("__src_matched").isNotNull)
+                    else joined
+                  survivors.select(cols.map { c =>
+                    org.apache.spark.sql.functions
+                      .when(col("__src_matched").isNotNull, col(s"__src_$c"))
+                      .otherwise(col(c))
+                      .cast(dfE.schema(c).dataType).as(c)
+                  }: _*)
+                case Some(set) =>
+                  // column-level WHEN MATCHED UPDATE SET: the join exposes
+                  // the table row as `t` and the source row as `s`; every
+                  // SET expression (and the match test) evaluates against
+                  // the OLD t-row — standard SQL UPDATE semantics
+                  val srcS = gated(source.withColumn("__graft_matched", lit(true))).alias("s")
+                  val joinCond = keyCols
+                    .map(k => col(s"t.$k") === col(s"s.$k"))
+                    .reduce(_ && _)
+                  val joined = df.alias("t").join(srcS, joinCond, "left")
+                  val survivors =
+                    if (deleteNotMatchedBySource)
+                      joined.filter(col("s.__graft_matched").isNotNull)
+                    else joined
+                  survivors.select(cols.map { c =>
+                    set.get(c) match {
+                      case Some(e) =>
+                        org.apache.spark.sql.functions
+                          .when(col("s.__graft_matched").isNotNull, e)
+                          .otherwise(col(s"t.$c"))
+                          .cast(df.schema(c).dataType).as(c)
+                      case None => col(s"t.$c").as(c)
+                    }
+                  }: _*)
+              }
+          }
+        (hit, untouched, rewritten, inserted)
+      } finally {
+        nIns.unpersist()
+        source.unpersist(): Unit
+      }
+
+      swapManifest(spark, fs, path, token, hit, rewritten ++ inserted, "mergeInto")
+      DeleteReport(hit.size, rewritten.size + inserted.size, untouched.size, latestId,
+        hit.map(_.sparkPath.toPath.toString))
+    }
   }
 
   /** Streaming UPSERT sink — CDC apply: every micro-batch MERGEs into the
@@ -1433,119 +1428,125 @@ object Optimize {
           require(dup.isEmpty,
             s"upsertSink bootstrap: duplicate key in first batch (${dup.headOption}) — " +
               "the one-row-per-key invariant must hold from batch 0")
-          // bootstrap: land the first batch's files, then commit them as
-          // the log's batch 0 — the log's creation IS the publish point.
-          // A crashed prior bootstrap left only invisible debris: sweep
-          // its stage dirs first.
-          sweepStageDirs(fs, path, "_graft_upsert_boot_")
-          val uuid = newToken()
-          val landed = land(fs, path, new Path(path, s"_graft_upsert_boot_$uuid"), format,
-            "graft-upsert", uuid)(
-            batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(_))
-          val log = sinkLog(spark, metaDir(path).toString)
-          require(log.add(0L, landed.toArray),
-            "upsertSink bootstrap: batch-0 manifest commit failed")
+          // bootstrap: the first batch's files commit as the log's batch
+          // 0 — the log's creation IS the publish point
+          appendBatch(batch, path, 0L, format, "_graft_upsert_boot_", "graft-upsert",
+            "upsertSink bootstrap"): Unit
         } else {
           mergeInto(spark, path, batch, keyCols, format): Unit
         }
       }
       .start()
 
-  /** Resolve an interrupted [[optimizeSink]]/[[deleteWhere]] swap —
-    * deterministic: a live manifest wins (leftovers rolled back); no
-    * manifest + a `_COMMITTED`-marked stage rolls FORWARD; anything else
-    * restores the backup. Returns what it did. */
-  def repairOptimize(spark: SparkSession, path: String): String = {
-    val fs = repairFs(spark, path)
-    val meta = metaDir(path)
-    val bak = bakDir(path)
-    val stage = stageMetaDir(path)
-    if (fs.exists(stageDataDir(path))) fs.delete(stageDataDir(path), true)
-    // merge-insert staging debris (invisible `_graft_merge_ins_*` dirs)
-    sweepStageDirs(fs, path, "_graft_merge_ins_")
-    if (fs.exists(meta)) {
-      // crash before the swap started (or after it finished): the live
-      // manifest is authoritative. An UNCOMMITTED stage is debris; a
-      // leftover BACKUP is the crash-between-promotion-and-archive case
-      // — it is the real previous generation, so it archives into
-      // history (completing the interrupted swap) instead of deleting.
-      val sweptStage = fs.exists(stage)
-      if (sweptStage) fs.delete(stage, true): Unit
-      val archived = if (fs.exists(bak)) Some(archiveToHistory(spark, fs, path, bak)) else None
-      fs.delete(marker(meta), false)
-      if (archived.isDefined) touchMaintMarker(fs, path)
-      (sweptStage, archived) match {
-        case (false, None)    => "clean"
-        case (true, None)     => s"rolled-back: swept $stage"
-        case (s, Some(v))     =>
-          s"rolled-back: archived backup as v$v${if (s) s", swept $stage" else ""}"
-      }
-    } else rollForwardOrRestore(spark, fs, path, stage, s"repairOptimize($path)")
-  }
-
-  /** TOKEN-targeted repair (r18): heal ONE crashed scoped operation's
-    * debris without touching any other scoped op's stage dirs or lock —
-    * the whole point of per-operation staging is that compacting
-    * yesterday's partition dying must not force a repair that destroys
-    * the re-cluster of last week's still in flight. Semantics mirror
-    * the global repair: live manifest present ⇒ the token's swap never
-    * happened (or fully completed) — its stage dirs and lock are
-    * debris, rolled back (any moved-but-unreferenced data files stay
-    * invisible and fall to vacuum); live manifest ABSENT with this
-    * token's COMMITTED stage ⇒ finish the promotion; else restore the
-    * backup. Call only after confirming the token's op is dead — a
-    * LIVE op's token heals out from under it otherwise. */
-  def repairOptimize(spark: SparkSession, path: String, token: String): String = {
-    val fs = repairFs(spark, path)
-    val stage = stageMetaDirT(path, token)
-    val data = stageDataDirT(path, token)
-    val lock = scopeMarker(path, token)
-    require(fs.exists(stage) || fs.exists(data) || fs.exists(lock),
-      s"repairOptimize($path, $token): no stage dirs or scope lock for this token")
-    if (fs.exists(data)) fs.delete(data, true)
-    val did =
-      if (fs.exists(metaDir(path))) {
-        val sweptStage = fs.exists(stage)
-        if (sweptStage) fs.delete(stage, true): Unit
-        if (sweptStage) s"rolled-back: swept $stage" else "rolled-back: released scope lock"
-      } else rollForwardOrRestore(spark, fs, path, stage, s"repairOptimize($path, $token)")
-    fs.delete(lock, false)
-    did
-  }
-
-  private def repairFs(spark: SparkSession, path: String): FileSystem = {
+  /** The one APPEND step of the foreachBatch sinks (the upsert
+    * bootstrap, the compacting sink's batches): heal crashed maintenance
+    * ([[healSwap]]), then — unless `batchId` is already committed (a
+    * checkpoint replay: the exactly-once skip) — sweep this sink's own
+    * crashed `<stagePrefix>*` dirs (invisible debris nothing else
+    * sweeps), [[land]] the batch and commit it by `log.add`. Returns the
+    * live log. */
+  private[streaming] def appendBatch(
+      batch: DataFrame,
+      path: String,
+      batchId: Long,
+      format: String,
+      stagePrefix: String,
+      namePrefix: String,
+      who: String
+  ): FileStreamSinkLog = {
+    val spark = batch.sparkSession
     val fs = fsFor(spark, path)
-    if (!fs.exists(new Path(path))) {
-      throw new IllegalStateException(
-        s"repairOptimize($path): path does not exist — not a sink table")
+    healSwap(spark, fs, path)
+    val log = sinkLog(spark, metaDir(path).toString)
+    if (!log.getLatestBatchId().exists(_ >= batchId)) {
+      sweepStageDirs(fs, path, stagePrefix)
+      val uuid = newToken()
+      val landed = land(fs, path, new Path(path, s"$stagePrefix$uuid"), format, namePrefix, uuid)(
+        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format(format).save(_))
+      require(log.add(batchId, landed.toArray), s"$who: manifest commit for batch $batchId failed")
     }
-    fs
+    log
   }
 
-  /** The repair body both overloads share once the live manifest is
-    * GONE (a crash between the swap's two renames, or during the
-    * promotion): a `_COMMITTED` `stage` was fully staged — finish the
-    * promotion and archive the retired generation; otherwise the backup
-    * is the only committed truth — restore it. */
-  private def rollForwardOrRestore(
-      spark: SparkSession, fs: FileSystem, path: String, stage: Path, who: String): String = {
-    val meta = metaDir(path)
-    val bak = bakDir(path)
-    if (fs.exists(stage) && fs.exists(marker(stage))) {
-      require(fs.rename(stage, meta), s"repairOptimize: promote $stage failed")
-      fs.delete(marker(meta), false)
-      if (fs.exists(bak)) archiveToHistory(spark, fs, path, bak): Unit
-      touchMaintMarker(fs, path)
-      "rolled-forward"
-    } else if (fs.exists(bak)) {
-      if (fs.exists(stage)) fs.delete(stage, true)
-      require(fs.rename(bak, meta), s"repairOptimize: restore $bak failed")
-      "restored-backup"
-    } else {
-      throw new IllegalStateException(
-        s"$who: no manifest, no committed stage, no backup — not a sink table")
+  /** Resolve interrupted maintenance — the one repair body, under
+    * [[swapLock]]. With NO live manifest (a crash between a swap's two
+    * renames): the stage carrying `_COMMITTED` — tokened or legacy
+    * untokened; the newest marker if a dead op left an older one —
+    * rolls FORWARD, its op's data dir and lock are released and the
+    * backup archives; without a committed stage the backup is restored.
+    * With a live manifest, the manifest wins: the legacy untokened
+    * stage dirs and merge-insert stages are swept, a leftover backup
+    * (crash between promotion and archive) archives into history.
+    * Touches no other token's stage or lock. Returns what it did. */
+  def repairOptimize(spark: SparkSession, path: String): String = repair(spark, path, None)
+
+  /** TOKEN-targeted repair (r18): the same body, plus release of ONE
+    * crashed op's stage dirs and lock — without touching any other
+    * scoped op's, so compacting yesterday's partition dying never forces
+    * a repair that destroys the re-cluster of last week's still in
+    * flight. Call only after confirming the token's op is dead — a LIVE
+    * op's token heals out from under it otherwise. */
+  def repairOptimize(spark: SparkSession, path: String, token: String): String =
+    repair(spark, path, Some(token))
+
+  private def repair(
+      spark: SparkSession, path: String, token: Option[String]): String =
+    swapLock(path).synchronized {
+      val fs = fsFor(spark, path)
+      val who = s"repairOptimize($path${token.fold("")(t => s", $t")})"
+      if (!fs.exists(new Path(path)))
+        throw new IllegalStateException(s"$who: path does not exist — not a sink table")
+      // the stage dirs this repair owns: the legacy untokened pair, and
+      // the named token's
+      val owned = "" +: token.toSeq
+      token.foreach(t => require(
+        Seq(stageMetaDir(path, t), stageDataDir(path, t), scopeMarker(path, t)).exists(fs.exists),
+        s"$who: no stage dirs or scope lock for this token"))
+      owned.foreach(t => fs.delete(stageDataDir(path, t), true))
+      sweepStageDirs(fs, path, "_graft_merge_ins_")
+      val stale = owned.map(stageMetaDir(path, _)).filter(fs.exists)
+      val meta = metaDir(path)
+      val bak = bakDir(path)
+      val did =
+        if (fs.exists(meta)) {
+          // the live manifest wins: the owned stages are debris
+          val archived = if (fs.exists(bak)) Some(archiveToHistory(spark, fs, path, bak)) else None
+          fs.delete(marker(meta), false)
+          if (archived.isDefined) touchMaintMarker(fs, path)
+          val swept = stale.map(p => s", swept $p").mkString
+          archived match {
+            case Some(v)                 => s"rolled-back: archived backup as v$v$swept"
+            case None if stale.nonEmpty  => s"rolled-back: ${swept.drop(2)}"
+            case None if token.isDefined => "rolled-back: released scope lock"
+            case None                    => "clean"
+          }
+        } else {
+          val committed = fs.listStatus(new Path(path)).toSeq.map(_.getPath)
+            .filter(p => p.getName.startsWith(StageMetaPrefix) && fs.exists(marker(p)))
+          if (committed.nonEmpty) {
+            val stage = committed.maxBy(p => fs.getFileStatus(marker(p)).getModificationTime)
+            require(fs.rename(stage, meta), s"repairOptimize: promote $stage failed")
+            fs.delete(marker(meta), false)
+            if (fs.exists(bak)) archiveToHistory(spark, fs, path, bak): Unit
+            touchMaintMarker(fs, path)
+            // the promoted stage's op is over: release it
+            tokenOf(stage.getName).filter(_.nonEmpty).foreach { t =>
+              fs.delete(stageDataDir(path, t), true)
+              fs.delete(scopeMarker(path, t), false)
+            }
+            "rolled-forward"
+          } else if (fs.exists(bak)) {
+            require(fs.rename(bak, meta), s"repairOptimize: restore $bak failed")
+            "restored-backup"
+          } else {
+            throw new IllegalStateException(
+              s"$who: no manifest, no committed stage, no backup — not a sink table")
+          }
+        }
+      stale.foreach(fs.delete(_, true))
+      token.foreach(t => fs.delete(scopeMarker(path, t), false))
+      did
     }
-  }
 
   /** The table's archived manifest generations, oldest first — one entry
     * per swap ([[optimizeSink]]/[[deleteWhere]]/[[updateWhere]]/
@@ -1711,22 +1712,22 @@ object Optimize {
   def restoreTable(
       spark: SparkSession, path: String, version: Long, format: String = "parquet"
   ): RestoreReport = {
-    val (fs, latestId, _) = open(spark, path, "restoreTable", wholeTable = true)
-    val dir = versionDirs(fs, path).collectFirst { case (v, d, _) if v == version => d }
-      .getOrElse(throw new IllegalArgumentException(
-        s"restoreTable($path): no history version $version — see listVersions"))
-    val entries = versionEntries(spark, dir).getOrElse(throw new IllegalStateException(
-      s"restoreTable($path): v$version is unreadable archived debris, not a manifest"))
-    val missing = entries
-      .map(_.sparkPath.toPath.toString)
-      .filterNot(p => fs.exists(new Path(p)))
-    require(missing.isEmpty,
-      s"restoreTable($path): v$version references ${missing.size} vacuumed file(s) " +
-        s"(first: ${missing.headOption.getOrElse("")}) — expireHistory released them; " +
-        "the version is unrestorable")
-    swapManifest(spark, fs, path, latestId, entries.toArray, "restoreTable")
-    val archivedAs = versionDirs(fs, path).last._1
-    RestoreReport(version, entries.size, archivedAs, latestId)
+    maintain(spark, path, "restoreTable") { case Held(fs, token, latestId, all, _) =>
+      val dir = versionDirs(fs, path).collectFirst { case (v, d, _) if v == version => d }
+        .getOrElse(throw new IllegalArgumentException(
+          s"restoreTable($path): no history version $version — see listVersions"))
+      val entries = versionEntries(spark, dir).getOrElse(throw new IllegalStateException(
+        s"restoreTable($path): v$version is unreadable archived debris, not a manifest"))
+      val missing = entries
+        .map(_.sparkPath.toPath.toString)
+        .filterNot(p => fs.exists(new Path(p)))
+      require(missing.isEmpty,
+        s"restoreTable($path): v$version references ${missing.size} vacuumed file(s) " +
+          s"(first: ${missing.headOption.getOrElse("")}) — expireHistory released them; " +
+          "the version is unrestorable")
+      swapManifest(spark, fs, path, token, all, entries, "restoreTable")
+      RestoreReport(version, entries.size, versionDirs(fs, path).last._1, latestId)
+    }
   }
 
   /** Drop all but the newest `keep` history versions, releasing the

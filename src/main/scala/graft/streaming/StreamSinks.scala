@@ -564,21 +564,10 @@ object StreamSinks {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // heal a crashed compaction BEFORE touching the manifest
-        Optimize.healSwap(spark, fs, path)
-        val log = Optimize.sinkLog(spark, Optimize.metaDir(path).toString)
-        if (!log.getLatestBatchId().exists(_ >= batchId)) {
-          // a crashed append's stage dirs are invisible debris nothing
-          // else sweeps (vacuum skips `_` dirs)
-          Optimize.sweepStageDirs(fs, path, "_graft_appendsink_")
-          val uuid = Optimize.newToken()
-          val landed = Optimize.land(fs, path, new Path(path, s"_graft_appendsink_$uuid"),
-            "parquet", s"graft-append-$batchId", uuid)(
-            batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
-          require(log.add(batchId, landed.toArray),
-            s"compactingParquetSink: manifest commit for batch $batchId failed")
-        } // else: checkpoint replay of a committed batch — exactly-once skip
+        // heals a crashed compaction BEFORE touching the manifest; a
+        // checkpoint replay of a committed batch is skipped
+        val log = Optimize.appendBatch(batch, path, batchId, "parquet", "_graft_appendsink_",
+          s"graft-append-$batchId", "compactingParquetSink")
         // the small-file policy, measured on COMMITTED files only
         val small = log.allFiles().count(_.size < smallFileBytes)
         if (small > maxSmallFiles) {

@@ -1589,4 +1589,93 @@ class OptimizeSpec extends AnyFunSuite {
     assert(t.count() == 197 && t.filter("id = 5 AND v = 5.0").count() == 1 &&
       t.filter("id = 1000").count() == 0, "the failed merge changed the table")
   }
+
+  /** A partitioned table of 24 rows over three committed batches. */
+  private def buildEtypeTable(name: String): String = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val out = freshDir(s"${name}_out")
+    val ckpt = freshDir(s"${name}_ckpt")
+    val stream = MemoryStream[Ev]
+    for (lo <- Seq(1L, 9L, 17L))
+      runBatch(stream, out, ckpt,
+        (lo until lo + 8).map(i => ev(i, if (i % 2 == 0) "click" else "view")))
+    out
+  }
+
+  test("a scoped op after a mid-swap crash refuses before opening the log; repair rolls forward") {
+    val out = buildEtypeTable("opt_midswap_scoped")
+    val before = spark.read.parquet(out).select("id", "etype", "value").collect().toSet
+    assert(before.size == 24)
+    // a whole-table op died between its two renames: its committed stage
+    // and lock, the retired manifest as the backup, no live manifest
+    val meta = Paths.get(out, "_spark_metadata")
+    val stage = Paths.get(out, "_graft_optimize_stage_meta_0a0a0a0a")
+    val bak = Paths.get(out, "_spark_metadata.bak")
+    Files.move(meta, stage)
+    Files.writeString(stage.resolve("_COMMITTED"), "")
+    Files.createDirectory(bak)
+    Files.writeString(bak.resolve("junk"), "old generation")
+    Files.writeString(Paths.get(out, "_graft_scope_0a0a0a0a"), "*")
+    val ex = intercept[IllegalStateException] {
+      Optimize.optimizeSink(spark, out, "parquet", smallFileBytes = 1024 * 1024,
+        partitionWhere = Some(col("etype") === "view"))
+    }
+    assert(ex.getMessage.contains("repairOptimize"), ex.getMessage)
+    assert(!Files.exists(meta), "the refused op created an empty live manifest")
+    assert(Optimize.repairOptimize(spark, out) == "rolled-forward")
+    assert(Files.exists(meta) && !Files.exists(stage) && !Files.exists(bak))
+    assert(!Files.exists(Paths.get(out, "_graft_scope_0a0a0a0a")), "the dead op's lock survived")
+    assert(spark.read.parquet(out).select("id", "etype", "value").collect().toSet == before,
+      "the rolled-forward table lost rows")
+  }
+
+  test("untokened repair rolls a committed tokened stage forward and releases its lock") {
+    val out = buildEtypeTable("opt_midswap_token")
+    val before = spark.read.parquet(out).select("id", "etype", "value").collect().toSet
+    // a scoped op died between its two renames: the live manifest moved
+    // to the backup, its committed stage (here: the same entries) not yet
+    // promoted, its lock still present
+    val meta = Paths.get(out, "_spark_metadata")
+    val stage = Paths.get(out, "_graft_optimize_stage_meta_1b1b1b1b")
+    val bak = Paths.get(out, "_spark_metadata.bak")
+    Files.createDirectory(stage)
+    Files.list(meta).iterator().asScala.foreach(f => Files.copy(f, stage.resolve(f.getFileName)))
+    Files.writeString(stage.resolve("_COMMITTED"), "")
+    Files.move(meta, bak)
+    val lock = Paths.get(out, "_graft_scope_1b1b1b1b")
+    Files.writeString(lock, "etype=view")
+    val vBefore = Optimize.listVersions(spark, out).size
+    assert(Optimize.repairOptimize(spark, out) == "rolled-forward")
+    assert(Files.exists(meta) && !Files.exists(stage) && !Files.exists(bak) && !Files.exists(lock),
+      "repair left the crashed op's stage, backup or lock behind")
+    assert(Optimize.listVersions(spark, out).size == vBefore + 1,
+      "the retired manifest must archive as a history version")
+    assert(spark.read.parquet(out).select("id", "etype", "value").collect().toSet == before)
+    // the next whole-table op runs with no further repair
+    val rep = Optimize.deleteWhere(spark, out, col("id") <= 2L)
+    assert(rep.rewrittenFiles >= 1)
+    assert(spark.read.parquet(out).count() == 22)
+  }
+
+  test("a whole-table lock makes a scoped optimizeSink refuse until it is released") {
+    val out = buildEtypeTable("opt_whole_lock")
+    val before = spark.read.parquet(out).select("id", "etype", "value").collect().toSet
+    val lock = Paths.get(out, "_graft_scope_2c2c2c2c")
+    Files.writeString(lock, "*")
+    val ex = intercept[IllegalArgumentException] {
+      Optimize.optimizeSink(spark, out, "parquet", smallFileBytes = 1024 * 1024,
+        partitionWhere = Some(col("etype") === "click"))
+    }
+    assert(ex.getMessage.contains("overlaps"), ex.getMessage)
+    assert(new java.io.File(out).list().count(_.startsWith("_graft_scope_")) == 1,
+      "the refused op left its own lock behind")
+    assert(Optimize.repairOptimize(spark, out, "2c2c2c2c").startsWith("rolled-back"))
+    assert(!Files.exists(lock))
+    val rep = Optimize.optimizeSink(spark, out, "parquet", smallFileBytes = 1024 * 1024,
+      partitionWhere = Some(col("etype") === "click"))
+    assert(rep.compactedFiles >= 2)
+    assert(spark.read.parquet(out).select("id", "etype", "value").collect().toSet == before)
+  }
 }
